@@ -17,7 +17,16 @@ import graft.lang.Op.StorageType
   * positions are dense at load, stable under delete (tombstoned ids are
   * never reused), and independent per column.
   */
-/** `baseFiles` — parquet part-file count right after the version's full
+/** `liveSet` — which set of live positions the column has, as an id:
+  * 0 = pristine (every position below nextId is live, no delete ever
+  * touched it). A delete gives each group of its named columns that
+  * shared a `(liveSet, nextId)` one fresh id; update, insert, load and
+  * compaction keep it. So two columns with equal `(liveSet, nextId)`
+  * have the SAME live positions: both descend from one delete (or from
+  * none), and every later change to either added exactly the positions
+  * `[old nextId, nextId)`.
+  *
+  * `baseFiles` — parquet part-file count right after the version's full
   * write; `rowsAtVersion` — nextId at that write. Together they give the
   * EXPECTED file count of the live version dir
   * (baseFiles + one delta file per insert since), which the insert path
@@ -27,10 +36,11 @@ import graft.lang.Op.StorageType
   */
 final case class ColumnMeta(dbDir: String, name: String, stype: StorageType,
                             version: Long, nextId: Long,
-                            pristine: Boolean = true,
+                            liveSet: Long = 0L,
                             baseFiles: Long = 1L,
                             rowsAtVersion: Long = 0L) {
   def dataPath: String = s"$dbDir/cols/$name/v$version"
+  def pristine: Boolean = liveSet == 0L
   /** Inserts appended onto this version (one delta file each). */
   def deltaRows: Long = nextId - rowsAtVersion
   def expectedFiles: Long = baseFiles + deltaRows
@@ -62,8 +72,8 @@ final class Catalog(val dbDir: String, store: CatalogStore) {
   // ordering (no-op for the local rename store)
   store.barrier(render())
 
-  private def parse(bodyOpt: Option[String]): Map[String, ColumnMeta] =
-    bodyOpt.map(_.linesIterator.filter(_.nonEmpty).map { line =>
+  private def parse(bodyOpt: Option[String]): Map[String, ColumnMeta] = {
+    val parsed = bodyOpt.toSeq.flatMap(_.linesIterator.filter(_.nonEmpty).map { line =>
       // 4-field records predate the pristine flag; they may have seen
       // deletes, so read them conservatively as non-pristine
       val fields = line.split("\t")
@@ -71,6 +81,10 @@ final class Catalog(val dbDir: String, store: CatalogStore) {
         throw DbError.ioError(s"malformed catalog record: $line")
       val Array(n, st, ver, nid) = fields.take(4)
       val pristine = fields.length > 4 && fields(4) == "1"
+      // records before the live-set id (5 and 7 fields): pristine -> 0,
+      // otherwise unknown — None here, an id no other column shares below
+      val liveSet = fields.lift(7).flatMap(_.toLongOption)
+        .orElse(if (pristine) Some(0L) else None)
       // shorter records predate baseFiles/rowsAtVersion; the defaults
       // (1 file, all rows at version) make the next insert's
       // expected-file check fire one conservative repair at worst
@@ -82,13 +96,21 @@ final class Catalog(val dbDir: String, store: CatalogStore) {
         case _ => throw DbError.ioError(s"malformed catalog record: $line")
       }
       val rowsAtVersion = fields.lift(6).flatMap(_.toLongOption).getOrElse(nextId)
-      n -> ColumnMeta(dbDir, n, stype, version, nextId, pristine,
-        baseFiles, rowsAtVersion)
-    }.toMap).getOrElse(Map.empty)
+      (ColumnMeta(dbDir, n, stype, version, nextId, baseFiles = baseFiles,
+        rowsAtVersion = rowsAtVersion), liveSet)
+    }.toSeq.sortBy(_._1.name))
+    // unknown live sets get fresh ids past every known one, in name order
+    // (deterministic: the same body always parses to the same catalog)
+    val known = parsed.flatMap(_._2).maxOption.getOrElse(0L)
+    val fresh = Iterator.from(1).map(known + _)
+    parsed.map { case (m, live) =>
+      m.name -> m.copy(liveSet = live.getOrElse(fresh.next()))
+    }.toMap
+  }
 
   private def render(m: Map[String, ColumnMeta] = cols): String =
     m.values.toSeq.sortBy(_.name)
-      .map(c => s"${c.name}\t${c.stype.name}\t${c.version}\t${c.nextId}\t${if (c.pristine) "1" else "0"}\t${c.baseFiles}\t${c.rowsAtVersion}")
+      .map(c => s"${c.name}\t${c.stype.name}\t${c.version}\t${c.nextId}\t${if (c.pristine) "1" else "0"}\t${c.baseFiles}\t${c.rowsAtVersion}\t${c.liveSet}")
       .mkString("", "\n", "\n")
 
   /** Commit FIRST, assign the in-memory map only on success: a throwing
@@ -154,18 +176,27 @@ final class Catalog(val dbDir: String, store: CatalogStore) {
     }
   }
 
+  /** A live-set id no column holds yet, and none held before: ids only
+    * grow (a delete takes the next one, and columns are never dropped).
+    * Deterministic, so the same history renders the same catalog bytes.
+    * Callers assigning several ids in one mutation add 0, 1, ... to it
+    * while holding the monitor.
+    */
+  def freshLiveSet(): Long = synchronized {
+    cols.values.map(_.liveSet).maxOption.getOrElse(0L) + 1L
+  }
+
   /** Record a new data version and/or advanced nextId for `name`.
-    * `stillPristine = false` marks the column as mutated (delete/update
-    * may have punched holes) — engine rewrite paths set it; load/insert
-    * keep the flag.
+    * `liveSet` is set by deletes only (see [[ColumnMeta]]); load, insert,
+    * update and compaction keep the column's id.
     */
   def update(name: String, version: Long, nextId: Long,
-             stillPristine: Boolean = true,
+             liveSet: Option[Long] = None,
              baseFiles: Option[Long] = None,
              rowsAtVersion: Option[Long] = None): ColumnMeta = synchronized {
     val prev = cols.getOrElse(name, throw DbError.colSelect(name))
     val m = prev.copy(version = version, nextId = nextId,
-      pristine = prev.pristine && stillPristine,
+      liveSet = liveSet.getOrElse(prev.liveSet),
       baseFiles = baseFiles.getOrElse(prev.baseFiles),
       rowsAtVersion = rowsAtVersion.getOrElse(prev.rowsAtVersion))
     persistThenSet(cols + (name -> m))

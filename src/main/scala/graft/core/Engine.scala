@@ -1,6 +1,8 @@
 package graft.core
 
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -273,17 +275,8 @@ final class Engine(val spark: SparkSession, val dbDir: String,
   def column(name: String): DataFrame =
     Storage.readColumn(spark, catalog.require(name))
 
-  /** Engine-wide refcounts of cached plans. Spark's CacheManager keys
-    * cache entries by ANALYZED-PLAN equality across the whole
-    * SparkSession, so unpersist decisions must be engine-scoped: a
-    * per-session check would evict a plan-equal binding cached by a
-    * DIFFERENT session. Linear sameResult scan — bindings are few.
-    */
-  private val cachedPlans =
-    scala.collection.mutable.ListBuffer.empty[(DataFrame, Int)]
-
   /** Columns whose live data dir is known consistent with the catalog's
-    * file accounting. A crash-orphaned append (see [[Session.insertOne]])
+    * file accounting. A crash-orphaned append (see [[Session.evalInsert]])
     * can only PREDATE this process — the engine serializes its own
     * writes under `catalog.synchronized` and parquet job commits are
     * atomic — so the listing that detects one needs to run at most once
@@ -303,27 +296,6 @@ final class Engine(val spark: SparkSession, val dbDir: String,
   private[core] val orphanChecked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private[core] def registerCache(df: DataFrame): Unit = synchronized {
-    val plan = df.queryExecution.analyzed
-    val idx = cachedPlans.indexWhere(_._1.queryExecution.analyzed.sameResult(plan))
-    if (idx >= 0) {
-      val (d, n) = cachedPlans(idx); cachedPlans(idx) = (d, n + 1)
-    } else {
-      df.cache()
-      cachedPlans += ((df, 1))
-    }
-  }
-
-  private[core] def releaseCache(df: DataFrame): Unit = synchronized {
-    val plan = df.queryExecution.analyzed
-    val idx = cachedPlans.indexWhere(_._1.queryExecution.analyzed.sameResult(plan))
-    if (idx >= 0) {
-      val (d, n) = cachedPlans(idx)
-      if (n <= 1) { cachedPlans.remove(idx); d.unpersist(false) }
-      else cachedPlans(idx) = (d, n - 1)
-    }
-  }
-
   def newSession(): Session = new Session(this)
 
   /** One-shot: run a whole script in a fresh session, return output lines
@@ -336,9 +308,6 @@ final class Engine(val spark: SparkSession, val dbDir: String,
       case Left(bad) => throw DbError.parse(bad)
     }
     val s = newSession()
-    // output is materialized, so the one-shot session's cached bindings
-    // can be released immediately (a leaked env would pin CacheManager
-    // entries for the SparkSession's lifetime)
     try ops.flatMap(op => s.eval(op).toSeq)
     finally s.dispose()
   }
@@ -349,6 +318,8 @@ final class Session(val engine: Engine) {
   import engine.{spark, catalog}
 
   private val env = mutable.Map[String, Intermediate]()
+
+  private implicit val writes: ExecutionContext = Engine.writePool
 
   def get(name: String): Intermediate =
     env.getOrElse(name, throw DbError.varNotFound(name))
@@ -365,58 +336,23 @@ final class Session(val engine: Engine) {
 
   /** Rebinding destroys the old value (server.c:197-268).
     *
-    * Caching policy: scripts routinely consume one variable several
-    * times (the canonical query aggregates each fetch twice), so bound
-    * intermediates whose size is bounded by a BASE COLUMN (select id
-    * sets, fetches from selects, singletons) are cached — lazy
-    * materialization, memory-and-disk LRU, dropped on rebind. Join
-    * LINEAGE intermediates (pair lists and fetches from them) are NOT
-    * cached: a join's output can be quadratic in its inputs, and
-    * materializing 10^8 pairs costs far more than re-running the join's
-    * final stage per consumer — Spark reuses the shuffle files of the
-    * same DataFrame lineage across jobs, so each extra consumer pays
-    * only the pair-production stage, never the scans or the shuffle.
-    * (Measured at 75M pairs: caching 62s, shuffle-reuse ~1s/consumer.)
+    * A binding is a PLAN, never a cache: each consumer re-runs it. A
+    * `cache()` costs a Spark job of its own when it is built, and
+    * engine requests are bound by per-job cost, so that job cost more
+    * than the recompute it saved (SCALE.md, "Materialization policy").
+    * Reads stay exact without one: a bound plan reads its column-version
+    * snapshot (`id < nextId` of an immutable version dir) whenever it
+    * runs.
     */
-  private def bind(name: String, value: Intermediate): Unit = {
-    // cache/unpersist through the engine-wide registry: rebinding must
-    // not evict a plan-equal binding held by this OR another session
-    // (CacheManager keys by analyzed plan across the SparkSession)
-    env.get(name).foreach { old =>
-      if (!joinLineage(old)) engine.releaseCache(dfOf(old))
-    }
-    if (!joinLineage(value)) engine.registerCache(dfOf(value))
+  private def bind(name: String, value: Intermediate): Unit =
     env(name) = value
-  }
 
-  /** End-of-connection cleanup: release every cached binding this
-    * session still holds and clear the environment. The reference frees
-    * the session env when its connection dies (server.c:72-78); our
-    * equivalent leak would be engine-refcounted cache entries pinned by
-    * a dead env — long-running topologies (TcpServer) call this when the
-    * client disconnects. Idempotent; the session stays usable (empty).
+  /** End-of-connection cleanup: clear the environment. The reference
+    * frees the session env when its connection dies (server.c:72-78);
+    * long-running topologies (TcpServer) call this when the client
+    * disconnects. Idempotent; the session stays usable (empty).
     */
-  def dispose(): Unit = {
-    env.values.foreach { v => if (!joinLineage(v)) engine.releaseCache(dfOf(v)) }
-    env.clear()
-  }
-
-  /** Join-bounded intermediates are never cached (their size can be
-    * quadratic in the inputs — see the policy above). That is: join
-    * output lists (`ordered`), anything aligned by a join's pair order
-    * (multi-column align), and rank-zip results (`pos` align) — the
-    * ranks were materialized FROM the operands, so their row count is
-    * the operands', which may itself be a join's pair list.
-    */
-  private def joinLineage(i: Intermediate): Boolean = i match {
-    case ids: Ids => ids.ordered
-    case v: Vals  => v.align.cols.size > 1 || v.align.cols == Seq("pos")
-  }
-
-  private def dfOf(i: Intermediate): DataFrame = i match {
-    case ids: Ids  => ids.df
-    case vals: Vals => vals.df
-  }
+  def dispose(): Unit = env.clear()
 
   /** Evaluate one op; returns client-visible output lines (non-assign
     * forms stream results; assignments are silent). Output formats match
@@ -469,25 +405,23 @@ final class Session(val engine: Engine) {
                else {
                  // bitmap length must match the column (storage.c:1311-1318)
                  if (ids.srcLen.exists(_ != meta.nextId)) throw DbError.colDiffLen(c)
-                 // select-all -> fetch fusion: a full select of a pristine
-                 // column over an equally pristine target selects every
-                 // position 0..nextId-1, so the fetch IS the base column —
-                 // no join. Any delete on either column clears `pristine`
-                 // and disables the fusion (live sets may then differ).
-                 val fullPristine = ids.fullSelect && meta.pristine &&
-                   ids.srcCol.forall(sc => catalog.require(sc).pristine)
-                 if (fullPristine) base.select("id", "v")
+                 // select-all -> fetch fusion: a full select holds every
+                 // live position of its source; a target with the same
+                 // live set (equal ids, and equal nextId just above) holds
+                 // exactly those, so the fetch IS the base column — no join
+                 if (ids.fullSelect && sameLive(ids, meta)) base.select("id", "v")
                  else ColumnOps.fetchSet(base, ids.df)
                }
       // A fetch keeps its id set's alignment lineage only when no row of
-      // the set can be dropped — i.e. the target column is pristine
-      // (live set = the full position space) or the set came from a join
-      // list (its ids were fetched, hence live, and fetchList preserves
-      // every list row). A non-pristine set-fetch may drop tombstoned
-      // positions, so two fetches from one set could diverge row-wise;
-      // a fresh tag forces the rank-zip fallback (the reference's
-      // k-th-value-of-each semantics) instead of a silent id-join drop.
-      val keepsLineage = ids.ordered || meta.pristine
+      // the set can be dropped: the set came from a join list (its ids
+      // were fetched, hence live, and fetchList preserves every list
+      // row), or the target is pristine (live set = the full position
+      // space), or it shares the select source's live set. Otherwise a
+      // set-fetch may drop tombstoned positions, so two fetches from one
+      // set could diverge row-wise; a fresh tag forces the rank-zip
+      // fallback (the reference's k-th-value-of-each semantics) instead
+      // of a silent id-join drop.
+      val keepsLineage = ids.ordered || meta.pristine || sameLive(ids, meta)
       val align = if (keepsLineage) ids.align else Align.fresh(Seq("id"))
       val vals = Vals(df, hasIds = true, align = align, fetchCol = Some(c),
         fullBase = ids.fullSelect)
@@ -505,8 +439,6 @@ final class Session(val engine: Engine) {
       }
       val (pairs, outCols) =
         ColumnOps.join(jtype, l.df, r.df, l.align.cols, r.align.cols)
-      // NOT cached — see bind(): pair lists can be quadratic; consumers
-      // share the join's shuffle files instead of a materialized copy.
       // Both sides share one pair order: one fresh alignment lineage.
       val align = Align.fresh(outCols)
       bind(varL, Ids(pairs.select(outCols.map(col) :+ col("lid").as("id"): _*),
@@ -537,18 +469,15 @@ final class Session(val engine: Engine) {
 
     case Insert(colVals) =>
       requireWritable()
-      val names = colVals.map(_._1)
-      names.diff(names.distinct).headOption.foreach(c => throw DbError.dupCol(c))
-      colVals.foreach { case (c, v) => insertOne(c, v) }
-      Iterator.empty
+      evalInsert(colVals); Iterator.empty
 
     case Delete(posVar, cols) =>
       requireWritable()
       val ids = idsOf(getIds(posVar))
-      // delete punches holes in the position space -> pristine off;
+      // delete punches holes in the position space -> fresh live-set ids;
       // the per-column rewrites overlap (independent write jobs)
       rewriteMany(cols, base =>
-        base.join(ids, Seq("id"), "left_anti"), keepsPristine = false)
+        base.join(ids, Seq("id"), "left_anti"), deletes = true)
       Iterator.empty
 
     case Update(posVar, c, value) =>
@@ -558,7 +487,7 @@ final class Session(val engine: Engine) {
       rewrite(c, base =>
         base.join(ids.withColumn("nv", lit(value)), Seq("id"), "left")
           .select(col("id"), coalesce(col("nv"), col("v")).cast(IntegerType).as("v")),
-        keepsPristine = true)
+        deletes = false)
       Iterator.empty
 
     case Op.Tuple(vars) =>
@@ -604,12 +533,19 @@ final class Session(val engine: Engine) {
       case Some((lo, hi))   => ColumnOps.selectRange(base, lo, hi)
     }
     val ids = Ids(df, ordered = false, align = Align.fresh(Seq("id")),
-      srcCol = Some(c), srcLen = Some(meta.nextId), fullSelect = bounds.isEmpty)
+      srcCol = Some(c), srcLen = Some(meta.nextId), srcLive = Some(meta.liveSet),
+      fullSelect = bounds.isEmpty)
     assign match {
       case Some(v) => bind(v, ids); Iterator.empty
       case None    => emit(ids)
     }
   }
+
+  /** The fetch target's live set is the select source's (at its select).
+    * Only meaningful once the fetch's nextId == srcLen check has passed.
+    */
+  private def sameLive(ids: Ids, target: ColumnMeta): Boolean =
+    ids.srcLive.contains(target.liveSet)
 
   private def emitOrBind(assign: Option[String], v: Vals): Iterator[String] =
     assign match {
@@ -746,9 +682,6 @@ final class Session(val engine: Engine) {
     * the reference's guarantee (per-column rwlocks, no transactions).
     */
   private def evalLoad(file: String): Unit = catalog.synchronized {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val parsed =
       try Storage.parseCsv(spark, file)
       catch { case scala.util.control.NonFatal(e) =>
@@ -819,41 +752,68 @@ final class Session(val engine: Engine) {
     */
   private val CompactAfterFiles = 64
 
-  private def insertOne(c: String, v: Int): Unit = catalog.synchronized {
-    val meta0 = catalog.require(c)
-    if (meta0.nextId == 0L) {
-      val row = spark.range(1).select(lit(0L).as("id"),
-        lit(v).cast(IntegerType).as("v"))
-      val path = meta0.copy(version = meta0.version + 1).dataPath
-      Storage.writeColumn(row, path, meta0.stype, rowsHint = Some(1L))
-      catalog.update(c, meta0.version + 1, 1L,
-        baseFiles = Some(Storage.partFileCount(spark, path)),
-        rowsAtVersion = Some(1L))
-      engine.orphanChecked.add(c)
-    } else {
-      // Crash-orphan guard: an append that died before its catalog
-      // advance left an uncommitted row with id == nextId in the live
-      // dir. Appending another id == nextId would DUPLICATE it once
-      // nextId advances, so when the dir holds more part files than the
-      // catalog accounts for, fold to a fresh version first — the
-      // rewrite reads only committed rows (id < nextId), dropping the
-      // orphan. The listing runs once per column per Engine lifetime
-      // (orphans only predate this process — see [[Engine.orphanChecked]]).
-      val meta =
-        if (!engine.orphanChecked.contains(c) &&
-            Storage.partFileCount(spark, meta0.dataPath) != meta0.expectedFiles)
-          compact(c, meta0)
-        else meta0
-      engine.orphanChecked.add(c)
-      val row = spark.range(1).select(lit(meta.nextId).as("id"),
-        lit(v).cast(IntegerType).as("v"))
-      // O(1) append of a delta file; indexed layouts degrade gracefully
-      // (the reference maintains its sorted projection on insert,
-      // storage.c:1495-1584 — here clustering is a hint, not correctness)
-      row.write.mode("append").parquet(meta.dataPath)
-      val updated = catalog.update(c, meta.version, meta.nextId + 1)
-      // delta count is pure row arithmetic — no listing needed
-      if (updated.deltaRows >= CompactAfterFiles) compact(c, updated)
+  /** One row into each named column. Every column is validated (it
+    * exists, none repeats) before any byte is written, so a failed
+    * insert writes nothing. The per-column appends are independent
+    * Spark jobs and run concurrently, like [[rewriteMany]]'s rewrites;
+    * catalog advances are committed on this thread once all have
+    * finished. If one append fails, every append that landed is still
+    * committed before the error is rethrown: a landed but uncommitted
+    * row in a column already marked [[Engine.orphanChecked]] would have
+    * its id reissued by the next insert.
+    */
+  private def evalInsert(colVals: Seq[(String, Int)]): Unit = catalog.synchronized {
+    val names = colVals.map(_._1)
+    names.diff(names.distinct).headOption.foreach(c => throw DbError.dupCol(c))
+    val metas = names.map(catalog.require).map { meta0 =>
+      if (meta0.nextId == 0L) meta0 // first row: a fresh version dir below
+      else {
+        // Crash-orphan guard: an append that died before its catalog
+        // advance left an uncommitted row with id == nextId in the live
+        // dir. Appending another id == nextId would DUPLICATE it once
+        // nextId advances, so when the dir holds more part files than
+        // the catalog accounts for, fold to a fresh version first — the
+        // rewrite reads only committed rows (id < nextId), dropping the
+        // orphan. The listing runs once per column per Engine lifetime
+        // (orphans only predate this process — see [[Engine.orphanChecked]]).
+        val c = meta0.name
+        val meta =
+          if (!engine.orphanChecked.contains(c) &&
+              Storage.partFileCount(spark, meta0.dataPath) != meta0.expectedFiles)
+            compact(c, meta0)
+          else meta0
+        engine.orphanChecked.add(c)
+        meta
+      }
+    }
+    // each append's write runs concurrently and yields its catalog commit
+    val appends = colVals.zip(metas).map { case ((c, v), meta) =>
+      Future {
+        val row = spark.range(1).select(lit(meta.nextId).as("id"),
+          lit(v).cast(IntegerType).as("v"))
+        if (meta.nextId == 0L) {
+          val path = meta.copy(version = meta.version + 1).dataPath
+          Storage.writeColumn(row, path, meta.stype, rowsHint = Some(1L))
+          val files = Storage.partFileCount(spark, path)
+          () => catalog.update(c, meta.version + 1, 1L,
+            baseFiles = Some(files), rowsAtVersion = Some(1L))
+        } else {
+          // O(1) append of a delta file; indexed layouts degrade
+          // gracefully (the reference maintains its sorted projection on
+          // insert, storage.c:1495-1584 — here clustering is a hint, not
+          // correctness)
+          row.write.mode("append").parquet(meta.dataPath)
+          () => catalog.update(c, meta.version, meta.nextId + 1)
+        }
+      }
+    }
+    val landed = appends.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+    val committed = landed.collect { case scala.util.Success(commit) => commit() }
+    committed.foreach(m => engine.orphanChecked.add(m.name)) // first rows: fresh dirs
+    landed.collectFirst { case scala.util.Failure(e) => e }.foreach(e => throw e)
+    // delta count is pure row arithmetic — no listing needed
+    committed.foreach { m =>
+      if (m.deltaRows >= CompactAfterFiles) compact(m.name, m)
     }
   }
 
@@ -880,8 +840,8 @@ final class Session(val engine: Engine) {
     * reference (DBEUNSUPPORTED, storage.c:1833-1841).
     */
   private def rewrite(c: String, f: DataFrame => DataFrame,
-                      keepsPristine: Boolean): Unit =
-    rewriteMany(Seq(c), f, keepsPristine)
+                      deletes: Boolean): Unit =
+    rewriteMany(Seq(c), f, deletes)
 
   /** [[rewrite]] over several columns in one operation (multi-column
     * delete): the per-column version writes are independent Spark jobs,
@@ -891,12 +851,14 @@ final class Session(val engine: Engine) {
     * Validation is up front and catalog commits happen after ALL writes
     * land, on this thread — a failed write leaves only uncommitted
     * version dirs (vacuum reclaims), never a half-advanced catalog.
+    *
+    * `deletes`: the rewrite may drop positions, so each group of columns
+    * that shared a `(liveSet, nextId)` before it gets one fresh live-set
+    * id — the group still shares a live set afterwards, and no other
+    * column does (see [[ColumnMeta]]). Other rewrites keep the id.
     */
   private def rewriteMany(cs: Seq[String], f: DataFrame => DataFrame,
-                          keepsPristine: Boolean): Unit = catalog.synchronized {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+                          deletes: Boolean): Unit = catalog.synchronized {
     val metas = cs.map { c =>
       val meta = catalog.require(c)
       if (meta.stype != Unsorted)
@@ -913,9 +875,12 @@ final class Session(val engine: Engine) {
         (c, meta, Storage.partFileCount(spark, path))
       }
     }
+    val groups = metas.map { case (_, m) => (m.liveSet, m.nextId) }.distinct
+    val first = catalog.freshLiveSet()
     written.map(Await.result(_, Duration.Inf)).foreach { case (c, meta, files) =>
       catalog.update(c, meta.version + 1, meta.nextId,
-        stillPristine = keepsPristine,
+        liveSet = if (deletes)
+          Some(first + groups.indexOf((meta.liveSet, meta.nextId))) else None,
         baseFiles = Some(files),
         rowsAtVersion = Some(meta.nextId))
       engine.orphanChecked.add(c) // fresh version dir, accounted
@@ -955,6 +920,21 @@ object Engine {
     * has refreshed or died, short enough that churn is reclaimed.
     */
   val DefaultVacuumRetainMs: Long = 7L * 24 * 3600 * 1000
+
+  /** Runs the per-column write jobs that a load, an insert or a
+    * multi-column rewrite overlaps. Not the global pool: the caller
+    * waits on these futures while it holds the catalog monitor, and a
+    * global pool whose few threads are all blocked elsewhere in the JVM
+    * (client code waiting on a socket, say) would never run them.
+    * Threads start on demand, at most one per column of the running
+    * mutation (mutations serialize), and exit after a minute idle.
+    */
+  private[core] val writePool: ExecutionContext =
+    ExecutionContext.fromExecutor(java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-column-write")
+      t.setDaemon(true)
+      t
+    })
 
   private[core] sealed trait WriterLock { def key: String }
   private[core] final case class FileLock(key: String,

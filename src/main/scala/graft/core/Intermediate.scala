@@ -55,7 +55,10 @@ object Intermediate {
     *   `align.cols = Seq("id")`. `srcCol`/`srcLen` record the selected
     *   column and its allocated-position count for the fetch length check
     *   (DBECOLDIFFLEN, storage.c:1311-1318) and the treejoin full-select
-    *   precondition (join.c:171-178).
+    *   precondition (join.c:171-178). `srcLive` is the source column's
+    *   live-set id ([[ColumnMeta]]) from the same snapshot: a fetch target
+    *   with equal `(liveSet, nextId)` has exactly the source's live
+    *   positions, so it drops no id of the set.
     * - Join output ("array"): `df(align.cols..., id)` — order significant
     *   (lexicographic in the align columns), duplicates in `id` allowed
     *   (results.h:12-23); both sides of one join share `align.tag`.
@@ -63,6 +66,7 @@ object Intermediate {
   final case class Ids(df: DataFrame, ordered: Boolean, align: Align,
                        srcCol: Option[String] = None,
                        srcLen: Option[Long] = None,
+                       srcLive: Option[Long] = None,
                        fullSelect: Boolean = false) extends Intermediate
 
   /** A vector of values: `df(align.cols..., v)` plus, when `hasIds`, the

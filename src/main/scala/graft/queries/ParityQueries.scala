@@ -205,11 +205,7 @@ object ParityQueries {
         |""".stripMargin).toOption.get.foreach(session.eval)
     val vals = Seq("a", "b", "c").map(v => session.getVals(v).df)
     // the returned plans only READ the throwaway db; release the writer
-    // lock now or every bench rep leaks an open lock-file channel — and
-    // release the session's cached bindings (Session.dispose), or every
-    // bench/verify rep leaks 4 CacheManager entries in the shared
-    // SparkSession (the plans recompute fine without the cache)
-    session.dispose()
+    // lock now or every bench rep leaks an open lock-file channel
     engine.close()
     registerCleanup(new java.io.File(tmp))
     ColumnOps.tupleZip(vals, Seq("id"))
@@ -246,15 +242,13 @@ object ParityQueries {
         val e2 = new Engine(s, dbDir) // reopen: lease takeover + catalog reload
         try {
           val session = e2.newSession()
-          try {
-            graft.lang.Parser.parseScript(
-              """p=select(ra)
-                |a=fetch(ra,p)
-                |b=fetch(rb,p)
-                |c=fetch(rc,p)
-                |""".stripMargin).toOption.get.foreach(session.eval)
-            Seq("a", "b", "c").map(v => session.getVals(v).df)
-          } finally session.dispose() // else a failure leaks cache entries
+          graft.lang.Parser.parseScript(
+            """p=select(ra)
+              |a=fetch(ra,p)
+              |b=fetch(rb,p)
+              |c=fetch(rc,p)
+              |""".stripMargin).toOption.get.foreach(session.eval)
+          Seq("a", "b", "c").map(v => session.getVals(v).df)
         } finally e2.close() // else a failure leaks the lease heartbeat + jvmHeld key
       } finally sys.props.remove("graft.store.object")
     require(!new java.io.File(s"$dbDir/catalog.txt").exists(),
@@ -297,15 +291,13 @@ object ParityQueries {
         val reader = new Engine(s, s"$tmp/db", readOnly = true)
         try {
           val session = reader.newSession()
-          try {
-            graft.lang.Parser.parseScript(
-              """p=select(ra)
-                |a=fetch(ra,p)
-                |b=fetch(rb,p)
-                |c=fetch(rc,p)
-                |""".stripMargin).toOption.get.foreach(session.eval)
-            Seq("a", "b", "c").map(v => session.getVals(v).df)
-          } finally session.dispose()
+          graft.lang.Parser.parseScript(
+            """p=select(ra)
+              |a=fetch(ra,p)
+              |b=fetch(rb,p)
+              |c=fetch(rc,p)
+              |""".stripMargin).toOption.get.foreach(session.eval)
+          Seq("a", "b", "c").map(v => session.getVals(v).df)
         } finally reader.close()
       } finally writer.close()
     registerCleanup(new java.io.File(tmp))
@@ -358,15 +350,13 @@ object ParityQueries {
         require(engine.vacuum(retainMs = 0L).deleted == 0,
           "second vacuum must find nothing")
         val session = engine.newSession()
-        try {
-          graft.lang.Parser.parseScript(
-            """p=select(ra)
-              |a=fetch(ra,p)
-              |b=fetch(rb,p)
-              |c=fetch(rc,p)
-              |""".stripMargin).toOption.get.foreach(session.eval)
-          Seq("a", "b", "c").map(v => session.getVals(v).df)
-        } finally session.dispose()
+        graft.lang.Parser.parseScript(
+          """p=select(ra)
+            |a=fetch(ra,p)
+            |b=fetch(rb,p)
+            |c=fetch(rc,p)
+            |""".stripMargin).toOption.get.foreach(session.eval)
+        Seq("a", "b", "c").map(v => session.getVals(v).df)
       } finally engine.close()
     registerCleanup(new java.io.File(tmp))
     ColumnOps.tupleZip(vals, Seq("id"))

@@ -229,13 +229,7 @@ final class TcpServer(engine: Engine, port: Int = 0, threads: Int = 16,
     } finally {
       active.remove(sock)
       try sock.close() catch { case _: java.io.IOException => () }
-      // the session env dies with the connection (server.c:72-78) —
-      // release any cached bindings it still holds. close() interrupts
-      // workers (shutdownNow), and an interrupt landing mid-unpersist
-      // surfaces as InterruptedException (fatal, outside NonFatal) —
-      // during teardown that is expected, not reportable
-      try session.dispose()
-      catch { case _: Throwable if closed => () }
+      session.dispose() // the env dies with the connection (server.c:72-78)
     }
   }
 

