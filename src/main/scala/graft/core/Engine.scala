@@ -697,7 +697,7 @@ final class Session(val engine: Engine) {
     // (Probed and rejected: clamping spark.sql.files.maxPartitionBytes
     // so a 10-60 MB CSV fans across cores — the finer parse was eaten
     // by extra part files and commit overhead at every probed size;
-    // LoadProbe's alternating A/B showed on >= off at 600k and 3M rows.)
+    // an alternating A/B showed on >= off at 600k and 3M rows.)
     try {
       val written = parsed.cols.map { case (name, df) =>
         val meta = catalog.require(name)

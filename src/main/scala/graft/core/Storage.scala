@@ -42,23 +42,21 @@ object Storage {
   /** Columns at or under this many rows sort in ONE partition (no
     * repartitionByRange sampling job, no shuffle); larger columns get
     * the range-clustered parallel layout that fans a 100 TB load across
-    * the cluster. Tunable via `graft.write.smallSortRows`: the
-    * single-task sort beats sampling+shuffle below ~1M rows and loses
-    * past it (LoadProbe — a 3M-row column loaded SLOWER than a 6M-row
-    * one under the old 4M threshold, serial sort vs parallel range).
+    * the cluster. The single-task sort beats sampling+shuffle below ~1M
+    * rows and loses past it (a 3M-row column loaded SLOWER than a
+    * 6M-row one under the old 4M threshold, serial sort vs parallel
+    * range; SCALE.md "CSV load path vs scale").
     */
-  private def smallSortRows(spark: SparkSession): Long =
-    spark.conf.getOption("graft.write.smallSortRows").map(_.toLong)
-      .getOrElse(1000000L)
+  private val SmallSortRows = 1000000L
 
   /** CSV files at or under this byte size load through the coalesce(1)
     * fast path (see [[parseCsv]]): a single-partition parse with zero
     * pre-write jobs. Above it, the parse fans across the cluster and
     * ordinals come from the two-phase split-offset scheme. Tunable via
     * `graft.load.coalesceBytes` (0 disables the fast path). Default from
-    * an order-alternating A/B (LoadProbe, local[32]): the serial parse
-    * wins ~15% at 10 MB and loses ~35% at 20 MB — 12 MB splits the
-    * measured crossover.
+    * an order-alternating A/B (local[32], SCALE.md "CSV load path vs
+    * scale"): the serial parse wins ~15% at 10 MB and loses ~35% at
+    * 20 MB — 12 MB splits the measured crossover.
     */
   private def coalesceBytes(spark: SparkSession): Long =
     spark.conf.getOption("graft.load.coalesceBytes").map(_.toLong)
@@ -83,7 +81,7 @@ object Storage {
           // job, no exchange; re-fanning a bounded-size input just for
           // the sort costs more than it parallelizes
           df.sortWithinPartitions("v")
-        else if (rowsHint.exists(_ <= smallSortRows(df.sparkSession)))
+        else if (rowsHint.exists(_ <= SmallSortRows))
           // small column: a one-partition sort gives the same clustered
           // layout without repartitionByRange's sampling job
           df.repartition(1).sortWithinPartitions("v")
@@ -104,14 +102,6 @@ object Storage {
     if (!fs.exists(path)) 0L
     else fs.listStatus(path).count(_.getPath.getName.endsWith(".parquet")).toLong
   }
-
-  /** Exact row count of a just-written parquet dir from its file
-    * footers, driver-side — no Spark job. Footers of a fresh single-part
-    * write are a few KB; this replaces a cluster count() whose cost is
-    * pure job-launch overhead at interactive scale.
-    */
-  def parquetRowCount(spark: SparkSession, dir: String): Long =
-    parquetIdStats(spark, dir)._1
 
   /** (rows, max id) of a just-written column dir, from the parquet
     * footers' record counts and the `id` column's block statistics —
@@ -287,7 +277,7 @@ object Storage {
   * unpersists it once the per-column writes land), the exact row count
   * when the parse already ran a count pass (None on the single-split
   * fast path — the caller reads it off a written column's parquet
-  * footers, [[Storage.parquetRowCount]]), a row-count upper bound known
+  * footers, [[Storage.parquetIdStats]]), a row-count upper bound known
   * before any job runs (sizes the write layout), and
   * (columnName -> df(ord, v)) in header order.
   */

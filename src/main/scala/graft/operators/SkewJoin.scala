@@ -34,36 +34,31 @@ object SkewJoin {
     */
   val BucketsKey = "graft.join.saltBuckets"
 
-  /** Bucket count `auto` mode salts with when it finds a hot key —
-    * override via conf. One fixed count (not derived from the measured
-    * share) keeps auto's plan identical to the manual knob at the same
-    * value, so the two modes are mutually auditable.
+  /** Bucket count `auto` mode salts with when it finds a hot key. One
+    * fixed count (not derived from the measured share) keeps auto's plan
+    * identical to the manual knob at the same value, so the two modes
+    * are mutually auditable.
     */
-  val AutoBucketsKey = "graft.join.autoSaltBuckets"
+  val AutoBuckets = 8
 
   /** A key is hot when it holds at least this share of the sampled
     * rows. 0.1 sits far above uniform-key shares (1/|keys|) and far
     * below the 50%-on-one-key corpora where the salt measurably wins
-    * (SkewScaleProbe) — sampling noise at either end cannot cross it.
+    * (SCALE.md "Skew") — sampling noise at either end cannot cross it.
     */
   val AutoHotShare = 0.1
 
   /** Resolve the salt bucket count for a join's large side: an integer
     * knob is explicit manual salting, `auto` runs [[detectHotKey]] on
-    * `key` and salts (with [[AutoBucketsKey]] buckets, default 8) only
-    * when a heavy hitter is actually present — so uniform-key joins
+    * `key` and salts (with [[AutoBuckets]] buckets) only when a heavy
+    * hitter is actually present — so uniform-key joins
     * keep the plain hash-join plan and never pay the small-side
     * replication.
     */
   def resolveBuckets(large: DataFrame, key: String): Int = {
     val conf = large.sparkSession.conf
     conf.get(BucketsKey, "0") match {
-      case "auto" =>
-        if (detectHotKey(large, key))
-          conf.get(AutoBucketsKey, "8").toIntOption.getOrElse(
-            throw new IllegalArgumentException(
-              s"$AutoBucketsKey must be an integer"))
-        else 0
+      case "auto" => if (detectHotKey(large, key)) AutoBuckets else 0
       case raw => raw.toIntOption.getOrElse(throw new IllegalArgumentException(
         s"$BucketsKey must be an integer or 'auto', got '$raw'"))
     }
@@ -76,7 +71,7 @@ object SkewJoin {
     * one column, not of the table), run at plan-build time — the same
     * cost class as AQE's runtime statistics, but it sees KEY frequency,
     * which input-size heuristics cannot (the hot key's M×N blowup is at
-    * join OUTPUT; see SkewScaleProbe in SCALE.md). Deterministic seed:
+    * join OUTPUT; see SCALE.md "Skew"). Deterministic seed:
     * the same corpus always makes the same salt decision.
     */
   def detectHotKey(large: DataFrame, key: String,

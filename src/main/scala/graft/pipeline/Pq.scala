@@ -453,9 +453,10 @@ object Pq {
     * (the point of PQ) while ADC's quantization error is evicted from
     * the final ranking. The remaining loss is a true neighbor absent
     * from the rerank pool (coarse-cell loss or a deep ADC misrank) —
-    * measured in RecallProbe and gated via the `ann_ivfpq_refine`
-    * entry's recall floor. Saturated regime (`nprobe` = all cells,
-    * `rerank` >= corpus) is EXACTLY brute force — pinned in PqSpec.
+    * measured (COVERAGE.md, ANN PQ recall gate) and gated via the
+    * `ann_ivfpq_refine` entry's recall floor. Saturated regime
+    * (`nprobe` = all cells, `rerank` >= corpus) is EXACTLY brute force
+    * — pinned in PqSpec.
     */
   def probeIndexIvfRefined(dir: String, queries: DataFrame, emb: DataFrame,
                            k: Int, m: Int, nprobe: Int,
@@ -474,9 +475,8 @@ object Pq {
     * share a query's vec_id can never substitute its vector. Only the
     * NEIGHBOR side touches `emb` — full-precision vectors are fetched
     * for nominated candidates alone (the point of IVFADC+R).
-    * Shared by [[probeIndexIvfRefined]] and the RecallProbe
-    * calibration, so the published floors always measure the SHIPPED
-    * refine semantics (a tie-break or scoring change here moves both).
+    * Split out of [[probeIndexIvfRefined]] so a recall calibration can
+    * re-rank any candidate pool with the SHIPPED refine semantics.
     */
   private[graft] def refineExact(cands: DataFrame, queries: DataFrame,
                                  emb: DataFrame, k: Int): DataFrame = {

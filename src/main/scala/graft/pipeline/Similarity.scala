@@ -63,7 +63,7 @@ object Similarity {
     * long-lived server over executor-loss recomputability of a result
     * the caller is about to drain anyway.
     *
-    * Measured cost (tools.ReleaseAbProbe, sf0.1, 6 order-balanced reps,
+    * Measured cost (sf0.1, 6 order-balanced reps,
     * an untouched control entry at 1.08x separating host/order noise):
     * the eager materialization costs 1.20-1.34x on the three affected
     * bench entries (dedup_embedding_lsh 4.73 vs 3.54s, dedup_semantic
@@ -74,17 +74,11 @@ object Similarity {
     * on every consumer path.
     *
     * Cluster deployments: see SCALE.md "Cluster-deploy note: eager
-    * release vs fault tolerance" — prefer `graft.release.skip` or
-    * reliable checkpointing where executor loss is a real event.
+    * release vs fault tolerance" — prefer reliable `checkpoint()`
+    * where executor loss is a real event.
     */
   private def releasedAfter(out: DataFrame, p: DataFrame): DataFrame =
-    // measurement escape (tools.ReleaseAbProbe): `graft.release.skip`
-    // restores the pre-release semantics — lazy result, corpus cache
-    // RETAINED — so the eager-materialization cost can be A/B'd in one
-    // JVM. Probe-only: production callers must not set it (it
-    // reintroduces the cache accumulation this method exists to stop).
-    if (sys.props.contains("graft.release.skip")) out
-    else try {
+    try {
       if (sys.props.contains("graft.plan.only")) out
       else out.localCheckpoint()
     } finally p.unpersist()
@@ -344,7 +338,8 @@ object Similarity {
     * matter how the buckets hash. The sf1 probe measured exactly that:
     * fixed r=8 grew the banded near-dup 77× at 10× vectors. Growing r
     * by log2 of the corpus growth pins expected background candidates
-    * per vector, restoring ~linear growth ([[graft.tools.EmbLshScaleProbe]]).
+    * per vector, restoring ~linear growth (SCALE.md "Embedding-LSH band
+    * sizing").
     *
     * Recall price: each +1 bit multiplies the per-band hit rate p^r by
     * p. At production near-dup thresholds (cos >= 0.85 → p >= 0.82),

@@ -119,7 +119,7 @@ object PipelineQueries {
     * set clears the measured floor. The entry runs `nAssign = 2`
     * (overlapping cells — the IVF-nprobe analog): this corpus's planted
     * pairs sit at cosine 0.45-0.51, right at the threshold, where
-    * single-cell assignment loses boundary-straddling pairs (RecallProbe
+    * single-cell assignment loses boundary-straddling pairs (measured at
     * nAssign=1: 42.9/66.7/41.8% at sf0.001/0.01/0.1) while two-cell
     * assignment recovers them (85.7/93.3/78.7%, deterministic seeds).
     * Floor 72 follows the [[embeddingLshRecall]] convention: ONE lost
@@ -733,7 +733,7 @@ object PipelineQueries {
 
   /** Recall gate for BOTH PQ paths against one exact computation
     * (the [[annRecall]] two-path pattern), probing the PERSISTED
-    * indexes: flat PQ floor 60% (RecallProbe-measured 69.0/66.7/65.7%
+    * indexes: flat PQ floor 60% (measured 69.0/66.7/65.7%
     * at sf0.001/0.01/0.1 — the strongest approximate path on these
     * thin-margin embeddings) and IVF-PQ floor 50% (residual encoding +
     * nprobe=8: measured 64.7/62.3/55.3% — up from 54.0/49.0/47.3% at
@@ -775,7 +775,7 @@ object PipelineQueries {
     * completes the score. Probes nprobe=8 cells: ADC candidates cost
     * an m-entry lookup-sum (~free next to an exact dot), so IVFADC
     * conventionally probes wider than exact-ranking IVF —
-    * [[graft.tools.IvfPqSweep]] measured recall 45/52/55% at nprobe=4
+    * an nprobe sweep measured recall 45/52/55% at nprobe=4
     * vs 65/62/55% at nprobe=8 across SFs. The 8-of-16 ratio is an
     * artifact of the toy cell count at driver scale; production sizes
     * nCells ~ sqrt(corpus) (e.g. 4096 cells at 1e9 vectors), where the
@@ -804,7 +804,7 @@ object PipelineQueries {
     * STRONG `scores_exact_ok` check the plain IVF-PQ entry cannot
     * (every emitted score equals the dot recomputed from the corpus) —
     * and the refine's recall gain over raw IVFADC is large and
-    * measured: RecallProbe refined 87.7/83.7/82.7% vs raw
+    * measured: refined 87.7/83.7/82.7% vs raw
     * 64.7/62.3/55.3% at sf0.001/0.01/0.1 (+20-27 points — most of raw
     * IVFADC's loss here is ADC misranking inside the pool, exactly what
     * re-scoring evicts; refined recall can only be >= the same-pool ADC
@@ -920,7 +920,7 @@ object PipelineQueries {
     * exhaustive gate, so its floors calibrate to its own measurements:
     * sampled hits 84/156, 88/156, 91/156 (LSH: min 53.8%) and 104/156,
     * 92/156, 99/156 (IVF: min 59.0%) at sf0.001/0.01/0.1 with
-    * deterministic seeds ([[graft.tools.RecallProbe]]); the exhaustive
+    * deterministic seeds; the exhaustive
     * floors (52/58) would leave under ONE hit of margin on IVF@sf0.01.
     */
   def annRecallSampledHalf(s: SparkSession, d: String): DataFrame =
@@ -987,7 +987,7 @@ object PipelineQueries {
     * deterministic hyperplane seeds guarantee at every driver SF
     * (banded LSH misses only pairs sharing no band; candidates are
     * verified exactly, so LSH pairs ⊆ exact pairs and the intersect
-    * IS the LSH output size — measured ([[graft.tools.RecallProbe]]):
+    * IS the LSH output size — measured (COVERAGE.md recall gates):
     * 71.4/86.7/86.5% at sf0.001/0.01/0.1 over 7/15/141 exact pairs.
     * The floor 66% sits ~5 points under the per-SF minimum — sf0.001's
     * 7-pair population makes one missed pair worth 14 points, so the
@@ -2401,7 +2401,7 @@ object PipelineQueries {
     // dedup_semantic mirrors dedup_embedding_lsh's invariant singleton:
     // n_exact recomputed from the exact cosine-pair SQL; semantic pairs
     // are exact-verified within their k-means cell (subset by
-    // construction); the 72% floor is the RecallProbe calibration
+    // construction); the 72% floor is the measured recall calibration
     // (one lost pair at sf0.001's 7-pair population trips).
     "dedup_semantic" ->
       s"""WITH q AS (SELECT vec_id, $quantSql AS qe FROM embeddings),

@@ -80,9 +80,13 @@ object DocStreams {
     if (dropPii) flagged.filter(col("n_pii") === 0L) else flagged
   }
 
+  /** Most batch keys [[admissionJoin]] collects to the driver for the
+    * pushdown arms (≈ 80 MB of boxed keys); larger batches scan. */
+  private val FpDriverCapKeys = 2000000L
+
   /** The fingerprint-store admission probe of [[corpusBatchSink]],
-    * exposed so plan tests and cost probes exercise the exact shipped
-    * join shapes. Given the deduped batch `one` (carrying `fp`) and the
+    * exposed so plan tests exercise the exact shipped join shapes.
+    * Given the deduped batch `one` (carrying `fp`) and the
     * fp store root, returns the admitted subset (batch rows whose
     * fingerprint is NOT in any store partition except the batch's own)
     * plus the arm chosen. Arms, and the COST MODEL that picks one:
@@ -101,7 +105,7 @@ object DocStreams {
     *    `batch keys × page rows` rows REGARDLESS of store size
     *    (measured: 7.9M rows decoded for a 10k-key probe into a
     *    20M-key store at the shipped 1000-row pages vs 20M for a
-    *    pushed plain In — FpPushdownProbe; within a chunk the
+    *    pushed plain In — SCALE.md round 17; within a chunk the
     *    predicate is an OR of ≤100-key In groups, [[chunkPredicate]],
     *    because parquet's filter visitors recurse per or() level and
     *    the r19 600M-store probe measured a single 1000-key chunk's
@@ -123,14 +127,14 @@ object DocStreams {
     *    the measured decode crossover: pushdown decodes ~`batch keys ×
     *    page rows` rows, scan_semi decodes ~`store keys`, so pushdown
     *    is chosen while `batch keys ≤ crossover × store keys / page
-    *    rows` (`graft.sink.fpCrossover`, default 0.4 — bracketed by
-    *    AdmissionScaleProbe: at decode ratio 0.17 pushdown wins 2.6x,
+    *    rows` (`graft.sink.fpCrossover`, default 0.4 — bracketed in
+    *    SCALE.md round 18: at decode ratio 0.17 pushdown wins 2.6x,
     *    at 0.5 scan_semi edges ahead, at ≥5 scan_semi wins 2–36x;
     *    store keys estimated as listed bytes / 16, md5 keys being
     *    incompressible)
     *    AND the batch key set fits the driver collect bound
-    *    (`graft.sink.fpDriverCapKeys`, default 2M ≈ 80 MB of boxed
-    *    keys). At a production store the crossover dominates: a
+    *    ([[FpDriverCapKeys]], 2M ≈ 80 MB of boxed keys). At a
+    *    production store the crossover dominates: a
     *    10¹⁰-key store probes batches up to ~5M keys via pushdown, and
     *    anything larger genuinely amortizes a linear scan.
     *  - `empty_batch` (large store, zero batch rows): no probe at all —
@@ -159,8 +163,6 @@ object DocStreams {
     val bcastMax = fpBroadcastMax(spark)
     val waveKeys = spark.conf.getOption("graft.sink.fpPushdownKeys")
       .map(_.toInt).getOrElse(100000)
-    val capKeys = spark.conf.getOption("graft.sink.fpDriverCapKeys")
-      .map(_.toLong).getOrElse(2000000L)
     val xover = spark.conf.getOption("graft.sink.fpCrossover")
       .map(_.toDouble).getOrElse(0.4)
     if (fpBytes < bcastMax)
@@ -173,11 +175,12 @@ object DocStreams {
       val xoverKeys = xover * estStoreKeys.toDouble / fpPageRows(spark)
       val pushMax: Long =
         if (waveKeys <= 0) 0L
-        else math.min(capKeys, math.min(xoverKeys, Long.MaxValue.toDouble).toLong)
+        else math.min(FpDriverCapKeys,
+          math.min(xoverKeys, Long.MaxValue.toDouble).toLong)
       val limitN = (math.min(pushMax, Int.MaxValue - 2L) + 1L).toInt
       // a PERSISTED batch (the sink's large-store path) answers the
       // size gate with a count against the cache first, so an
-      // oversized batch bound for scan_semi never pays a capKeys-sized
+      // oversized batch bound for scan_semi never pays a cap-sized
       // driver collect just to learn it is oversized
       val counted: Option[Long] =
         if (one.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
@@ -399,7 +402,7 @@ object DocStreams {
     * under-threshold `In` to a LEFT-DEEP or(eq...) chain, and
     * parquet-mr's row-group/column-index/bloom visitors recurse once
     * per or() level: a single 1000-key In is a ~1000-deep tree, which
-    * the r19 600M-key AdmissionScaleProbe run measured OVERFLOWING the
+    * the r19 600M-key admission run measured OVERFLOWING the
     * default 1 MB task stack (SparkException wrapping
     * StackOverflowError inside the scan; 16 MB stacks confirmed the
     * diagnosis). Grouping caps the eq-chain depth at the group size
@@ -772,7 +775,7 @@ object DocStreams {
           .filter(_.getPath.getName.endsWith(".parquet"))
           .map(_.getLen).sum
         val hasFpStore = fpBytes > 0L
-        // Cost shape (measured, StreamCostProbe + bench A/Bs): the
+        // Cost shape (measured, SCALE.md round 14 + bench A/Bs): the
         // heavy part of a batch is evaluating the regex-heavy upstream,
         // so on the BROADCAST arm the data write stays the ONE full
         // evaluation (a persist variant measured 2x that entry), and
@@ -942,6 +945,11 @@ object DocStreams {
     }
   }
 
+  /** [[compactFpStore]]'s size-tier ratio and STCS merge trigger (see
+    * its cost shape; SCALE.md round 19 measured the ladder). */
+  private val FpFoldRatio = 4.0
+  private val FpFoldMin = 4
+
   /** Compact the corpus sink's fingerprint side table: fold every
     * `batch_id` partition under `dir/fp` into ONE new partition (a few
     * large sorted, small-paged, bloom-filtered files instead of one
@@ -978,15 +986,15 @@ object DocStreams {
     * batches): the fold is SIZE-TIERED compaction — classic LSM STCS.
     * A pass always folds the per-batch partitions (non-negative ids),
     * absorbing with them any consolidated generation (negative id) in
-    * the same size tier (≤ `graft.sink.fpFoldRatio` (4) × the batches'
-    * combined key count — a FIXED bound, deliberately not the
-    * cascading sum-of-selected variant, which the r19 FoldLadderProbe
-    * measured re-rewriting the dominant generation every few passes:
-    * max pass ≈ the whole store, read amp 5.7×). Generations above
-    * the band sort into buckets of similar size (each member ≤ ratio ×
-    * its bucket's smallest); a bucket merges only once it holds
-    * `graft.sink.fpFoldMin` (4) generations — the STCS trigger. Key
-    * counts come from the `#rows` line of each partition's `_ranges`
+    * the same size tier (≤ [[FpFoldRatio]] (4) × the batches' combined
+    * key count — a FIXED bound, deliberately not the cascading
+    * sum-of-selected variant, which the r19 fold-ladder run (SCALE.md
+    * round 19) measured re-rewriting the dominant generation every few
+    * passes: max pass ≈ the whole store, read amp 5.7×). Generations
+    * above the band sort into buckets of similar size (each member ≤
+    * ratio × its bucket's smallest); a bucket merges only once it holds
+    * [[FpFoldMin]] (4) generations — the STCS trigger. Key counts come
+    * from the `#rows` line of each partition's `_ranges`
     * sidecar (bytes/16 when absent). So a tier is rewritten exactly
     * when a comparable volume of newer data merges with it, per-pass
     * bytes are bounded by the merging tier's bucket ((minMerge+1) ×
@@ -1003,9 +1011,8 @@ object DocStreams {
     * generations are semantically invisible. `nFiles ≤ 0` sizes the
     * output automatically at ~256 MB per file of folded input.
     *
-    * Returns the folded source bytes (0 when no fold ran) — the
-    * measurement hook [[graft.tools.FoldLadderProbe]] uses to bound
-    * per-pass cost and cumulative write amplification.
+    * Returns the folded source bytes (0 when no fold ran) — per-pass
+    * cost, summed for cumulative write amplification.
     */
   def compactFpStore(spark: org.apache.spark.sql.SparkSession, dir: String,
                      nFiles: Int = 4, graceMs: Long = 0L,
@@ -1063,7 +1070,7 @@ object DocStreams {
     // the dir carries sink markers at all, only APPLIED batches (their
     // marker was written strictly after their fp partition) are fold
     // sources. A marker-less dir (offline fold of hand-written
-    // partitions, the probe harnesses) folds everything, as before.
+    // partitions, tests) folds everything, as before.
     val rootNames =
       try fs.listStatus(new Path(dir)).map(_.getPath.getName)
       catch { case _: java.io.FileNotFoundException => Array.empty[String] }
@@ -1097,24 +1104,18 @@ object DocStreams {
     }
     val negs = live.filter(_._2 < 0L)
     val pos = live.filter { case (_, id) => id >= 0L && foldable(id) }
-    val ratio = spark.conf.getOption("graft.sink.fpFoldRatio")
-      .map(_.toDouble).getOrElse(4.0)
-    val minMerge = spark.conf.getOption("graft.sink.fpFoldMin")
-      .map(_.toInt).getOrElse(4)
-    // ladder selection — see the scaladoc cost shape. `ratio ≤ 0`
-    // disables generation merging entirely (the legacy incremental-only
-    // mode, kept for the probe's A/B arm).
+    val (ratio, minMerge) = (FpFoldRatio, FpFoldMin)
+    // ladder selection — see the scaladoc cost shape
     val old: Array[org.apache.hadoop.fs.FileStatus] =
       if (negs.length >= fullFoldAt)
         live.filter { case (_, id) => foldable(id) }.map(_._1)
-      else if (ratio <= 0.0) pos.map(_._1)
       else {
         val posKeys = pos.map(p => dirKeys(p._1)).sum
         val sortedNegs = negs.map(p => (p._1, dirKeys(p._1))).sortBy(_._2)
         // band absorption: generations in the same size tier as the
         // incoming batches ride the pos fold. The bound is FIXED at
         // ratio × posKeys — deliberately NON-cascading: the r19
-        // FoldLadderProbe measured the cascading variant (bound grows
+        // fold-ladder run measured the cascading variant (bound grows
         // with each admitted generation) re-rewriting the DOMINANT
         // generation every few passes — max pass ≈ the whole store,
         // read amp 5.7× — exactly the O(store) pass the ladder exists

@@ -31,8 +31,8 @@ object Replay {
     * semantic change: row-to-micro-batch assignment is untouched, and
     * every transform under test is intra-batch-order independent
     * (stateful ops shuffle by key; sessionizeCustom sorts its group).
-    * Measured 3.2 -> 1.4 s on the quality gate feed
-    * ([[graft.tools.StreamCostProbe]]).
+    * Measured 3.2 -> 1.4 s on the quality gate feed (SCALE.md,
+    * stream-subtotal accounting).
     */
   private val FeedPartitions = 8
 
@@ -44,65 +44,10 @@ object Replay {
     */
   def replay[A: Encoder](spark: SparkSession, batches: Seq[Seq[A]])(
       transform: DataFrame => DataFrame): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[A]
     val name = "replay_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
-    // The shuffle-partition count is frozen into the checkpoint at query
-    // start and sizes the STATE STORE: every micro-batch maintains
-    // (partitions x stores-per-operator) state files regardless of how
-    // little state each holds. At replay scale (1e4-1e5 rows) the batch
-    // session's 32 partitions are pure per-batch overhead — a stream-
-    // stream join carries 4 stores, so 32 partitions cost ~128 file
-    // maintenances per micro-batch. 2 partitions keep the same
-    // semantics (state is hash-partitioned either way, and 2 still
-    // exercises multi-partition state) at a fraction of the fixed
-    // cost; a production deployment sizes this to its executor count,
-    // exactly like batch shuffle partitions.
-    // `graft.replay.shufflePartitions` overrides the 2 — measurement
-    // harnesses that exist to characterize the STATE STORE itself
-    // (StreamWindowStateProbe) need production-representative state
-    // partitioning, not the replay-overhead optimum.
-    val pKey = "spark.sql.shuffle.partitions"
-    val rKey = "spark.sql.streaming.minBatchesToRetain"
-    val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(pKey)
-    val prevR = spark.conf.getOption(rKey)
-    val prevN = spark.conf.getOption(nKey)
-    val q =
-      try {
-        spark.conf.set(pKey, spark.conf
-          .getOption("graft.replay.shufflePartitions").getOrElse("2"))
-        // a bounded replay never restarts from its throwaway
-        // checkpoint — retaining the default 100 batches of state
-        // files is pure write amplification here
-        spark.conf.set(rKey, "1")
-        // no-data micro-batches exist for EAGER emission/eviction on a
-        // live stream (emit a closed window without waiting for the
-        // next data batch). A bounded replay's accumulated output SET
-        // is no-data-batch independent by construction: every feed
-        // that needs a flush ends with sentinel batches, and batch N
-        // runs under the watermark from batch N-1, so everything a
-        // no-data batch would emit is emitted by the next DATA batch
-        // instead — but each no-data batch costs a full plan + state
-        // commit cycle, up to doubling the per-entry batch count.
-        // `graft.replay.noDataBatches=true` restores the live-stream
-        // behavior for latency-characterization harnesses.
-        spark.conf.set(nKey, spark.conf
-          .getOption("graft.replay.noDataBatches").getOrElse("false"))
-        transform(in.toDF().repartition(FeedPartitions)).writeStream
-          .format("memory").queryName(name).outputMode("append").start()
-      } finally {
-        spark.conf.set(pKey, prev)
-        prevR.fold(spark.conf.unset(rKey))(spark.conf.set(rKey, _))
-        prevN.fold(spark.conf.unset(nKey))(spark.conf.set(nKey, _))
-      }
-    try {
-      batches.filter(_.nonEmpty).foreach { b =>
-        in.addData(b)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    replayTo(spark, batches)(in => transform(in).writeStream
+      .format("memory").queryName(name).outputMode("append").start())
     spark.table(name)
   }
 
@@ -118,13 +63,17 @@ object Replay {
       start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[A]
-    // same replay-scale state-store sizing as [[replay]] (the conf is
-    // frozen into the checkpoint at query START, so the caller-owned
-    // start() must run under it): a stateful transform upstream of the
-    // sink — toCorpus's watermark dedup — otherwise maintains one state
-    // file per batch-session shuffle partition per micro-batch, pure
-    // fixed overhead at replay scale. Same `graft.replay.
-    // shufflePartitions` escape for state-store measurement harnesses.
+    // The shuffle-partition count is frozen into the checkpoint at query
+    // start (so `start` must run under it) and sizes the STATE STORE:
+    // every micro-batch maintains (partitions x stores-per-operator)
+    // state files regardless of how little state each holds. At replay
+    // scale (1e4-1e5 rows) the batch session's 32 partitions are pure
+    // per-batch overhead — a stream-stream join carries 4 stores, so 32
+    // partitions cost ~128 file maintenances per micro-batch. 2
+    // partitions keep the same semantics (state is hash-partitioned
+    // either way, and 2 still exercises multi-partition state) at a
+    // fraction of the fixed cost; a production deployment sizes this to
+    // its executor count, exactly like batch shuffle partitions.
     val pKey = "spark.sql.shuffle.partitions"
     val rKey = "spark.sql.streaming.minBatchesToRetain"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -133,12 +82,24 @@ object Replay {
     val prevN = spark.conf.getOption(nKey)
     val q =
       try {
-        spark.conf.set(pKey, spark.conf
-          .getOption("graft.replay.shufflePartitions").getOrElse("2"))
+        spark.conf.set(pKey, "2")
+        // a bounded replay never restarts from its throwaway
+        // checkpoint — retaining the default 100 batches of state
+        // files is pure write amplification here
         spark.conf.set(rKey, "1")
-        // same no-data-batch reasoning as [[replay]]; additionally the
-        // foreachBatch sinks' batch ids become the dense data-batch
-        // sequence 0..n-1 regardless of upstream watermarks
+        // no-data micro-batches exist for EAGER emission/eviction on a
+        // live stream (emit a closed window without waiting for the
+        // next data batch). A bounded replay's accumulated output SET
+        // is no-data-batch independent by construction: every feed
+        // that needs a flush ends with sentinel batches, and batch N
+        // runs under the watermark from batch N-1, so everything a
+        // no-data batch would emit is emitted by the next DATA batch
+        // instead — but each no-data batch costs a full plan + state
+        // commit cycle, up to doubling the per-entry batch count. It
+        // also makes foreachBatch sinks' batch ids the dense data-batch
+        // sequence 0..n-1 regardless of upstream watermarks.
+        // `graft.replay.noDataBatches=true` restores the live-stream
+        // behavior for latency-characterization harnesses.
         spark.conf.set(nKey, spark.conf
           .getOption("graft.replay.noDataBatches").getOrElse("false"))
         start(in.toDF().repartition(FeedPartitions))

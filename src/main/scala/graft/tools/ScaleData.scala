@@ -16,10 +16,11 @@ import org.apache.spark.sql.functions._
   *    grows 10x. Offsetting nothing would instead square the per-key
   *    join output (each orderkey would match 10 copies on both sides).
   *  - documents.text: copy c>0 prefixes every token with the copy id
-  *    (the DedupScaleProbe construction — cross-copy shingle overlap is
-  *    exactly zero, so the organic near-dup structure repeats per copy
-  *    and pair counts grow linearly, never quadratically); n_chars is
-  *    recomputed to stay consistent with the rewritten text.
+  *    (the SCALE.md "Dedup scaling" construction — cross-copy shingle
+  *    overlap is exactly zero, so the organic near-dup structure
+  *    repeats per copy and pair counts grow linearly, never
+  *    quadratically); n_chars is recomputed to stay consistent with the
+  *    rewritten text.
   *  - embeddings.embedding: copy c rotates the float array by c
   *    dimensions — norms and all within-copy distances are preserved
   *    exactly (the per-copy kNN structure IS sf0.1's), while cross-copy

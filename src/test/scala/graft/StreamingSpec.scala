@@ -1345,4 +1345,38 @@ class StreamingSpec extends SparkSpec {
       s"lean=$lean live=$live")
     assert(lean.nonEmpty && lean.map(_._1) == Set(1L, 2L), s"got $lean")
   }
+
+  test("Replay: replay-scale conf applies at query start and is restored, also when start throws") {
+    val spark0 = spark
+    import spark0.implicits._
+    val pKey = "spark.sql.shuffle.partitions"
+    val rKey = "spark.sql.streaming.minBatchesToRetain"
+    val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val saved = Seq(pKey, rKey, nKey).map(k => k -> spark.conf.getOption(k))
+    def current(): Seq[Option[String]] =
+      Seq(pKey, rKey, nKey).map(spark.conf.getOption)
+    try {
+      spark.conf.set(pKey, "7")
+      spark.conf.unset(rKey)
+      spark.conf.unset(nKey)
+      val before = current()
+      var seen = Seq.empty[Option[String]]
+      val out = graft.streaming.Replay.replay(spark,
+        Seq(Seq(1L, 2L), Seq(3L))) { in => seen = current(); in }
+      assert(out.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+      assert(seen == Seq(Some("2"), Some("1"), Some("false")),
+        s"conf at query start: $seen")
+      assert(current() == before, s"after replay: ${current()}")
+
+      val boom = intercept[IllegalStateException] {
+        graft.streaming.Replay.replayTo(spark, Seq(Seq(1L))) { _ =>
+          throw new IllegalStateException("start failed")
+        }
+      }
+      assert(boom.getMessage == "start failed")
+      assert(current() == before, s"after a failed start: ${current()}")
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 }
