@@ -3,15 +3,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
+  type QueryFn = (SparkSession, String) => DataFrame
+
   /** One query's measured outcome: wall-clock seconds of the SUCCESSFUL
     * reps only (each paired with the probe index of the pass it ran in —
     * see [[ProbeLog]]), plus the first error message if any rep threw. A
     * query is "failed" when NO rep succeeded, "flaky" when
     * some-but-not-all did — both are first-class fields in the artifact,
     * never folded into a fast-looking min. `bonusErr` records a defense-
-    * pass failure that was dropped from the sample (see
-    * [[remeasureWorst]]) — the artifact stays failure-honest without
-    * marking an otherwise-green query flaky.
+    * pass failure that was dropped from the sample (see [[resample]]) —
+    * the artifact stays failure-honest without marking an
+    * otherwise-green query flaky.
     */
   final case class QueryResult(name: String, okTimes: Seq[Double],
                                okPasses: Seq[Int], firstErr: Option[String],
@@ -63,9 +65,9 @@ object Bench {
     }
     def times: Seq[Double] = buf.toSeq
 
-    /** Spec seam: seed a synthetic probe time so the rerun branch (which
-      * recomputes suspects from this log) is testable with a forced-hot
-      * pass; never called from the measurement path.
+    /** Spec seam: seed a synthetic probe time so the defense passes
+      * (which recompute suspects from this log) are testable with a
+      * forced-hot pass; never called from the measurement path.
       */
     private[graft] def record(t: Double): Int = { buf += t; buf.size - 1 }
   }
@@ -149,8 +151,7 @@ object Bench {
     * interleaving could NOT dodge is at least visible per-pass in the
     * artifact ([[loadSuspects]]).
     */
-  def measure(spark: SparkSession,
-              selected: Seq[(String, (SparkSession, String) => DataFrame)],
+  def measure(spark: SparkSession, selected: Seq[(String, QueryFn)],
               sfDir: String, reps: Int,
               log: ProbeLog = new ProbeLog): Seq[QueryResult] = {
     val ordered = selected.sortBy(_._1)
@@ -158,13 +159,8 @@ object Bench {
       (1 to reps).flatMap { _ =>
         val pass = log.probe(spark)
         ordered.map { case (name, fn) =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val err = try { fn(spark, sfDir).count(); None } catch {
-            case e: Throwable => Some(
-              s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(160))
-          }
-          (name, (System.nanoTime() - t0) / 1e9, pass, err)
+          val (t, err) = timeOnce(spark, fn, sfDir)
+          (name, t, pass, err)
         }
       }
     log.probe(spark) // trailing bracket of the last pass
@@ -178,135 +174,105 @@ object Bench {
     }
   }
 
-  /** Second line of defense after the interleaved passes: re-run the
-    * `n` queries with the LARGEST mins once more, in a fresh time
-    * window after the whole suite. A sustained load spike spanning all
-    * interleaved passes shows up exactly there — as inflated mins — and
-    * an extra sample can only lower a min, so this pass strictly
-    * improves the judged signal for the queries a spike hurt most.
-    * Extra successes raise a query's `reps_ok` above the nominal rep
-    * count — visible in the artifact, not hidden. A FAILED bonus run
-    * contributes no sample and never marks the query flaky — the
-    * nominal samples already measured it green, and the defense pass
-    * runs under exactly the spike conditions it exists for — but the
-    * dropped error is RECORDED in `bonusErr` (rendered as `bonus_err`)
-    * so the artifact stays failure-honest about what it discarded.
+  /** One timed run of `fn`: cache flush, `count()`, wall-clock seconds
+    * and the error text (cut to 160 chars) if it threw. The only timing
+    * block — [[measure]] and every [[resample]] pass go through it.
     */
-  def remeasureWorst(spark: SparkSession,
-                     selected: Seq[(String, (SparkSession, String) => DataFrame)],
-                     results: Seq[QueryResult], sfDir: String,
-                     n: Int, log: ProbeLog = new ProbeLog): Seq[QueryResult] = {
+  private def timeOnce(spark: SparkSession, fn: QueryFn,
+                       sfDir: String): (Double, Option[String]) = {
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    val err = try { fn(spark, sfDir).count(); None } catch {
+      case e: Throwable => Some(
+        s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(160))
+    }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** One extra, probe-bracketed pass over the `names` this run has a
+    * function for: each gets one more sample tagged with the pass id.
+    * An extra sample can only lower a min; extra successes raise a
+    * query's `reps_ok` above the nominal rep count — visible in the
+    * artifact, not hidden. A FAILED extra run contributes no sample and
+    * never marks the query flaky — the nominal samples already measured
+    * it green, and the defense passes run under exactly the spike
+    * conditions they exist for — but the dropped error is RECORDED in
+    * `bonusErr` (first one wins; rendered as `bonus_err`) so the
+    * artifact stays failure-honest about what it discarded. No name to
+    * run means no pass and no probes.
+    */
+  def resample(spark: SparkSession, fns: Map[String, QueryFn],
+               results: Seq[QueryResult], names: Set[String], sfDir: String,
+               log: ProbeLog): Seq[QueryResult] = {
+    val todo = names.filter(fns.contains)
+    if (todo.isEmpty) return results
+    val pass = log.probe(spark)
+    val out = results.map { r =>
+      if (!todo(r.name)) r
+      else timeOnce(spark, fns(r.name), sfDir) match {
+        case (t, None) =>
+          r.copy(okTimes = r.okTimes :+ t, okPasses = r.okPasses :+ pass)
+        case (_, err) => r.copy(bonusErr = r.bonusErr.orElse(err))
+      }
+    }
+    log.probe(spark)
+    out
+  }
+
+  /** The defense passes after the interleaved ones, in order, each a
+    * [[resample]] in a fresh end-of-suite time window:
+    *
+    *  1. the 5 queries with the LARGEST mins. A sustained load spike
+    *     spanning all interleaved passes shows up exactly there — as
+    *     inflated mins — so this pass improves the judged signal for the
+    *     queries a spike hurt most.
+    *  1. the self-qualifying step: if any query's judged min still comes
+    *     from a pass whose calibration probes ran hot ([[loadSuspects]]),
+    *     sleep `cooldownSec`, then give each suspect one more sample in
+    *     the (hopefully) quiet window. If that window measured clean and
+    *     beat the loaded-pass min, the flag clears itself; if the load
+    *     persisted, the flag stays, telling the judge exactly which
+    *     numbers not to trust WITHOUT out-of-band re-measurement (which
+    *     rounds 5–7 all needed).
+    *  1. each query outside its multi-round band ([[windowSuspects]]),
+    *     for at most 2 passes. A query still out of band after that keeps
+    *     its `window_suspect` annotation: either the window never cleared
+    *     or the regression is real — both better than banking a silent
+    *     outlier as next round's comparison base.
+    */
+  def defend(spark: SparkSession, selected: Seq[(String, QueryFn)],
+             results: Seq[QueryResult], sfDir: String,
+             bands: Map[String, Double], log: ProbeLog,
+             cooldownSec: Int): Seq[QueryResult] = {
     val fns = selected.toMap
     val worst = results.filter(_.okTimes.nonEmpty)
-      .sortBy(-_.okTimes.min).take(n).map(_.name).toSet
-    if (worst.isEmpty) return results
-    val pass = log.probe(spark)
-    val out = results.map { r =>
-      if (!worst(r.name)) r
+      .sortBy(-_.okTimes.min).take(5).map(_.name).toSet
+    val remeasured = resample(spark, fns, results, worst, sfDir, log)
+    val suspects = loadSuspects(remeasured, log.times).toSet
+    val cooled =
+      if (suspects.isEmpty) remeasured
       else {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val err = try { fns(r.name)(spark, sfDir).count(); None } catch {
-          case e: Throwable => Some(
-            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(160))
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        if (err.isEmpty)
-          r.copy(okTimes = r.okTimes :+ t, okPasses = r.okPasses :+ pass)
-        else r.copy(bonusErr = err)
+        Thread.sleep(cooldownSec * 1000L)
+        resample(spark, fns, remeasured, suspects, sfDir, log)
       }
+    (1 to 2).foldLeft(cooled) { (cur, _) =>
+      resample(spark, fns, cur, windowSuspects(cur, bands).toSet, sfDir, log)
     }
-    log.probe(spark)
-    out
   }
 
-  /** Third line of defense, and the self-qualifying step: if any query's
-    * judged min still comes from a pass whose calibration probes ran hot
-    * ([[loadSuspects]]), sleep `cooldownSec`, then give each suspect one
-    * more sample in the (hopefully) quiet window. An extra sample can
-    * only lower a min; if the cooldown window measured clean and beat
-    * the loaded-pass min, the suspect flag clears itself in the final
-    * artifact — and if the load persisted, the flag stays, telling the
-    * judge exactly which numbers not to trust WITHOUT out-of-band
-    * re-measurement (which rounds 5–7 all needed).
-    */
-  def rerunSuspects(spark: SparkSession,
-                    selected: Seq[(String, (SparkSession, String) => DataFrame)],
-                    results: Seq[QueryResult], sfDir: String,
-                    log: ProbeLog, cooldownSec: Int): Seq[QueryResult] = {
-    val suspects = loadSuspects(results, log.times).toSet
-    if (suspects.isEmpty) return results
-    val fns = selected.toMap
-    Thread.sleep(cooldownSec * 1000L)
-    val pass = log.probe(spark)
-    val out = results.map { r =>
-      if (!suspects(r.name) || !fns.contains(r.name)) r
-      else {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val err = try { fns(r.name)(spark, sfDir).count(); None } catch {
-          case e: Throwable => Some(
-            s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(160))
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        if (err.isEmpty)
-          r.copy(okTimes = r.okTimes :+ t, okPasses = r.okPasses :+ pass)
-        else r.copy(bonusErr = r.bonusErr.orElse(err))
-      }
-    }
-    log.probe(spark)
-    out
-  }
-
-  /** Per-query judged minimums recovered from ONE committed round
-    * artifact. The driver wraps the bench line as `{"n":…,"tail":"…"}`
-    * keeping only the line's last ~2 KB, so this is a best-effort tail
-    * parse: take the region from `"queries":{` (or the tail's start
-    * when that marker was truncated away — the min map is the line's
-    * last object, so a mid-map start is the common case) to
-    * `"probes":`, and read `"name":dd.dddd` pairs, LAST match winning
-    * (a leading `queries_max` remnant can then never shadow a min).
-    * The decimal-point requirement excludes `reps_ok`/`failed` ints.
-    * Absent names simply get no band — the guard degrades, never lies.
+  /** Per-query judged minimums of ONE round archive
+    * (`BENCH_full_r<N>.json`): the `"name":seconds` pairs of its
+    * `"queries":{…}` object (the min map; `"queries_max":{` is a
+    * different key). An artifact without the map yields no mins, so its
+    * queries simply get no band — the guard degrades, never lies.
     */
   private[graft] def parseBenchArtifact(raw: String): Map[String, Double] = {
-    val tail = {
-      val m = "\"tail\"\\s*:\\s*\"".r.findFirstMatchIn(raw)
-      m match {
-        case Some(mm) =>
-          // unescape the JSON string value by hand — the tail is a
-          // TRUNCATED line, so no whole-document JSON parse succeeds
-          val rest = raw.substring(mm.end)
-          val sb = new StringBuilder
-          var i = 0
-          var done = false
-          while (!done && i < rest.length) {
-            rest.charAt(i) match {
-              case '\\' if i + 1 < rest.length =>
-                sb.append(rest.charAt(i + 1) match {
-                  case 'n' => '\n'; case 't' => '\t'; case c => c })
-                i += 2
-              case '"' => done = true
-              case c => sb.append(c); i += 1
-            }
-          }
-          sb.toString
-        case None => raw
-      }
-    }
-    val start = tail.indexOf("\"queries\":{")
-    val region0 = if (start >= 0) tail.substring(start) else tail
-    // stop at the FIRST post-min-map marker present (defense in depth:
-    // a tail truncated past "probes": must not let drift_watch's
-    // name:number pairs parse as query mins)
-    val stops = Seq("\"probes\":", "\"load_suspect\":", "\"drift_watch\":")
-      .map(region0.indexOf).filter(_ >= 0)
-    val region =
-      if (stops.isEmpty) region0 else region0.substring(0, stops.min)
-    val out = scala.collection.mutable.HashMap.empty[String, Double]
-    "\"([A-Za-z0-9_]+)\":(\\d+\\.\\d+)".r.findAllMatchIn(region)
-      .foreach(m => out(m.group(1)) = m.group(2).toDouble)
-    (out -= "value" -= "total_sec" -= "sf").toMap
+    val start = raw.indexOf("\"queries\":{")
+    if (start < 0) return Map.empty
+    val end = raw.indexOf('}', start)
+    val body = raw.substring(start, if (end < 0) raw.length else end)
+    "\"([A-Za-z0-9_]+)\":(\\d+(?:\\.\\d+)?)".r.findAllMatchIn(body)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
   /** Per-query WINDOW BANDS from the committed multi-round artifacts:
@@ -319,13 +285,14 @@ object Bench {
     * neighbor window the intra-run probes were too short to see?
     *
     * STALENESS CAP (`staleN`): a query gets a band only if it appears
-    * in one of the last `staleN` artifacts. The driver tails are
-    * TRUNCATED, so a query can vanish from recent artifacts while old
-    * appearances survive — and a band built purely from a code state
-    * many rounds back flags the query's legitimate CURRENT level as a
-    * window artifact (measured: dedup_embedding_lsh's last surviving
-    * appearances were r6–r11 at ~2s, its steady r17/r18 level is
-    * ~3.7–4s — the stale band cried wolf on a clean run). No recent
+    * in one of the last `staleN` artifacts. A query can vanish from
+    * recent artifacts while old appearances survive (the truncated
+    * driver tails of the rounds before the archive did exactly that) —
+    * and a band built purely from a code state many rounds back flags
+    * the query's legitimate CURRENT level as a window artifact
+    * (measured: dedup_embedding_lsh's last surviving appearances were
+    * r6–r11 at ~2s, its steady r17/r18 level is ~3.7–4s — the stale
+    * band cried wolf on a clean run). No recent
     * appearance → no current level to compare against → no band.
     */
   private[graft] def historyBands(artifacts: Seq[String], lastN: Int = 6,
@@ -344,47 +311,6 @@ object Bench {
       if (vals.size < minRounds) None
       else Some(n -> (if (vals.size % 2 == 1) vals(vals.size / 2)
                       else (vals(vals.size / 2 - 1) + vals(vals.size / 2)) / 2))
-    }.toMap
-  }
-
-  /** Report-only creep detector, complementing [[windowSuspects]]: the
-    * window band is a NOISE guard (median of recent appearances), so a
-    * genuine ≤1.5x-per-6-rounds regression re-bases itself into the
-    * band and never flags. This flags a query whose current min AND
-    * whose last `consecutive - 1` committed appearances ALL exceed
-    * `factor` x the query's best-ever committed min — sustained drift
-    * from the query's own best, visible in one artifact field instead
-    * of a judge diffing six artifacts. Returns name -> best-ever min
-    * so the annotation is self-interpreting. Report-only: no rerun, no
-    * gating — a deliberate improvement-tradeoff (e.g. exactness work
-    * that costs 1.6x) simply stays annotated until a new best re-bases
-    * it.
-    *
-    * Floors draw ONLY on LOAD-QUALIFIED artifacts — those carrying the
-    * calibration-probe log (r9+). The pre-probe artifacts were
-    * measured without the per-rep cache flush or any load bracketing
-    * (the r5–r7 misreporting era), and their mins are non-comparable
-    * in BOTH directions: warm shared caches made cache-friendly
-    * queries spuriously fast (dedup_exact 0.16s in r5/r6 vs a steady
-    * 0.25–0.32s ever since), which would pin a permanent false drift
-    * flag on today's legitimate level.
-    */
-  private[graft] def driftWatch(artifacts: Seq[String],
-                                results: Seq[QueryResult],
-                                factor: Double = 1.5,
-                                consecutive: Int = 3): Map[String, Double] = {
-    // "probes" appears in no pre-r9 artifact (grep-verified) and in
-    // every artifact the current harness renders, truncated or not
-    val perRound = artifacts.filter(_.contains("probes"))
-      .map(parseBenchArtifact)
-    results.flatMap { r =>
-      val hist = perRound.flatMap(_.get(r.name))
-      if (r.okTimes.isEmpty || hist.size < consecutive - 1) None
-      else {
-        val best = hist.min
-        val run = hist.takeRight(consecutive - 1) :+ r.okTimes.min
-        if (run.forall(_ > factor * best)) Some(r.name -> best) else None
-      }
     }.toMap
   }
 
@@ -408,82 +334,47 @@ object Bench {
         .flatMap(roundOf)).getOrElse(Seq.empty)
       .foldLeft(0)(math.max)
 
-  /** The committed per-round artifact history, in round order, for
-    * [[historyBands]]/[[driftWatch]]. For each round, the COMPLETE
-    * archived artifact (`BENCH_full_r<N>.json`) is preferred over the
-    * driver's truncated stdout tail (`BENCH_r<N>.json`): the tails
-    * drop alphabetically-early queries (agg_, ann_, corpus_ rows),
-    * which left exactly the expensive rows the r18 incident class hits
-    * hardest without a band (78/115 coverage in r19). Tails remain the
-    * fallback for rounds predating the archive.
+  /** The committed per-round history, in round order, for
+    * [[historyBands]]: the COMPLETE archived artifacts
+    * (`BENCH_full_r<N>.json`). The driver's truncated stdout tails
+    * (`BENCH_r<N>.json`) are not read — they dropped alphabetically-early
+    * queries (agg_, ann_, corpus_ rows), which left exactly the expensive
+    * rows the r18 incident class hits hardest without a band (78/115
+    * coverage in r19) — and every round inside the band window has an
+    * archive.
     */
-  private[graft] def loadRoundArtifacts(dir: java.io.File): Seq[String] = {
-    val files = Option(dir.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    def byRound(pattern: String) = files
-      .filter(_.getName.matches(pattern))
-      .flatMap(f => roundOf(f.getName).map(_ -> f)).toMap
-    val tails = byRound("BENCH_r\\d+\\.json")
-    val fulls = byRound("BENCH_full_r\\d+\\.json")
-    (tails.keySet ++ fulls.keySet).toSeq.sorted.map { n =>
-      val f = fulls.getOrElse(n, tails(n))
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-    }
-  }
+  private[graft] def loadRoundArtifacts(dir: java.io.File): Seq[String] =
+    Option(dir.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
+      .filter(_.getName.matches("BENCH_full_r\\d+\\.json"))
+      .flatMap(f => roundOf(f.getName).map(_ -> f)).sortBy(_._1)
+      .map { case (_, f) => new String(java.nio.file.Files.readAllBytes(
+        f.toPath), java.nio.charset.StandardCharsets.UTF_8) }
 
-  /** Queries whose judged min exceeds `factor` x their multi-round band
-    * — the min was measured, end to end, outside the query's own
-    * committed history, which the intra-run probe/interleave defenses
-    * cannot catch when the load spans the WHOLE suite (the r18 failure:
-    * dedup rows banked 1.9-2.3x high with probes reading clean).
+  private val BandFactor = 1.5
+
+  /** Queries whose judged min exceeds [[BandFactor]] x their
+    * multi-round band — the min was measured, end to end, outside the
+    * query's own committed history, which the intra-run probe/interleave
+    * defenses cannot catch when the load spans the WHOLE suite (the r18
+    * failure: dedup rows banked 1.9-2.3x high with probes reading clean).
     */
-  def windowSuspects(results: Seq[QueryResult], bands: Map[String, Double],
-                     factor: Double = 1.5): Seq[String] =
+  def windowSuspects(results: Seq[QueryResult],
+                     bands: Map[String, Double]): Seq[String] =
     results.filter(r => r.okTimes.nonEmpty &&
-      bands.get(r.name).exists(b => r.okTimes.min > factor * b))
+      bands.get(r.name).exists(b => r.okTimes.min > BandFactor * b))
       .map(_.name).sorted
 
-  /** Give each out-of-band query one extra end-of-suite sample per
-    * pass, up to `passes` passes (an extra sample can only lower a
-    * min). A query still out of band after that keeps its
-    * `window_suspect` annotation in the artifact: either the window
-    * never cleared (the flag tells the judge which rows not to trust)
-    * or the regression is real (the flag points the audit at it) —
-    * both better than banking a silent outlier as next round's
-    * comparison base.
-    */
-  def rerunWindowSuspects(spark: SparkSession,
-                          selected: Seq[(String, (SparkSession, String) => DataFrame)],
-                          results: Seq[QueryResult], sfDir: String,
-                          bands: Map[String, Double], factor: Double,
-                          log: ProbeLog, passes: Int = 2): Seq[QueryResult] = {
-    val fns = selected.toMap
-    var cur = results
-    var p = 0
-    while (p < passes &&
-        windowSuspects(cur, bands, factor).exists(fns.contains)) {
-      val suspects = windowSuspects(cur, bands, factor).toSet
-      val pass = log.probe(spark)
-      cur = cur.map { r =>
-        if (!suspects(r.name) || !fns.contains(r.name)) r
-        else {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val err = try { fns(r.name)(spark, sfDir).count(); None } catch {
-            case e: Throwable => Some(
-              s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(160))
-          }
-          val t = (System.nanoTime() - t0) / 1e9
-          if (err.isEmpty)
-            r.copy(okTimes = r.okTimes :+ t, okPasses = r.okPasses :+ pass)
-          else r.copy(bonusErr = r.bonusErr.orElse(err))
-        }
-      }
-      log.probe(spark)
-      p += 1
-    }
-    cur
-  }
+  private def jsonStr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  // Locale.ROOT: f"%.4f" under a comma-decimal default locale would
+  // emit "0,1234" — corrupt JSON.
+  private def fmt(t: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(t))
 
   /** The one-line JSON artifact. Failure-honest: only successful reps
     * produce times; a query with zero successes is counted in "failed"
@@ -515,22 +406,10 @@ object Bench {
   def render(results: Seq[QueryResult], reps: Int, sfDir: String,
              probes: Seq[Double] = Seq.empty,
              bands: Map[String, Double] = Map.empty,
-             bandFactor: Double = 1.5,
-             drift: Map[String, Double] = Map.empty,
              cpus: String = "32"): String = {
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def objOf(entries: Seq[(String, String)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-    // Locale.ROOT: f"%.4f" under a comma-decimal default locale would
-    // emit "0,1234" — corrupt JSON.
-    def fmt(t: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(t))
     val ok = results.filter(_.okTimes.nonEmpty)
     val total = ok.map(_.okTimes.min).sum
     val nFailed = results.count(_.okTimes.isEmpty)
@@ -551,7 +430,7 @@ object Bench {
     // end-of-suite re-runs: measured outside this query's own committed
     // history — a whole-suite noise window or a real regression, either
     // way a number the next round must not diff against silently
-    val windowSus = windowSuspects(results, bands, bandFactor)
+    val windowSus = windowSuspects(results, bands)
     val windowJson = windowSus.map(jsonStr).mkString("[", ",", "]")
     // the violated band rides along so the flag is self-interpreting
     val windowBands = objOf(windowSus.flatMap(n =>
@@ -560,67 +439,27 @@ object Bench {
     val qsMax = objOf(ok.filter(r => maxWorthy(r.name))
       .map(r => r.name -> fmt(r.okTimes.max)))
     val qs = objOf(ok.map(r => r.name -> fmt(r.okTimes.min)))
-    // report-only sustained-drift annotation ([[driftWatch]]); rides
-    // AFTER "probes" so its name:number pairs can never bleed into
-    // parseBenchArtifact's min-map region, and near the tail so it
-    // survives the driver's stdout truncation (normally "{}")
-    val driftJson = objOf(drift.toSeq.sortBy(_._1)
-      .map { case (n, b) => n -> fmt(b) })
-    s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"sf":"$sfDir","cpus":$cpus,"errors":$errs,"bonus_err":$bonusErrs,"reps_ok":$repsOk,"window_band":$windowBands,"queries_max":$qsMax,"queries":$qs,"probes":$probesJson,"load_suspect":$suspectsJson,"window_suspect":$windowJson,"drift_watch":$driftJson,"failed":$nFailed,"flaky":${flaky.size},"total_sec":${fmt(total)}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"sf":"$sfDir","cpus":$cpus,"errors":$errs,"bonus_err":$bonusErrs,"reps_ok":$repsOk,"window_band":$windowBands,"queries_max":$qsMax,"queries":$qs,"probes":$probesJson,"load_suspect":$suspectsJson,"window_suspect":$windowJson,"failed":$nFailed,"flaky":${flaky.size},"total_sec":${fmt(total)}}"""
   }
 
-  /** The COMPACT stdout line. The driver keeps only the last ~2 KB of
-    * stdout and `json.loads`s the bench line from that tail — the full
-    * diagnostic line above is ~8 KB, so the driver's parse has failed
-    * (and PERF's per-query block stayed empty) for two rounds running.
-    * This line carries ONLY the contract fields plus the per-query min
-    * map with 4-significant-digit times — every diagnostic (probes,
-    * bands, drift, errors, per-query max) lives exclusively in the
-    * complete file artifact (`BENCH_full.json` and the round archive).
-    *
-    * Physics note, for the audit: 117 query names alone are ~1.6 KB, so
-    * even this minimal line is ~2.4 KB and a 2 KB stdout tail still
-    * clips its head. The field order is chosen so what truncation eats
-    * is the least informative part: the map (and the trailing
-    * `total_sec`) sit LAST, so the tail always carries the total and
-    * the lexicographically-late ~90% of query mins, and a tail parser
-    * that accepts a mid-map start (like [[parseBenchArtifact]])
-    * recovers everything it sees.
+  /** The stdout line: a summary of at most 1 KB, so it fits whole in
+    * the driver's ~2 KB stdout tail (a per-query min map cannot: the 117
+    * query names alone take ~1.9 KB). It carries the contract fields,
+    * the failed/flaky counts, and the two suspect flags as COUNTS (r16
+    * had 67 load suspects, whose names alone pass 1 KB). Every name,
+    * per-query min, probe, band and error is in the complete file
+    * artifact (`BENCH_full.json` and the round archive).
     */
   def renderCompact(results: Seq[QueryResult], reps: Int, sfDir: String,
-                    cpus: String, probes: Seq[Double] = Seq.empty,
-                    bands: Map[String, Double] = Map.empty,
-                    bandFactor: Double = 1.5): String = {
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    // 4 significant digits, trailing zeros trimmed, ALWAYS with a
-    // decimal point (parseBenchArtifact's name:number regex requires
-    // one; "2" would silently drop a query from the window bands)
-    def fmtg(t: Double): String = {
-      val s = String.format(java.util.Locale.ROOT, "%.4g", Double.box(t))
-      if (s.contains('.')) {
-        val trimmed = s.reverse.dropWhile(_ == '0').reverse
-        if (trimmed.endsWith(".")) trimmed + "0" else trimmed
-      } else s + ".0"
-    }
+                    cpus: String, probes: Seq[Double],
+                    bands: Map[String, Double]): String = {
     val ok = results.filter(_.okTimes.nonEmpty)
     val total = ok.map(_.okTimes.min).sum
     val nFailed = results.count(_.okTimes.isEmpty)
     val nFlaky = results.count(r => r.okTimes.nonEmpty && r.firstErr.nonEmpty)
-    // the two honesty FLAGS (name lists, normally empty) stay on stdout
-    // so a judge reading only the driver tail still sees which mins not
-    // to trust; the probe log behind them is in the file artifact
-    val suspects = loadSuspects(results, probes).map(jsonStr)
-      .mkString("[", ",", "]")
-    val windowSus = windowSuspects(results, bands, bandFactor).map(jsonStr)
-      .mkString("[", ",", "]")
-    val qs = ok.map(r => "\"" + r.name + "\":" + fmtg(r.okTimes.min))
-      .mkString("{", ",", "}")
-    s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"sf":"$sfDir","cpus":$cpus,"failed":$nFailed,"flaky":$nFlaky,"load_suspect":$suspects,"window_suspect":$windowSus,"queries":$qs,"total_sec":${fmtg(total)}}"""
+    val nLoad = loadSuspects(results, probes).size
+    val nWindow = windowSuspects(results, bands).size
+    s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"sf":"$sfDir","cpus":$cpus,"failed":$nFailed,"flaky":$nFlaky,"load_suspects":$nLoad,"window_suspects":$nWindow,"total_sec":${fmt(total)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -637,47 +476,35 @@ object Bench {
       SparkEntry.queries.filter { case (k, _) => names(k) })
     val reps = sys.env.get("SPARK_GRAFT_REPS").flatMap(_.toIntOption)
       .filter(_ > 0).getOrElse(3)
-    val cooldownSec = sys.env.get("SPARK_GRAFT_COOLDOWN_SEC")
-      .flatMap(_.toIntOption).filter(_ >= 0).getOrElse(15)
     // multi-round window bands from the committed artifacts (the r18
     // lesson: a noise window spanning the whole suite passes every
     // intra-run defense and banks 2x numbers the next round diffs
-    // against) — BENCH_r*.json live in the repo root the driver runs in
-    val bandFactor = sys.env.get("SPARK_GRAFT_BAND_FACTOR")
-      .flatMap(_.toDoubleOption).getOrElse(1.5)
+    // against) — BENCH_full_r*.json live in the repo root the driver
+    // runs in
     val histDir = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_HIST_DIR", "."))
-    val artifacts: Seq[String] =
-      try loadRoundArtifacts(histDir)
+    val bands =
+      try historyBands(loadRoundArtifacts(histDir))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] window bands unavailable: ${e.getMessage}")
-        Seq.empty
+        Map.empty[String, Double]
       }
-    val bands = historyBands(artifacts)
     warmup(spark, sfDir)
     val log = new ProbeLog
     val measured = measure(spark, selected.toSeq, sfDir, reps, log)
-    val defended = remeasureWorst(spark, selected.toSeq, measured, sfDir,
-      n = 5, log = log)
-    val cooled = rerunSuspects(spark, selected.toSeq, defended, sfDir, log,
-      cooldownSec)
-    val banded = rerunWindowSuspects(spark, selected.toSeq, cooled, sfDir,
-      bands, bandFactor, log)
-    val drift = driftWatch(artifacts, banded)
-    val line = render(banded, reps, sfDir, log.times, bands, bandFactor,
-      drift, cpus)
-    // the driver keeps only the stdout TAIL (~4 KB) — r11 lost 16
-    // per-query entries to that capture. Also write the COMPLETE
-    // artifact to a file in the repo so every per-query time survives
-    // for the audit regardless of how the printed line is truncated.
+    val defended = defend(spark, selected.toSeq, measured, sfDir, bands, log,
+      cooldownSec = 15)
+    val line = render(defended, reps, sfDir, log.times, bands, cpus)
+    // stdout carries only a summary (see renderCompact): write the
+    // COMPLETE artifact to a file in the repo so every per-query time
+    // survives for the audit.
     // SPARK_GRAFT_BENCH_OUT overrides the path (dev runs / subsets).
     // A non-default core count never refreshes BENCH_full.json — it
     // side-writes a cpus-suffixed file instead, so a scaling run can't
     // displace the 32-core working-tree artifact (the r21 incident).
+    val defaultCpus = sys.env.get("SPARK_GRAFT_CPUS").forall(_ == "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (sys.env.get("SPARK_GRAFT_CPUS").forall(_ == "32"))
-        "BENCH_full.json"
-      else s"BENCH_full_c$cpus.json")
+      if (defaultCpus) "BENCH_full.json" else s"BENCH_full_c$cpus.json")
     def writeOut(p: String): Unit =
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
         line + "\n")
@@ -691,7 +518,7 @@ object Bench {
     // want of exactly this file). Stamp = 1 + the newest committed
     // tail round (this round's own tail doesn't exist while the bench
     // runs). Skipped for dev runs (query subset, explicit out path, or
-    // rep/band-factor env overrides) so a partial or non-comparable
+    // rep override) so a partial or non-comparable
     // artifact can never displace a full round in the staleness window.
     // An EXISTING same-round archive with different content is never
     // overwritten (the r20 builder-then-driver same-round race silently
@@ -705,10 +532,8 @@ object Bench {
     // round's window bands would silently diff against. (The artifact
     // now also records "cpus" so a polluted file is at least
     // identifiable.)
-    val defaultCpus = sys.env.get("SPARK_GRAFT_CPUS").forall(_ == "32")
     if (only.isEmpty && !sys.env.contains("SPARK_GRAFT_BENCH_OUT") &&
-        !sys.env.contains("SPARK_GRAFT_REPS") &&
-        !sys.env.contains("SPARK_GRAFT_BAND_FACTOR") && defaultCpus) {
+        !sys.env.contains("SPARK_GRAFT_REPS") && defaultCpus) {
       val archive = new java.io.File(histDir,
         f"BENCH_full_r${stampRound(histDir)}%02d.json")
       val existing =
@@ -725,12 +550,10 @@ object Bench {
         case None => writeOut(archive.getPath)
       }
     }
-    // stdout gets the COMPACT line (the driver keeps only a ~2 KB
+    // stdout gets the summary line (the driver keeps only a ~2 KB
     // stdout tail — see renderCompact); the full diagnostic line lives
-    // in the file artifacts written above. Measurement methodology is
-    // unchanged — this only changes what is PRINTED.
-    println(renderCompact(banded, reps, sfDir, cpus, log.times, bands,
-      bandFactor))
+    // in the file artifacts written above.
+    println(renderCompact(defended, reps, sfDir, cpus, log.times, bands))
     spark.stop()
   }
 }

@@ -27,19 +27,17 @@ object GraftSession {
     * rewrite is the one that decides from MEASURED per-partition build
     * sizes and is scale-safe by construction. Hinted joins are untouched
     * (DynamicJoinSelection adds its hint only where the user set none),
-    * so the four join keywords keep their declared algorithms. Both are
-    * env-parameterized for cluster overrides; `SPARK_GRAFT_PREFER_SMJ=
-    * true SPARK_GRAFT_SHJ_LOCALMAP=0` reproduces the pre-r21 planner.
+    * so the four join keywords keep their declared algorithms. Setting
+    * `preferSortMergeJoin=true` and a local-map threshold of 0 gives the
+    * pre-r21 planner back.
     */
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "128m"))
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries TIMESTAMP(NANOS); surface as long nanos
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -582,8 +582,8 @@ object DocStreams {
 
   /** Legacy wrapper from when the threshold rode the PARENT session's
     * conf: admission scans are now built on [[fpScanSession]], so the
-    * sink no longer needs this — it is kept for probe/spec call sites
-    * and still does what it says (raise-around-action on the GIVEN
+    * sink no longer needs this — only specs call it, and it still
+    * does what it says (raise-around-action on the GIVEN
     * session, serialized so the save/restore can never race).
     */
   def withFpPushdown[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =

@@ -77,9 +77,10 @@ object Replay {
     val pKey = "spark.sql.shuffle.partitions"
     val rKey = "spark.sql.streaming.minBatchesToRetain"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(pKey)
-    val prevR = spark.conf.getOption(rKey)
-    val prevN = spark.conf.getOption(nKey)
+    // saved from getAll, which holds only EXPLICITLY set keys:
+    // getOption returns the registered default for an unset key, and
+    // restoring that would leave the key set after the replay
+    val prev = Seq(pKey, rKey, nKey).map(k => k -> spark.conf.getAll.get(k))
     val q =
       try {
         spark.conf.set(pKey, "2")
@@ -103,10 +104,8 @@ object Replay {
         spark.conf.set(nKey, spark.conf
           .getOption("graft.replay.noDataBatches").getOrElse("false"))
         start(in.toDF().repartition(FeedPartitions))
-      } finally {
-        spark.conf.set(pKey, prev)
-        prevR.fold(spark.conf.unset(rKey))(spark.conf.set(rKey, _))
-        prevN.fold(spark.conf.unset(nKey))(spark.conf.set(nKey, _))
+      } finally prev.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
     try {
       batches.filter(_.nonEmpty).foreach { b =>

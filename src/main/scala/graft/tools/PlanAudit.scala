@@ -18,9 +18,7 @@ object PlanAudit {
     sys.props("graft.plan.only") = "true"
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // shared engine session (GraftSession) so audited plans match what
-    // bench/verify run; SPARK_GRAFT_PREFER_SMJ=true
-    // SPARK_GRAFT_SHJ_LOCALMAP=0 reproduces the pre-r21 planner for
-    // before/after plan diffs
+    // bench/verify run
     val spark = graft.GraftSession.builder("local[8]", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { q =>

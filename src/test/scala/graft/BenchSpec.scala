@@ -13,6 +13,13 @@ import org.apache.spark.sql.SparkSession
   */
 class BenchSpec extends SparkSpec {
 
+  /** Five results with larger mins than any seeded query and no function
+    * to run: they take the defense's worst-min pass, which then re-runs
+    * nothing, so a [[Bench.defend]] case isolates its later passes.
+    */
+  private val outOfReach = (1 to 5).map(i =>
+    Bench.QueryResult(s"zbusy$i", Seq(50.0), Seq(0), None, 1))
+
   test("a query failing every rep publishes no min and counts as failed") {
     val good = (s: SparkSession, _: String) => s.range(10).toDF("id")
     val bad: (SparkSession, String) => org.apache.spark.sql.DataFrame =
@@ -153,32 +160,39 @@ class BenchSpec extends SparkSpec {
   }
 
   test("worst-min re-measure adds a sample to exactly the slowest queries") {
-    val good = (s: SparkSession, _: String) => s.range(3).toDF("id")
-    val selected = Seq("slow" -> good, "fast" -> good, "mid" -> good)
-    val measured = Seq(
-      Bench.QueryResult("slow", Seq(9.0, 9.5), Seq(0, 1), None, 2),
-      Bench.QueryResult("fast", Seq(0.1, 0.2), Seq(0, 1), None, 2),
-      Bench.QueryResult("mid", Seq(1.0, 1.1), Seq(0, 1), None, 2))
+    // every real run is slower than the seeded mins, so no extra sample
+    // becomes a min and the later passes stay idle
+    val good = (s: SparkSession, _: String) => {
+      Thread.sleep(5); s.range(3).toDF("id")
+    }
+    val names = Seq("slow", "mid", "s3", "s4", "s5", "fast")
+    val measured = names.zip(Seq(9e-4, 8e-4, 7e-4, 6e-4, 5e-4, 1e-4)).map {
+      case (n, t) => Bench.QueryResult(n, Seq(t, t + 1e-5), Seq(0, 1), None, 2)
+    }
+    // passes 0 and 1 bracketed by a uniform floor: nothing load-suspect
     val log = new Bench.ProbeLog
-    val defended = Bench.remeasureWorst(spark, selected, measured,
-      "unused", n = 2, log = log)
+    log.record(1e-9); log.record(1e-9); log.record(1e-9)
+    val defended = Bench.defend(spark, names.map(_ -> good), measured,
+      "unused", Map.empty, log, cooldownSec = 0)
     val byName = defended.map(r => r.name -> r).toMap
-    // the two largest mins got one extra (real) sample; the fast one not
-    assert(byName("slow").okReps == 3 && byName("mid").okReps == 3)
+    // the five largest mins got one extra (real) sample; the fast one not
+    assert(names.take(5).forall(byName(_).okReps == 3), defended.toString)
     assert(byName("fast").okReps == 2)
     // extra samples can only keep or lower the min
-    assert(byName("slow").okTimes.min <= 9.0)
+    assert(byName("slow").okTimes.min <= 9e-4)
     // the defense pass bracketed itself with probes and tagged its samples
-    assert(log.times.size == 2)
-    assert(byName("slow").okPasses.last == 0)
+    assert(log.times.size == 5)
+    assert(byName("slow").okPasses.last == 3)
   }
 
   test("a failed bonus run adds no sample but records the dropped error as bonus_err") {
-    val bad: (SparkSession, String) => org.apache.spark.sql.DataFrame =
+    val bad: Bench.QueryFn =
       (_, _) => throw new RuntimeException("spike hit the defense pass")
     val measured = Seq(Bench.QueryResult("q", Seq(5.0, 5.1), Seq(0, 1), None, 2))
-    val defended = Bench.remeasureWorst(spark, Seq("q" -> bad), measured,
-      "unused", n = 1)
+    val log = new Bench.ProbeLog
+    log.record(1e-9); log.record(1e-9); log.record(1e-9)
+    val defended = Bench.defend(spark, Seq("q" -> bad), measured, "unused",
+      Map.empty, log, cooldownSec = 0)
     val r = defended.head
     // untouched sample: no time added, still green, min unchanged
     assert(r.okTimes == Seq(5.0, 5.1) && r.firstErr.isEmpty)
@@ -190,21 +204,28 @@ class BenchSpec extends SparkSpec {
 
   test("rerunSuspects gives suspects one extra sample that can clear the flag") {
     val good = (s: SparkSession, _: String) => s.range(3).toDF("id")
-    val log = new Bench.ProbeLog
-    // seed the log with a hot bracket around pass 0 so "q" is suspect
-    // (the recorded probe values are real timings; synthetic ones are
-    // exercised via the pure loadSuspects tests above) — here we force
-    // suspicion by handing rerunSuspects a result whose min pass is out
-    // of probe range with a hot bracket
-    log.probe(spark); log.probe(spark)
-    // pass 0 hot relative to a later clean probe
-    val hotProbes = Seq(10.0, 10.0, 0.1)
     val seeded = Seq(Bench.QueryResult("q", Seq(5.0), Seq(0), None, 1))
-    // sanity: with a uniform log nothing reruns (flag computed inside)
-    val unchanged = Bench.rerunSuspects(spark, Seq("q" -> good), seeded,
-      "unused", log, cooldownSec = 0)
-    assert(unchanged == seeded) // both real probes are ~equal -> no suspects
-    assert(Bench.loadSuspects(seeded, hotProbes) == Seq("q"))
+    // with a uniform log nothing is suspect and the defense re-runs
+    // nothing: no pass, no probes, results untouched
+    val uniform = new Bench.ProbeLog
+    uniform.record(0.1); uniform.record(0.1); uniform.record(0.1)
+    val unchanged = Bench.defend(spark, Seq("q" -> good), seeded ++ outOfReach,
+      "unused", Map.empty, uniform, cooldownSec = 0)
+    assert(unchanged == seeded ++ outOfReach)
+    assert(uniform.times.size == 3)
+    // pass 0 hot (10 s bracket) against a 0.1 s floor: "q" is suspect
+    val log = new Bench.ProbeLog
+    log.record(10.0); log.record(10.0); log.record(0.1)
+    assert(Bench.loadSuspects(seeded, log.times) == Seq("q"))
+    val out = Bench.resample(spark, Map("q" -> good), seeded, Set("q"),
+      "unused", log)
+    assert(out.head.okPasses == Seq(0, 3), out.head.okPasses.toString)
+    // the extra sample moved the min into pass 3: the flag clears when
+    // that pass's probes read clean and stays when they read hot (set
+    // here, since the real probes are wall-clock timings)
+    assert(Bench.loadSuspects(out, log.times.take(3) ++ Seq(0.1, 0.1)).isEmpty)
+    assert(Bench.loadSuspects(out, log.times.take(3) ++ Seq(10.0, 10.0)) ==
+      Seq("q"))
   }
 
   test("rerunSuspects ACTUALLY reruns a suspect: extra sample tagged with the new pass") {
@@ -214,9 +235,9 @@ class BenchSpec extends SparkSpec {
     log.record(10.0); log.record(10.0); log.record(0.1)
     val seeded = Seq(Bench.QueryResult("q", Seq(5.0), Seq(0), None, 1))
     assert(Bench.loadSuspects(seeded, log.times) == Seq("q"))
-    val out = Bench.rerunSuspects(spark, Seq("q" -> good), seeded,
-      "unused", log, cooldownSec = 0)
-    val r = out.head
+    val out = Bench.defend(spark, Seq("q" -> good), seeded ++ outOfReach,
+      "unused", Map.empty, log, cooldownSec = 0)
+    val r = out.find(_.name == "q").get
     // one extra sample, tagged with the probe pass appended by the rerun
     assert(r.okTimes.size == 2 && r.okTimes.head == 5.0)
     assert(r.okPasses == Seq(0, 3), r.okPasses.toString)
@@ -226,14 +247,14 @@ class BenchSpec extends SparkSpec {
   }
 
   test("rerunSuspects records a crashing suspect as bonus_err without a sample") {
-    val bad: (SparkSession, String) => org.apache.spark.sql.DataFrame =
+    val bad: Bench.QueryFn =
       (_, _) => throw new RuntimeException("still under load")
     val log = new Bench.ProbeLog
     log.record(10.0); log.record(10.0); log.record(0.1)
     val seeded = Seq(Bench.QueryResult("q", Seq(5.0), Seq(0), None, 1))
-    val out = Bench.rerunSuspects(spark, Seq("q" -> bad), seeded,
-      "unused", log, cooldownSec = 0)
-    val r = out.head
+    val out = Bench.defend(spark, Seq("q" -> bad), seeded ++ outOfReach,
+      "unused", Map.empty, log, cooldownSec = 0)
+    val r = out.find(_.name == "q").get
     assert(r.okTimes == Seq(5.0) && r.okPasses == Seq(0))
     assert(r.bonusErr.exists(_.contains("still under load")))
   }
@@ -266,24 +287,6 @@ class BenchSpec extends SparkSpec {
     val toks = probesPart.split(",")
     assert(toks.nonEmpty && toks.forall(_.matches(raw"\d+\.\d+")),
       s"locale-unsafe probe rendering: $probesPart")
-  }
-
-  test("parseBenchArtifact recovers per-query mins from a truncated driver tail") {
-    // the committed artifact: a wrapper whose tail starts MID-map (the
-    // common case — the min map is bigger than the 2 KB capture) with a
-    // name-truncated first value and a queries_max remnant before it
-    val wrapper = """{ "n": 18, "rc": 0, "tail": "x\":9.9,\"dedup_minhash\":6.3815,\"dedup_ngram\":2.2177,\"probes\":[0.1,0.2],\"load_suspect\":[],\"failed\":0,\"flaky\":0,\"total_sec\":213.2}" }"""
-    val parsed = Bench.parseBenchArtifact(wrapper)
-    assert(parsed == Map("dedup_minhash" -> 6.3815, "dedup_ngram" -> 2.2177),
-      parsed.toString)
-    // a tail that still carries the map opener: queries_max remnants
-    // BEFORE it are excluded outright, reps_ok ints never match
-    val full = """{"tail": "\"reps_ok\":{\"a\":4},\"queries_max\":{\"a\":9.0000},\"queries\":{\"a\":1.5000,\"b\":2.0000},\"probes\":[0.1],\"total_sec\":3.5}"}"""
-    assert(Bench.parseBenchArtifact(full) == Map("a" -> 1.5, "b" -> 2.0))
-    // a raw (unwrapped) bench line parses too
-    val raw = Bench.render(
-      Seq(Bench.QueryResult("q", Seq(1.25), Seq(0), None, 1)), 1, "sf")
-    assert(Bench.parseBenchArtifact(raw) == Map("q" -> 1.25))
   }
 
   test("historyBands takes the per-query median of the recent rounds") {
@@ -341,7 +344,8 @@ class BenchSpec extends SparkSpec {
         new java.io.File(dir, name).toPath, body)
     // r1: the driver tail lost the alphabetically-early agg_a entry to
     // truncation; the full archive carries it. r2: tail only (a round
-    // predating the archive). r3: full only.
+    // predating the archive). r3: full only. History reads archives
+    // only: a tail is never parsed.
     put("BENCH_r01.json",
       """{"tail": "\"queries\":{\"zz\":2.0000},\"probes\":[0.1],\"total_sec\":9.0}"}""")
     put("BENCH_full_r01.json",
@@ -352,16 +356,23 @@ class BenchSpec extends SparkSpec {
       """{"queries":{"agg_a":1.2000,"zz":2.2000},"probes":[0.1]}""")
     put("BENCH_full.json", // UNstamped current artifact: never history
       """{"queries":{"agg_a":9.9000},"probes":[]}""")
+    put("BENCH_full_r03_dev.json", // side-written dev run: never history
+      """{"queries":{"agg_a":9.9000},"probes":[]}""")
     put("notes.txt", "ignored")
     val arts = Bench.loadRoundArtifacts(dir).map(Bench.parseBenchArtifact)
-    assert(arts.size == 3, arts.toString)
-    assert(arts(0) == Map("agg_a" -> 1.0, "zz" -> 2.0), arts(0).toString)
-    assert(arts(1) == Map("zz" -> 2.1), arts(1).toString)
-    assert(arts(2) == Map("agg_a" -> 1.2, "zz" -> 2.2), arts(2).toString)
+    assert(arts == Seq(Map("agg_a" -> 1.0, "zz" -> 2.0),
+      Map("agg_a" -> 1.2, "zz" -> 2.2)), arts.toString)
     // with full archives in history, the early query gets a band the
     // tails alone could never give it
     val raw = Bench.loadRoundArtifacts(dir)
     assert(Bench.historyBands(raw, minRounds = 2).contains("agg_a"))
+    // only the min map is read: queries_max and reps_ok never shadow a
+    // min, and a rendered artifact round-trips
+    val full = """{"reps_ok":{"a":4},"queries_max":{"a":9.0000},"queries":{"a":1.5000,"b":2.0000},"probes":[0.1],"total_sec":3.5}"""
+    assert(Bench.parseBenchArtifact(full) == Map("a" -> 1.5, "b" -> 2.0))
+    val rendered = Bench.render(
+      Seq(Bench.QueryResult("q", Seq(1.25), Seq(0), None, 1)), 1, "sf")
+    assert(Bench.parseBenchArtifact(rendered) == Map("q" -> 1.25))
     // the archive stamp counts DRIVER TAILS only: an in-round dev
     // archive (r3 full, above) must not bump the end-of-round run to
     // the wrong (next) round — newest tail is r2, so this run is r3
@@ -369,44 +380,6 @@ class BenchSpec extends SparkSpec {
     assert(Bench.stampRound(
       java.nio.file.Files.createTempDirectory("empty").toFile) == 1)
     dir.listFiles().foreach(_.delete()); dir.delete()
-  }
-
-  test("driftWatch flags sustained creep the re-basing band misses; report-only") {
-    def art(m: (String, Double)*): String =
-      "\"queries\":{" + m.map { case (k, v) => s""""$k":$v""" }
-        .mkString(",") + "},\"probes\":[]"
-    // q crept 1.0 -> 1.6 -> 1.7 across rounds; current min 1.8. Each
-    // step is within the 1.5x window band of its recent median, so
-    // windowSuspects never fires — but current AND the last two
-    // committed appearances all exceed 1.5x the best-ever 1.0.
-    val hist = Seq(art("q" -> 1.0, "ok" -> 1.0), art("q" -> 1.6, "ok" -> 1.0),
-      art("q" -> 1.7, "ok" -> 1.61))
-    val results = Seq(
-      Bench.QueryResult("q", Seq(1.8), Seq(0), None, 1),
-      // ok's current min is high but its PREVIOUS appearance (1.0) was
-      // at the best -> not sustained -> not flagged
-      Bench.QueryResult("ok", Seq(1.8), Seq(0), None, 1),
-      // no history -> never flagged
-      Bench.QueryResult("new", Seq(9.0), Seq(0), None, 1))
-    val drift = Bench.driftWatch(hist, results)
-    assert(drift == Map("q" -> 1.0), drift.toString)
-    // an ancient PRE-PROBE artifact (the r5-r7 no-flush methodology:
-    // no "probes" log) carrying a lower floor is ignored — its mins
-    // are non-comparable and would pin a permanent false flag
-    val preProbe = """"queries":{"q":0.1,"ok":0.1}"""
-    val drift2 = Bench.driftWatch(preProbe +: hist, results)
-    assert(drift2 == Map("q" -> 1.0), drift2.toString)
-    // a recovered query (current min back at best) clears
-    val rec = Bench.driftWatch(hist,
-      Seq(Bench.QueryResult("q", Seq(1.0), Seq(0), None, 1)))
-    assert(rec.isEmpty, rec.toString)
-    // the annotation rides the artifact, after "probes" so it can
-    // never bleed into parseBenchArtifact's min-map region
-    val line = Bench.render(results, 1, "sf", drift = drift)
-    assert(line.contains(""""drift_watch":{"q":1.0000}"""), line)
-    assert(line.indexOf("\"drift_watch\"") > line.indexOf("\"probes\""))
-    val parsed = Bench.parseBenchArtifact(line)
-    assert(parsed.get("q").contains(1.8), parsed.toString)
   }
 
   test("windowSuspects flags mins outside the committed band; rerun can clear the flag") {
@@ -420,8 +393,8 @@ class BenchSpec extends SparkSpec {
     // window's sample lowers the min and the flag clears itself
     val fast = (s: SparkSession, _: String) => s.range(3).toDF("id")
     val log = new Bench.ProbeLog
-    val out = Bench.rerunWindowSuspects(spark, Seq("slow" -> fast),
-      seeded, "unused", bands, factor = 1.5, log = log)
+    val out = Bench.defend(spark, Seq("slow" -> fast),
+      seeded ++ outOfReach.take(4), "unused", bands, log, cooldownSec = 0)
     val r = out.find(_.name == "slow").get
     assert(r.okReps == 3 && r.okTimes.min < 4.5, r.okTimes.toString)
     assert(Bench.windowSuspects(out, bands).isEmpty)
@@ -440,10 +413,12 @@ class BenchSpec extends SparkSpec {
     val bands = Map("stuck" -> 0.01)
     val seeded = Seq(Bench.QueryResult("stuck", Seq(0.3), Seq(0), None, 1))
     val log = new Bench.ProbeLog
-    val out = Bench.rerunWindowSuspects(spark, Seq("stuck" -> slowFn),
-      seeded, "unused", bands, factor = 1.5, log = log, passes = 2)
+    val out = Bench.defend(spark, Seq("stuck" -> slowFn),
+      seeded ++ outOfReach, "unused", bands, log, cooldownSec = 0)
+    val stuck = out.find(_.name == "stuck").get
     // two passes ran (bracketing probes) and added samples, all >= 0.3s
-    assert(out.head.okReps == 3, out.head.okTimes.toString)
+    assert(stuck.okReps == 3, stuck.okTimes.toString)
+    assert(log.times.size == 4)
     val line = Bench.render(out, 1, "sf", log.times, bands)
     assert(line.contains(""""window_suspect":["stuck"]"""), line)
     assert(line.contains(""""window_band":{"stuck":0.0100}"""), line)
@@ -452,6 +427,30 @@ class BenchSpec extends SparkSpec {
     // tail-safe: the annotation sits after the min map
     assert(line.lastIndexOf("\"window_suspect\":") >
       line.lastIndexOf("\"queries\":"), line)
+  }
+
+  test("the stdout summary line stays within 1 KB for every SparkEntry query") {
+    // all SparkEntry query names, 67 load suspects (r16's count) and 5
+    // window suspects: names alone would pass 1 KB, counts do not
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val probes = Seq(0.1, 0.1, 0.9) // pass 0 clean, pass 1 hot
+    val results = names.zipWithIndex.map { case (n, i) =>
+      Bench.QueryResult(n, Seq(1.2345678901234 + i),
+        Seq(if (i < 67) 1 else 0), None, 3)
+    }
+    val bands = names.slice(67, 72).map(_ -> 0.001).toMap
+    val line = Bench.renderCompact(results, 3, "/srv/graft/testdata/sf0.1",
+      "32", probes, bands)
+    assert(line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= 1024,
+      s"${line.length} bytes: $line")
+    val spark0 = spark
+    import spark0.implicits._
+    val parsed = spark.read.json(Seq(line).toDS).collect()(0)
+    assert(parsed.getAs[Long]("load_suspects") == 67L)
+    assert(parsed.getAs[Long]("window_suspects") == 5L)
+    assert(parsed.getAs[Long]("failed") == 0L && parsed.getAs[Long]("flaky") == 0L)
+    assert(parsed.getAs[Long]("reps") == 3L && parsed.getAs[String]("sf").endsWith("sf0.1"))
+    assert(!line.contains("\"queries\""), line)
   }
 
   test("warmup discovers tables by listing the SF dir instead of a hardcoded list") {

@@ -1352,9 +1352,12 @@ class StreamingSpec extends SparkSpec {
     val pKey = "spark.sql.shuffle.partitions"
     val rKey = "spark.sql.streaming.minBatchesToRetain"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val saved = Seq(pKey, rKey, nKey).map(k => k -> spark.conf.getOption(k))
+    val saved = Seq(pKey, rKey, nKey).map(k => k -> spark.conf.getAll.get(k))
     def current(): Seq[Option[String]] =
       Seq(pKey, rKey, nKey).map(spark.conf.getOption)
+    // an unset key must stay UNSET (getOption would read its default)
+    def explicitlySet(): Seq[String] =
+      Seq(rKey, nKey).filter(spark.conf.getAll.contains)
     try {
       spark.conf.set(pKey, "7")
       spark.conf.unset(rKey)
@@ -1367,6 +1370,7 @@ class StreamingSpec extends SparkSpec {
       assert(seen == Seq(Some("2"), Some("1"), Some("false")),
         s"conf at query start: $seen")
       assert(current() == before, s"after replay: ${current()}")
+      assert(explicitlySet().isEmpty, s"left set after replay: ${explicitlySet()}")
 
       val boom = intercept[IllegalStateException] {
         graft.streaming.Replay.replayTo(spark, Seq(Seq(1L))) { _ =>
@@ -1375,6 +1379,8 @@ class StreamingSpec extends SparkSpec {
       }
       assert(boom.getMessage == "start failed")
       assert(current() == before, s"after a failed start: ${current()}")
+      assert(explicitlySet().isEmpty,
+        s"left set after a failed start: ${explicitlySet()}")
     } finally saved.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
