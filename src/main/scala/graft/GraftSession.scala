@@ -42,4 +42,45 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS); surface as long nanos
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+
+  /** [[builder]] for the CLI and server mains, sized by `GRAFT_MASTER`,
+    * `GRAFT_SHUFFLE_PARTITIONS` and `GRAFT_MAX_RESULT_SIZE` (results
+    * stream partition-at-a-time, so that cap covers one partition).
+    */
+  def fromEnv(appName: String): SparkSession = {
+    val spark = builder(
+        sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
+        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
+      .appName(appName)
+      .config("spark.driver.maxResultSize",
+        sys.env.getOrElse("GRAFT_MAX_RESULT_SIZE", "1g"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private val children = new java.util.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[Map[String, String], SparkSession]]()
+
+  /** The one way to run work under conf that differs from the caller's:
+    * a `newSession()` child whose runtime conf is the caller's set keys
+    * plus `overrides`; the caller's conf is never written. One child per
+    * `(caller, overrides)`, held weakly by the caller and reused, since
+    * a session that starts a stream adds a listener to the context's bus
+    * that is never removed (five streams on five fresh sessions: 5 → 10
+    * listeners). Each call mirrors the caller's differing and removed
+    * keys onto the child (shared keys, static ones included, are left
+    * alone): sinks read `graft.sink.*` from their batch's session.
+    */
+  def scoped(spark: SparkSession, overrides: Map[String, String]): SparkSession =
+    children.synchronized {
+      val child = children
+        .computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
+        .getOrElseUpdate(overrides, spark.newSession())
+      val want = spark.conf.getAll ++ overrides
+      val have = child.conf.getAll
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) child.conf.set(k, v) }
+      have.keys.foreach(k => if (!want.contains(k)) child.conf.unset(k))
+      child
+    }
 }

@@ -7,6 +7,13 @@ package graft.core
 final case class DbException(code: String, detail: String)
   extends RuntimeException(s"$code: $detail")
 
+/** The Spark session died: every further line would fail with the same
+  * misleading per-line code, so evaluation terminates instead of looping
+  * on a dead session.
+  */
+final class FatalSessionError(cause: Throwable)
+  extends RuntimeException(s"fatal: Spark session stopped: ${cause.getMessage}", cause)
+
 object DbError {
   def colExists(c: String)      = DbException("DBECOLEXISTS", s"column $c already exists")
   def colSelect(c: String)      = DbException("DBECOLSELECT", s"no such column $c")

@@ -354,6 +354,27 @@ final class Session(val engine: Engine) {
     */
   def dispose(): Unit = env.clear()
 
+  /** [[eval]] under the reference client's per-line error contract
+    * (client.c:88-104): lines go to `out`; the result is the error, if
+    * any — a [[DbException]]'s message, else `DBEFILE: …`. Only a
+    * stopped SparkContext is fatal ([[FatalSessionError]]).
+    */
+  def run(op: Op, out: String => Unit): Option[String] =
+    try { eval(op).foreach(out); None }
+    catch {
+      case e: DbException => Some(e.getMessage)
+      case scala.util.control.NonFatal(e) =>
+        if (spark.sparkContext.isStopped) throw new FatalSessionError(e)
+        Some(s"DBEFILE: ${e.getMessage}")
+    }
+
+  /** [[run]] for a script line; unparseable is `DBEPARSE: cannot parse`. */
+  def runLine(line: String, out: String => Unit): Option[String] =
+    Parser.parseLine(line) match {
+      case Some(op) => run(op, out)
+      case None     => Some(DbError.parse(line).getMessage)
+    }
+
   /** Evaluate one op; returns client-visible output lines (non-assign
     * forms stream results; assignments are silent). Output formats match
     * the reference client (client.c:44-128): ids one per line, values one

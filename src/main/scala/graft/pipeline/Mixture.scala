@@ -115,7 +115,7 @@ object Mixture {
     import spark.implicits._
     val targets = broadcast(epochsBp.toSeq.toDF("lang", "bp"))
     val scored = docs.select(col("doc_id").cast("long").as("doc_id"),
-      TextAnalysis.langPredExpr(col("text")).as("lang"),
+      TextAnalysis.langPredExpr(spark, col("text")).as("lang"),
       conv(substring(md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))),
         1, 15), 16, 10).cast("long").as("pri"))
     scored.join(targets, Seq("lang"))
@@ -142,7 +142,7 @@ object Mixture {
     import spark.implicits._
     val targets = broadcast(targetsBp.toSeq.toDF("lang", "bp"))
     val scored = docs.select(col("doc_id").cast("long").as("doc_id"),
-      TextAnalysis.langPredExpr(col("text")).as("lang"),
+      TextAnalysis.langPredExpr(spark, col("text")).as("lang"),
       conv(substring(md5(concat(lit(s"$seed:"), col("doc_id").cast("string"))),
         1, 15), 16, 10).cast("long").as("pri"))
     val quotas = scored.groupBy("lang").agg(count(lit(1)).as("n"))

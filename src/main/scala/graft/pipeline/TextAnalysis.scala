@@ -341,25 +341,22 @@ object TextAnalysis {
     * exactly once per row. The composable `occurrences`-arithmetic form
     * remains below as [[langPredExprComposable]]: it IS the semantics
     * (it mirrors the SQL oracles' replace-length arithmetic), and
-    * TextAnalysisSpec pins the native path equal to it. Falls back to
-    * the composable form in the (test-only) case of no active session
-    * to register against. The trailing coalesce reproduces the
+    * TextAnalysisSpec pins the native path equal to it. The expression
+    * is registered on `spark`, which must be the session of the
+    * DataFrame the column is used in: sessions do not share registered
+    * functions (a replay's stream runs on its own session, not the
+    * active one). The trailing coalesce reproduces the
     * composable chain's null-text behavior (null scores fall through
     * every `when` to the `otherwise`).
     */
-  def langPredExpr(text: Column): Column = {
-    import org.apache.spark.sql.SparkSession
-    SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.LangPred.register(s,
-          langOrder.map(l => l -> stopwords(l).toSeq))
-        val p = call_function(graft.functions.LangPred.name, paddedExpr(text))
-        // p is null on all-zero scores ("unknown") AND on null text,
-        // where the composable when-chain falls through to its
-        // `otherwise("fr")` — disambiguate on the cheap raw-null check
-        coalesce(p, when(text.isNull, lit("fr")).otherwise(lit("unknown")))
-      case None => langPredExprComposable(text)
-    }
+  def langPredExpr(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
+    graft.functions.LangPred.register(spark,
+      langOrder.map(l => l -> stopwords(l).toSeq))
+    val p = call_function(graft.functions.LangPred.name, paddedExpr(text))
+    // p is null on all-zero scores ("unknown") AND on null text,
+    // where the composable when-chain falls through to its
+    // `otherwise("fr")` — disambiguate on the cheap raw-null check
+    coalesce(p, when(text.isNull, lit("fr")).otherwise(lit("unknown")))
   }
 
   /** Reference form of [[langPredExpr]]: per-stopword replace-length
@@ -393,7 +390,8 @@ object TextAnalysis {
     * (en > es > de > fr > unknown at score 0).
     */
   def langId(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), langPredExpr(col("text")).as("lang_pred"))
+    docs.select(col("doc_id"),
+      langPredExpr(docs.sparkSession, col("text")).as("lang_pred"))
       .orderBy("doc_id")
 
   /** Corpus vocabulary: the `k` most frequent whitespace tokens with

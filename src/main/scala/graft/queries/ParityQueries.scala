@@ -62,18 +62,12 @@ object ParityQueries {
     * ([[graft.operators.SkewJoin.BucketsKey]]): the plan salts the left
     * side over 8 buckets and replicates the right, the result multiset is
     * identical — oracle-checked against the same SQL as join_hash. The
-    * knob is read at plan-build time, so it is restored before returning.
+    * knob rides a [[graft.GraftSession.scoped]] child, so the caller's
+    * conf never holds it.
     */
-  def joinSkew: Q = (s, d) => {
-    val key = graft.operators.SkewJoin.BucketsKey
-    val prior = s.conf.getOption(key) // user knob — restore, don't clobber
-    s.conf.set(key, "8")
-    try joinQ(HashJoin)(s, d)
-    finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def joinSkew: Q = (s, d) =>
+    joinQ(HashJoin)(graft.GraftSession.scoped(s,
+      Map(graft.operators.SkewJoin.BucketsKey -> "8")), d)
 
   // --- aggregates ---
 
@@ -186,30 +180,46 @@ object ParityQueries {
     if (kids != null) kids.foreach(registerCleanup)
   }
 
+  /** The script that creates ra, rb, rc and loads the reference CSV. */
+  private def refLoad(csv: String, rcType: String = "sorted"): String =
+    s"""create(ra,"unsorted")
+       |create(rb,"unsorted")
+       |create(rc,"$rcType")
+       |load("$csv")
+       |""".stripMargin
+
+  /** ra, rb, rc fetched at a full select of ra, as plans. */
+  private def fetchAll(engine: Engine): Seq[DataFrame] = {
+    val session = engine.newSession()
+    Seq("p=select(ra)", "a=fetch(ra,p)", "b=fetch(rb,p)", "c=fetch(rc,p)")
+      .foreach(l => session.eval(graft.lang.Parser.parseLine(l).get))
+    Seq("a", "b", "c").map(v => session.getVals(v).df)
+  }
+
+  private def zipped(vals: Seq[DataFrame]): DataFrame =
+    ColumnOps.tupleZip(vals, Seq("id"))
+      .select("v1", "v2", "v3").orderBy("v1", "v2", "v3")
+
+  /** `(v1,v2)` tuple lines emitted over the wire, as rows. */
+  private def tupleRows(s: SparkSession, lines: Seq[String]): DataFrame = {
+    import s.implicits._
+    lines.map { l =>
+      val p = l.stripPrefix("(").stripSuffix(")").split(',')
+      (p(0).trim.toInt, p(1).trim.toInt)
+    }.toDF("v1", "v2").orderBy("v1", "v2")
+  }
+
   def createLoad(s: SparkSession, d: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_load").toString
     val csv = writeRefCsv(s, d, tmp)
     val engine = new Engine(s, s"$tmp/db")
-    engine.execute(
-      s"""create(ra,"unsorted")
-         |create(rb,"unsorted")
-         |create(rc,"sorted")
-         |load("$csv")
-         |""".stripMargin)
-    val session = engine.newSession()
-    graft.lang.Parser.parseScript(
-      """p=select(ra)
-        |a=fetch(ra,p)
-        |b=fetch(rb,p)
-        |c=fetch(rc,p)
-        |""".stripMargin).toOption.get.foreach(session.eval)
-    val vals = Seq("a", "b", "c").map(v => session.getVals(v).df)
+    engine.execute(refLoad(csv))
+    val vals = fetchAll(engine)
     // the returned plans only READ the throwaway db; release the writer
     // lock now or every bench rep leaks an open lock-file channel
     engine.close()
     registerCleanup(new java.io.File(tmp))
-    ColumnOps.tupleZip(vals, Seq("id"))
-      .select("v1", "v2", "v3").orderBy("v1", "v2", "v3")
+    zipped(vals)
   }
 
   /** [[createLoad]] with the Engine forced into OBJECT-STORE mode
@@ -232,24 +242,10 @@ object ParityQueries {
     val vals =
       try {
         val e1 = new Engine(s, dbDir)
-        try e1.execute(
-          s"""create(ra,"unsorted")
-             |create(rb,"unsorted")
-             |create(rc,"sorted")
-             |load("$csv")
-             |""".stripMargin)
-        finally e1.close()
+        try e1.execute(refLoad(csv)) finally e1.close()
         val e2 = new Engine(s, dbDir) // reopen: lease takeover + catalog reload
-        try {
-          val session = e2.newSession()
-          graft.lang.Parser.parseScript(
-            """p=select(ra)
-              |a=fetch(ra,p)
-              |b=fetch(rb,p)
-              |c=fetch(rc,p)
-              |""".stripMargin).toOption.get.foreach(session.eval)
-          Seq("a", "b", "c").map(v => session.getVals(v).df)
-        } finally e2.close() // else a failure leaks the lease heartbeat + jvmHeld key
+        try fetchAll(e2)
+        finally e2.close() // else a failure leaks the lease heartbeat + jvmHeld key
       } finally sys.props.remove("graft.store.object")
     require(!new java.io.File(s"$dbDir/catalog.txt").exists(),
       "object mode must not write a rename-committed catalog.txt")
@@ -264,8 +260,7 @@ object ParityQueries {
     require(lease.length == 3 && lease(2) == "0",
       s"lease must be tombstoned on clean close, got: ${lease.mkString(",")}")
     registerCleanup(new java.io.File(tmp))
-    ColumnOps.tupleZip(vals, Seq("id"))
-      .select("v1", "v2", "v3").orderBy("v1", "v2", "v3")
+    zipped(vals)
   }
 
   /** The LOCK-FREE READER path under the oracle: a writer engine loads
@@ -281,28 +276,13 @@ object ParityQueries {
     val writer = new Engine(s, s"$tmp/db")
     val vals =
       try {
-        writer.execute(
-          s"""create(ra,"unsorted")
-             |create(rb,"unsorted")
-             |create(rc,"sorted")
-             |load("$csv")
-             |""".stripMargin)
+        writer.execute(refLoad(csv))
         // reader opens WHILE the writer still holds the lock
         val reader = new Engine(s, s"$tmp/db", readOnly = true)
-        try {
-          val session = reader.newSession()
-          graft.lang.Parser.parseScript(
-            """p=select(ra)
-              |a=fetch(ra,p)
-              |b=fetch(rb,p)
-              |c=fetch(rc,p)
-              |""".stripMargin).toOption.get.foreach(session.eval)
-          Seq("a", "b", "c").map(v => session.getVals(v).df)
-        } finally reader.close()
+        try fetchAll(reader) finally reader.close()
       } finally writer.close()
     registerCleanup(new java.io.File(tmp))
-    ColumnOps.tupleZip(vals, Seq("id"))
-      .select("v1", "v2", "v3").orderBy("v1", "v2", "v3")
+    zipped(vals)
   }
 
   /** Storage-reclaim under the oracle: the canonical load followed by a
@@ -323,12 +303,8 @@ object ParityQueries {
     val engine = new Engine(s, dbDir)
     val vals =
       try {
-        engine.execute(
-          s"""create(ra,"unsorted")
-             |create(rb,"unsorted")
-             |create(rc,"unsorted")
-             |load("$csv")
-             |u=select(rb,3)
+        engine.execute(refLoad(csv, "unsorted") +
+          """u=select(rb,3)
              |update(u,rb,0)
              |del=select(rb,5)
              |delete(del,ra,rb,rc)
@@ -349,18 +325,10 @@ object ParityQueries {
           s"exactly the live dirs must survive, got $after kept=${st.kept}")
         require(engine.vacuum(retainMs = 0L).deleted == 0,
           "second vacuum must find nothing")
-        val session = engine.newSession()
-        graft.lang.Parser.parseScript(
-          """p=select(ra)
-            |a=fetch(ra,p)
-            |b=fetch(rb,p)
-            |c=fetch(rc,p)
-            |""".stripMargin).toOption.get.foreach(session.eval)
-        Seq("a", "b", "c").map(v => session.getVals(v).df)
+        fetchAll(engine)
       } finally engine.close()
     registerCleanup(new java.io.File(tmp))
-    ColumnOps.tupleZip(vals, Seq("id"))
-      .select("v1", "v2", "v3").orderBy("v1", "v2", "v3")
+    zipped(vals)
   }
 
   // --- client/server topology: the same round-trip through a real TCP
@@ -389,15 +357,11 @@ object ParityQueries {
     val out = collection.mutable.Buffer[String]()
     try {
       val failed = graft.server.NetClient.run("127.0.0.1", port,
-        s"""create(ra,"unsorted")
-           |create(rb,"unsorted")
-           |create(rc,"sorted")
-           |load("$csv")
-           |p=select(rc,10,20)
+        (refLoad(csv) + """p=select(rc,10,20)
            |a=fetch(ra,p)
            |b=fetch(rb,p)
            |tuple(a,b)
-           |""".stripMargin.linesIterator,
+           |""".stripMargin).linesIterator,
         out += _,
         e => throw new IllegalStateException(s"server error: $e"),
         ship = false)
@@ -407,12 +371,7 @@ object ParityQueries {
       engine.close()
       registerCleanup(new java.io.File(tmp))
     }
-    val rows = out.toSeq.map { l =>
-      val p = l.stripPrefix("(").stripSuffix(")").split(',')
-      (p(0).trim.toInt, p(1).trim.toInt)
-    }
-    import s.implicits._
-    rows.toDF("v1", "v2").orderBy("v1", "v2")
+    tupleRows(s, out.toSeq)
   }
 
   /** [[serverTcp]] with the CLIENT-STREAMED load (the reference's
@@ -436,11 +395,7 @@ object ParityQueries {
       val err: String => Unit =
         e => throw new IllegalStateException(s"server error: $e")
       val f1 = graft.server.NetClient.run("127.0.0.1", port,
-        s"""create(ra,"unsorted")
-           |create(rb,"unsorted")
-           |create(rc,"sorted")
-           |load("$csv")
-           |""".stripMargin.linesIterator, _ => (), err)
+        refLoad(csv).linesIterator, _ => (), err)
       require(!f1, "server_tcp_load load script failed")
       java.nio.file.Files.delete(java.nio.file.Paths.get(csv))
       require(new java.io.File(s"$tmp/db").listFiles()
@@ -457,12 +412,7 @@ object ParityQueries {
       engine.close()
       registerCleanup(new java.io.File(tmp))
     }
-    val rows = out.toSeq.map { l =>
-      val p = l.stripPrefix("(").stripSuffix(")").split(',')
-      (p(0).trim.toInt, p(1).trim.toInt)
-    }
-    import s.implicits._
-    rows.toDF("v1", "v2").orderBy("v1", "v2")
+    tupleRows(s, out.toSeq)
   }
 
   // --- flagship: the reference's canonical join-aggregate

@@ -218,7 +218,7 @@ object PipelineQueries {
     docs.select(col("text"),
       TextAnalysis.tokenCount(col("text")).as("n_tokens"),
       TextAnalysis.keepExpr(col("text")).as("keep"),
-      TextAnalysis.langPredExpr(col("text")).as("lang_pred"))
+      TextAnalysis.langPredExpr(docs.sparkSession, col("text")).as("lang_pred"))
       .filter(col("keep") === 1 && col("lang_pred") === "en")
 
   private def corpusStats(df: DataFrame): DataFrame =
@@ -354,7 +354,7 @@ object PipelineQueries {
       .select(coalesce(col("ex"), lit(0)).as("ex"),
         coalesce(col("nk"), lit(0)).as("nk"),
         TextAnalysis.keepExpr(col("text")).as("kq"),
-        when(TextAnalysis.langPredExpr(col("text")) === "en", 1)
+        when(TextAnalysis.langPredExpr(s, col("text")) === "en", 1)
           .otherwise(0).as("ke"))
       .select(col("ex"), (col("ex") * (lit(1) - col("nk"))).as("nr"),
         col("kq"), col("ke"))
@@ -1378,7 +1378,7 @@ object PipelineQueries {
     // engine-independent
     val base = Tables.documents(s, d).select(
       coalesce(col("source"), lit("(unknown)")).as("source"),
-      TextAnalysis.langPredExpr(col("text")).as("lang_pred"),
+      TextAnalysis.langPredExpr(s, col("text")).as("lang_pred"),
       TextAnalysis.tokenCount(col("text")).cast("long").as("nt"))
     val cells = base.groupBy("source", "lang_pred")
       .agg(count(lit(1)).cast("long").as("n_docs"),

@@ -1,6 +1,5 @@
 package graft.server
 
-import org.apache.spark.sql.SparkSession
 import graft.core.Engine
 
 /** Standalone server binary — the reference's `./server` role
@@ -60,14 +59,7 @@ object ServerMain {
     val port = args.drop(1).find(!_.startsWith("-")).map(_.toInt).getOrElse(0)
     // shared engine session (GraftSession: join knobs, UTC, parquet
     // nanos) — the server serves the same plans bench/verify exercise
-    val spark = graft.GraftSession.builder(
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .appName("graft-server")
-      .config("spark.driver.maxResultSize",
-        sys.env.getOrElse("GRAFT_MAX_RESULT_SIZE", "1g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv("graft-server")
     val engine = new Engine(spark, dbDir, readOnly = readOnly)
     val server = new TcpServer(engine,
       port = port,

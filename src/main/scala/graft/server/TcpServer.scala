@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{LinkedBlockingQueue, RejectedExecutionException, ThreadPoolExecutor, TimeUnit}
 import scala.util.control.NonFatal
 
-import graft.core.{DbException, Engine}
+import graft.core.Engine
 import graft.lang.{Op, Parser}
 
 /** TCP server: the reference's client/server topology over the Spark
@@ -140,6 +140,7 @@ final class TcpServer(engine: Engine, port: Int = 0, threads: Int = 16,
       val out = new BufferedWriter(new OutputStreamWriter(sock.getOutputStream, UTF_8))
 
       def status(s: String): Unit = { out.write(s); out.newLine(); out.flush() }
+      def reply(err: Option[String]): Unit = status(err.fold("+OK")("-ERR " + _))
 
       // the reference's RPC_FILE arm (server.c:818-839): spool the
       // client-streamed CSV body under the dbdir, evaluate the load
@@ -167,13 +168,7 @@ final class TcpServer(engine: Engine, port: Int = 0, threads: Int = 16,
             throw new java.io.EOFException("connection closed after FILE frame")
           Parser.parseLine(opLine.trim) match {
             case Some(Op.Load(_)) =>
-              try { session.eval(Op.Load(spool.toString)); status("+OK") }
-              catch {
-                case e: DbException => status(s"-ERR ${e.getMessage}")
-                case NonFatal(e) => // same contract as the main dispatch
-                  if (session.engine.spark.sparkContext.isStopped) throw e
-                  status(s"-ERR DBEFILE: ${e.getMessage}")
-              }
+              reply(session.run(Op.Load(spool.toString), _ => ()))
             case _ => status(
               s"-ERR DBEPARSE: FILE frame must be followed by load(...), got: $opLine")
           }
@@ -201,24 +196,11 @@ final class TcpServer(engine: Engine, port: Int = 0, threads: Int = 16,
                 line = null
             }
           } else if (t.nonEmpty && !t.startsWith("#")) {
-            Parser.parseLine(t) match {
-              case Some(op) =>
-                try {
-                  session.eval(op).foreach { l =>
-                    out.write("|"); out.write(l); out.newLine()
-                  }
-                  status("+OK")
-                } catch {
-                  case e: DbException => status(s"-ERR ${e.getMessage}")
-                  case NonFatal(e) =>
-                    // same per-line contract as Cli.runScript: non-DBE
-                    // engine failures render as DBEFILE and the session
-                    // survives; a stopped SparkSession ends the service
-                    if (session.engine.spark.sparkContext.isStopped) throw e
-                    status(s"-ERR DBEFILE: ${e.getMessage}")
-                }
-              case None => status(s"-ERR DBEPARSE: cannot parse: $t")
-            }
+            // the per-line contract of Session.run: the session survives
+            // an error; a stopped SparkSession ends the service
+            reply(session.runLine(t, l => {
+              out.write("|"); out.write(l); out.newLine()
+            }))
           } else status("+OK") // blank / comment: acknowledged, no work
           if (line != null) line = in.readLine()
         }

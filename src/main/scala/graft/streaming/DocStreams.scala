@@ -74,7 +74,7 @@ object DocStreams {
       .reduce(_ + _)
     val flagged = docs.select(col("*"),
       TextAnalysis.keepExpr(col("text")).as("keep"),
-      TextAnalysis.langPredExpr(col("text")).as("lang_pred"),
+      TextAnalysis.langPredExpr(docs.sparkSession, col("text")).as("lang_pred"),
       piiTotal.cast("long").as("n_pii"))
       .filter(col("keep") === 1)
     if (dropPii) flagged.filter(col("n_pii") === 0L) else flagged
@@ -409,10 +409,9 @@ object DocStreams {
     * plus one or() per group — an order of magnitude below the
     * measured overflow — while pruning semantics are unchanged:
     * parquet evaluates each eq against the stats/column index/bloom
-    * individually either way. [[fpScanSession]]'s In-threshold ratchet
+    * individually either way. [[fpScanSession]]'s In threshold
     * (chunk size + 1) stays above the group size by construction. The
-    * group size is resolved on the CALLER's session in [[admissionJoin]]
-    * (the scan session inherits only creation-time conf).
+    * group size is resolved on the CALLER's session in [[admissionJoin]].
     */
   private[graft] def chunkPredicate(ch: Array[Array[Byte]],
       group: Int): org.apache.spark.sql.Column = {
@@ -543,16 +542,9 @@ object DocStreams {
       java.util.Arrays.compareUnsigned(a, b)
   }
 
-  // one SCAN SESSION per parent session (weak: dies with the parent) —
-  // see fpScanSession
-  private val scanSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.SparkSession]())
-
   /** The session [[admissionJoin]] builds its store scans on: a
-    * dedicated `newSession()` (same SparkContext, executors, and
-    * catalog metadata; its OWN SQLConf) whose parquet In-pushdown
-    * threshold is permanently raised above the chunk size, so each
+    * [[graft.GraftSession.scoped]] child of `spark` whose parquet
+    * In-pushdown threshold is raised above the chunk size, so each
     * ≤chunk `In` reaches parquet-mr as an or(eq...) tree — eq gets true
     * per-page boundary search against the column index, where an In
     * above the threshold is evaluated against the index as one min/max
@@ -560,39 +552,16 @@ object DocStreams {
     * a pushed 10k-key In decodes the ENTIRE store). Parquet reads the
     * threshold from the RELATION's session at execution, so scans built
     * here carry the raised value whatever session executes the plan —
-    * and the PARENT session's conf is never touched, so a concurrent
-    * query planned mid-admission can never inherit the raised
-    * threshold (the r18 scope caveat, closed). The threshold is only
-    * ever ratcheted UP (monotone max), so concurrent admissions with
+    * and `spark`'s conf is never touched, so a concurrent query planned
+    * mid-admission can never inherit the raised threshold. Each
+    * threshold gets its own child, so concurrent admissions with
     * different chunk sizes can never lower each other's bound.
     */
   private def fpScanSession(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
-    val s = scanSessions.synchronized {
-      var cur = scanSessions.get(spark)
-      if (cur == null) { cur = spark.newSession(); scanSessions.put(spark, cur) }
-      cur
-    }
-    val k = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val want = fpChunkKeys(spark) + 1
-    if (s.conf.getOption(k).flatMap(_.toIntOption).forall(_ < want))
-      s.conf.set(k, want.toString)
-    s
-  }
-
-  /** Legacy wrapper from when the threshold rode the PARENT session's
-    * conf: admission scans are now built on [[fpScanSession]], so the
-    * sink no longer needs this — only specs call it, and it still
-    * does what it says (raise-around-action on the GIVEN
-    * session, serialized so the save/restore can never race).
-    */
-  def withFpPushdown[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
-    scanSessions.synchronized {
-      val k = "spark.sql.parquet.pushdown.inFilterThreshold"
-      val old = spark.conf.get(k)
-      spark.conf.set(k, (fpChunkKeys(spark) + 1).toString)
-      try body finally spark.conf.set(k, old)
-    }
+      : org.apache.spark.sql.SparkSession =
+    graft.GraftSession.scoped(spark, Map(
+      "spark.sql.parquet.pushdown.inFilterThreshold" ->
+        (fpChunkKeys(spark) + 1).toString))
 
   /** True when `batchId` was already absorbed by a sink writing the
     * `_applied_` marker protocol: its own `_applied_<id>` marker

@@ -40,15 +40,16 @@ object Replay {
     * per element, fully processed before the next is admitted (so event
     * time and watermarks advance exactly as the caller laid the chunks
     * out) — run `transform`'s streaming query to completion, and return
-    * everything the append-mode sink saw.
+    * everything the append-mode sink saw, as a DataFrame on [[session]].
     */
-  def replay[A: Encoder](spark: SparkSession, batches: Seq[Seq[A]])(
+  def replay[A: Encoder](spark: SparkSession, batches: Seq[Seq[A]],
+                         noDataBatches: Boolean = false)(
       transform: DataFrame => DataFrame): DataFrame = {
     val name = "replay_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
-    replayTo(spark, batches)(in => transform(in).writeStream
+    replayTo(spark, batches, noDataBatches)(in => transform(in).writeStream
       .format("memory").queryName(name).outputMode("append").start())
-    spark.table(name)
+    session(spark, noDataBatches).table(name)
   }
 
   /** [[replay]] for SINK-side transforms (foreachBatch maintenance like
@@ -57,56 +58,16 @@ object Replay {
     * starting the query from the streamed DataFrame (so the caller owns
     * sink, checkpoint, and options). Returns after the last batch is
     * processed and the query stopped; the observable result is whatever
-    * the sink wrote (e.g. the persisted index).
+    * the sink wrote (e.g. the persisted index). The stream runs on
+    * [[session]].
     */
-  def replayTo[A: Encoder](spark: SparkSession, batches: Seq[Seq[A]])(
+  def replayTo[A: Encoder](spark: SparkSession, batches: Seq[Seq[A]],
+                           noDataBatches: Boolean = false)(
       start: DataFrame => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      session(spark, noDataBatches).sqlContext
     val in = MemoryStream[A]
-    // The shuffle-partition count is frozen into the checkpoint at query
-    // start (so `start` must run under it) and sizes the STATE STORE:
-    // every micro-batch maintains (partitions x stores-per-operator)
-    // state files regardless of how little state each holds. At replay
-    // scale (1e4-1e5 rows) the batch session's 32 partitions are pure
-    // per-batch overhead — a stream-stream join carries 4 stores, so 32
-    // partitions cost ~128 file maintenances per micro-batch. 2
-    // partitions keep the same semantics (state is hash-partitioned
-    // either way, and 2 still exercises multi-partition state) at a
-    // fraction of the fixed cost; a production deployment sizes this to
-    // its executor count, exactly like batch shuffle partitions.
-    val pKey = "spark.sql.shuffle.partitions"
-    val rKey = "spark.sql.streaming.minBatchesToRetain"
-    val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    // saved from getAll, which holds only EXPLICITLY set keys:
-    // getOption returns the registered default for an unset key, and
-    // restoring that would leave the key set after the replay
-    val prev = Seq(pKey, rKey, nKey).map(k => k -> spark.conf.getAll.get(k))
-    val q =
-      try {
-        spark.conf.set(pKey, "2")
-        // a bounded replay never restarts from its throwaway
-        // checkpoint — retaining the default 100 batches of state
-        // files is pure write amplification here
-        spark.conf.set(rKey, "1")
-        // no-data micro-batches exist for EAGER emission/eviction on a
-        // live stream (emit a closed window without waiting for the
-        // next data batch). A bounded replay's accumulated output SET
-        // is no-data-batch independent by construction: every feed
-        // that needs a flush ends with sentinel batches, and batch N
-        // runs under the watermark from batch N-1, so everything a
-        // no-data batch would emit is emitted by the next DATA batch
-        // instead — but each no-data batch costs a full plan + state
-        // commit cycle, up to doubling the per-entry batch count. It
-        // also makes foreachBatch sinks' batch ids the dense data-batch
-        // sequence 0..n-1 regardless of upstream watermarks.
-        // `graft.replay.noDataBatches=true` restores the live-stream
-        // behavior for latency-characterization harnesses.
-        spark.conf.set(nKey, spark.conf
-          .getOption("graft.replay.noDataBatches").getOrElse("false"))
-        start(in.toDF().repartition(FeedPartitions))
-      } finally prev.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      }
+    val q = start(in.toDF().repartition(FeedPartitions))
     try {
       batches.filter(_.nonEmpty).foreach { b =>
         in.addData(b)
@@ -114,6 +75,43 @@ object Replay {
       }
     } finally q.stop()
   }
+
+  /** `spark` scoped to the three replay-scale keys below.
+    *
+    * The shuffle-partition count is frozen into the checkpoint at query
+    * start and sizes the STATE STORE: every micro-batch maintains
+    * (partitions x stores-per-operator) state files regardless of how
+    * little state each holds. At replay scale (1e4-1e5 rows) the batch
+    * session's 32 partitions are pure per-batch overhead — a
+    * stream-stream join carries 4 stores, so 32 partitions cost ~128
+    * file maintenances per micro-batch. 2 partitions keep the same
+    * semantics (state is hash-partitioned either way, and 2 still
+    * exercises multi-partition state) at a fraction of the fixed cost;
+    * a production deployment sizes this to its executor count, exactly
+    * like batch shuffle partitions.
+    *
+    * A bounded replay never restarts from its throwaway checkpoint —
+    * retaining the default 100 batches of state files is pure write
+    * amplification here, so one is kept.
+    *
+    * No-data micro-batches exist for EAGER emission/eviction on a live
+    * stream (emit a closed window without waiting for the next data
+    * batch). A bounded replay's accumulated output SET is no-data-batch
+    * independent by construction: every feed that needs a flush ends
+    * with sentinel batches, and batch N runs under the watermark from
+    * batch N-1, so everything a no-data batch would emit is emitted by
+    * the next DATA batch instead — but each no-data batch costs a full
+    * plan + state commit cycle, up to doubling the per-entry batch
+    * count. It also makes foreachBatch sinks' batch ids the dense
+    * data-batch sequence 0..n-1 regardless of upstream watermarks.
+    * `noDataBatches = true` restores the live-stream behavior for
+    * latency-characterization harnesses.
+    */
+  private def session(spark: SparkSession, noDataBatches: Boolean): SparkSession =
+    graft.GraftSession.scoped(spark, Map(
+      "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.streaming.minBatchesToRetain" -> "1",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString))
 
   /** Split `rows` into `n` contiguous micro-batches preserving order. */
   def chunks[A](rows: Seq[A], n: Int): Seq[Seq[A]] = {

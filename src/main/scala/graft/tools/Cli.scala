@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.core.{DbException, Engine, Session}
-import graft.lang.Parser
+import graft.core.{Engine, FatalSessionError, Session}
 
 /** Script-runner CLI — the engine's user surface, playing the role of the
   * reference's client (/root/reference/src/client/client.c): feed it a
@@ -26,45 +24,19 @@ import graft.lang.Parser
   */
 object Cli {
 
-  /** The Spark session died mid-script: every further line would fail
-    * with the same misleading per-line code, so evaluation terminates
-    * instead of looping on a dead session (main exits 1).
-    */
-  final class FatalSessionError(cause: Throwable)
-    extends RuntimeException(s"fatal: Spark session stopped: ${cause.getMessage}", cause)
-
   /** Evaluate operator-language lines against a session with the
-    * reference client's error contract: each failed line emits exactly
-    * one `DBE*: detail` message via `err` and evaluation CONTINUES —
-    * errors are per-line state, not session state. Blank lines and
-    * `#` comments are skipped. Returns true iff any line failed.
-    * (Extracted from main so CliSpec can pin the error text and the
-    * error-then-continue semantics without forking a JVM.)
+    * reference client's error contract ([[Session.run]]): each failed
+    * line emits exactly one `DBE*: detail` message via `err` and
+    * evaluation CONTINUES. Blank lines and `#` comments are skipped.
+    * Returns true iff any line failed. (Extracted from main so CliSpec
+    * can pin the error text and the error-then-continue semantics
+    * without forking a JVM.)
     */
   def runScript(session: Session, lines: Iterator[String],
                 out: String => Unit, err: String => Unit): Boolean = {
     var failed = false
-    lines.foreach { line =>
-      val t = line.trim
-      if (t.nonEmpty && !t.startsWith("#")) {
-        Parser.parseLine(t) match {
-          case Some(op) =>
-            try session.eval(op).foreach(out)
-            catch {
-              case e: DbException =>
-                failed = true; err(e.getMessage)
-              case scala.util.control.NonFatal(e) =>
-                if (session.engine.spark.sparkContext.isStopped)
-                  throw new FatalSessionError(e)
-                // other engine/Spark failures are per-line (the reference
-                // renders RPC_ERROR and keeps the session, client.c:88-104)
-                failed = true; err(s"DBEFILE: ${e.getMessage}")
-            }
-          case None =>
-            failed = true; err(s"DBEPARSE: cannot parse: $t")
-        }
-      }
-    }
+    lines.map(_.trim).filter(t => t.nonEmpty && !t.startsWith("#"))
+      .foreach(t => session.runLine(t, out).foreach { m => failed = true; err(m) })
     failed
   }
 
@@ -111,16 +83,7 @@ object Cli {
     }
     // shared engine session (GraftSession: join knobs, UTC, parquet
     // nanos) — the CLI serves the same plans bench/verify exercise
-    val spark = graft.GraftSession.builder(
-        sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .appName("graft-cli")
-      // results stream partition-at-a-time (Session.emit), so this cap
-      // only needs to cover one partition, not the whole printed result
-      .config("spark.driver.maxResultSize",
-        sys.env.getOrElse("GRAFT_MAX_RESULT_SIZE", "1g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv("graft-cli")
     val engine = new Engine(spark, dbDir, readOnly = readOnly)
     val session = engine.newSession()
     var failed = false

@@ -209,6 +209,14 @@ class StreamingSpec extends SparkSpec {
         .select("doc_id", "keep").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(batch == Map(1L -> 1, 2L -> 0, 3L -> 1))
+      // a replay builds the transform on its own session, which must
+      // resolve the registered language-ID function as well
+      val replayed = graft.streaming.Replay.replay(spark,
+          Seq(Seq((1L, good, ts(1)), (2L, short, ts(2)), (3L, pii, ts(3))))) {
+          in => graft.streaming.DocStreams.qualityFilter(in.toDF("doc_id", "text", "ts"))
+        }.select("doc_id", "lang_pred", "n_pii").collect()
+        .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+      assert(replayed == rows)
     } finally q.stop()
   }
 
@@ -597,9 +605,7 @@ class StreamingSpec extends SparkSpec {
       try {
         val (df, arm) = graft.streaming.DocStreams.admissionJoin(
           batch, s"$dir/fp", 99L, fpBytes)
-        val ids = graft.streaming.DocStreams.withFpPushdown(spark)(
-          df.select("doc_id").collect().map(_.getLong(0)).toSet)
-        (ids, arm)
+        (df.select("doc_id").collect().map(_.getLong(0)).toSet, arm)
       } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
     }
     val want = Set(4L, 5L)
@@ -667,8 +673,7 @@ class StreamingSpec extends SparkSpec {
       try {
         val (df, arm) = graft.streaming.DocStreams.admissionJoin(
           batch, s"$dir/fp", 99L, Long.MaxValue / 2)
-        (graft.streaming.DocStreams.withFpPushdown(spark)(
-          df.select("doc_id").collect().map(_.getLong(0)).toSet), arm)
+        (df.select("doc_id").collect().map(_.getLong(0)).toSet, arm)
       } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
     }
     val want = Set(3L, 4L, 5L)
@@ -725,8 +730,7 @@ class StreamingSpec extends SparkSpec {
       try {
         val (df, arm) = graft.streaming.DocStreams.admissionJoin(
           batch, s"$dir/fp", 99L, Long.MaxValue / 2)
-        (graft.streaming.DocStreams.withFpPushdown(spark)(
-          df.select("doc_id").collect().map(_.getLong(0)).toSet), arm)
+        (df.select("doc_id").collect().map(_.getLong(0)).toSet, arm)
       } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
     }
     val want = Set(3L, 4L)
@@ -1330,47 +1334,51 @@ class StreamingSpec extends SparkSpec {
       // every real window, sentinel-2's batch runs under it and flushes
       Seq(ev(-1, -1, 10000)),
       Seq(ev(-1, -2, 20000)))
-    def run(): Set[(Long, Long, Long, Long)] =
-      graft.streaming.Replay.replay(spark, batches) { in =>
+    def run(noDataBatches: Boolean): Set[(Long, Long, Long, Long)] =
+      graft.streaming.Replay.replay(spark, batches, noDataBatches) { in =>
         EventStreams.windowedStats(in, "10 minutes", "5 minutes")
       }.filter(col("user_id") >= 0)
         .select("user_id", "w_start", "n_events", "cents").collect()
         .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
           r.getLong(2), r.getLong(3))).toSet
-    val lean = run()
-    spark.conf.set("graft.replay.noDataBatches", "true")
-    val live = try run()
-               finally spark.conf.unset("graft.replay.noDataBatches")
+    val lean = run(noDataBatches = false)
+    val live = run(noDataBatches = true)
     assert(lean == live, s"no-data-batch setting changed the output: " +
       s"lean=$lean live=$live")
     assert(lean.nonEmpty && lean.map(_._1) == Set(1L, 2L), s"got $lean")
   }
 
-  test("Replay: replay-scale conf applies at query start and is restored, also when start throws") {
+  test("Replay: replay-scale conf rides a reused replay session, never the caller's") {
     val spark0 = spark
     import spark0.implicits._
     val pKey = "spark.sql.shuffle.partitions"
     val rKey = "spark.sql.streaming.minBatchesToRetain"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val saved = Seq(pKey, rKey, nKey).map(k => k -> spark.conf.getAll.get(k))
-    def current(): Seq[Option[String]] =
-      Seq(pKey, rKey, nKey).map(spark.conf.getOption)
-    // an unset key must stay UNSET (getOption would read its default)
-    def explicitlySet(): Seq[String] =
-      Seq(rKey, nKey).filter(spark.conf.getAll.contains)
+    val gKey = "graft.test.mirrored"
+    def conf(s: org.apache.spark.sql.SparkSession): Seq[Option[String]] =
+      Seq(pKey, rKey, nKey, gKey).map(s.conf.getOption)
+    spark.conf.set(gKey, "on")
     try {
-      spark.conf.set(pKey, "7")
-      spark.conf.unset(rKey)
-      spark.conf.unset(nKey)
-      val before = current()
-      var seen = Seq.empty[Option[String]]
-      val out = graft.streaming.Replay.replay(spark,
-        Seq(Seq(1L, 2L), Seq(3L))) { in => seen = current(); in }
+      val before = spark.conf.getAll
+      var callerAtStart = Map.empty[String, String]
+      var replayAtStart = Seq.empty[Option[String]]
+      def replayed(): org.apache.spark.sql.DataFrame =
+        graft.streaming.Replay.replay(spark, Seq(Seq(1L, 2L), Seq(3L))) { in =>
+          callerAtStart = spark.conf.getAll
+          replayAtStart = conf(in.sparkSession)
+          in
+        }
+      val out = replayed()
       assert(out.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-      assert(seen == Seq(Some("2"), Some("1"), Some("false")),
-        s"conf at query start: $seen")
-      assert(current() == before, s"after replay: ${current()}")
-      assert(explicitlySet().isEmpty, s"left set after replay: ${explicitlySet()}")
+      // a query another thread plans on the caller mid-start sees none
+      // of the replay's keys
+      assert(callerAtStart == before, "caller conf changed while the stream started: " +
+        (callerAtStart.toSet diff before.toSet))
+      // the stream's own session: the three replay keys plus the
+      // caller's graft.* key, which foreachBatch sinks read
+      assert(replayAtStart == Seq(Some("2"), Some("1"), Some("false"), Some("on")),
+        s"replay session conf at query start: $replayAtStart")
+      assert(spark.conf.getAll == before)
 
       val boom = intercept[IllegalStateException] {
         graft.streaming.Replay.replayTo(spark, Seq(Seq(1L))) { _ =>
@@ -1378,11 +1386,11 @@ class StreamingSpec extends SparkSpec {
         }
       }
       assert(boom.getMessage == "start failed")
-      assert(current() == before, s"after a failed start: ${current()}")
-      assert(explicitlySet().isEmpty,
-        s"left set after a failed start: ${explicitlySet()}")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
+      assert(spark.conf.getAll == before, "caller conf changed by a failed start")
+      // one reused replay session per caller: a fresh session per replay
+      // would leak a streaming listener per replay
+      assert(replayed().sparkSession eq out.sparkSession)
+      assert(!(out.sparkSession eq spark))
+    } finally spark.conf.unset(gKey)
   }
 }

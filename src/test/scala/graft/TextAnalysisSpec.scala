@@ -272,7 +272,7 @@ class TextAnalysisSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val both = df.select(col("doc_id"),
-        TextAnalysis.langPredExpr(col("text")).as("fast"),
+        TextAnalysis.langPredExpr(spark, col("text")).as("fast"),
         TextAnalysis.langPredExprComposable(col("text")).as("ref"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     for ((id, fast, ref) <- both)
@@ -280,7 +280,7 @@ class TextAnalysisSpec extends SparkSpec {
     // and over the real driver corpus, row for row
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val agree = corpus.select(
-        TextAnalysis.langPredExpr(col("text")) ===
+        TextAnalysis.langPredExpr(spark, col("text")) ===
           TextAnalysis.langPredExprComposable(col("text")))
       .collect().forall(_.getBoolean(0))
     assert(agree, "native and composable lang-id diverge on the corpus")
