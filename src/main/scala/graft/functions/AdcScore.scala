@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Native.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType}
 
@@ -42,6 +42,8 @@ case class IntArrayPack8(child: Expression) extends UnaryExpression {
 object IntArrayPack8 {
   val name = "graft_pack8"
 
+  def apply(codes: Column): Column = column(IntArrayPack8(expr(codes)))
+
   /** Shared by interpreted and generated code. */
   def pack(a: ArrayData): Array[Byte] = {
     val n = a.numElements()
@@ -60,17 +62,6 @@ object IntArrayPack8 {
       i += 1
     }
     out
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(classOf[IntArrayPack8].getName, name),
-        (children: Seq[Expression]) => IntArrayPack8(children.head))
-    }
   }
 }
 
@@ -119,6 +110,9 @@ case class AdcScore(left: Expression, right: Expression)
 object AdcScore {
   val name = "graft_adc"
 
+  def apply(codes: Column, tbl: Column): Column =
+    column(AdcScore(expr(codes), expr(tbl)))
+
   /** Shared by interpreted and generated code (codegen calls it
     * statically — keep the signature stable).
     */
@@ -146,16 +140,5 @@ object AdcScore {
       s += 1
     }
     acc
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(classOf[AdcScore].getName, name),
-        (children: Seq[Expression]) => AdcScore(children(0), children(1)))
-    }
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Native.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -94,6 +94,9 @@ case class CodebookArgmin(first: Expression, second: Expression,
 object CodebookArgmin {
   val name = "graft_cb_argmin"
 
+  def apply(q: Column, cents: Column, cn2: Column): Column =
+    column(CodebookArgmin(expr(q), expr(cents), expr(cn2)))
+
   /** Shared by interpreted and generated code. */
   def argmin(q: ArrayData, cents: ArrayData, cn2: ArrayData): Int = {
     val dim = q.numElements()
@@ -120,17 +123,6 @@ object CodebookArgmin {
       i += 1
     }
     best
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(CodebookArgmin.getClass.getName, name),
-        (c: Seq[Expression]) => CodebookArgmin(c(0), c(1), c(2)))
-    }
   }
 }
 
@@ -173,6 +165,9 @@ case class CodebookTopN(first: Expression, second: Expression,
 
 object CodebookTopN {
   val name = "graft_cb_topn"
+
+  def apply(q: Column, cents: Column, cn2: Column, n: Int): Column =
+    column(CodebookTopN(expr(q), expr(cents), expr(cn2), n))
 
   /** Shared by interpreted and generated code. */
   def topn(q: ArrayData, cents: ArrayData, cn2: ArrayData,
@@ -217,22 +212,6 @@ object CodebookTopN {
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
       java.util.Arrays.copyOf(bufPos, filled))
   }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(CodebookTopN.getClass.getName, name),
-        (c: Seq[Expression]) => c(3) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) =>
-            CodebookTopN(c(0), c(1), c(2), v)
-          case other => throw litErr(name,
-            s"top-n count must be an int literal, got $other")
-        })
-    }
-  }
 }
 
 /** All m PQ sub-codes of one vector in a single pass: for each of the
@@ -276,6 +255,9 @@ case class PqEncodeCodes(first: Expression, second: Expression,
 object PqEncodeCodes {
   val name = "graft_pq_encode"
 
+  def apply(q: Column, codebook: Column, cn2: Column, m: Int): Column =
+    column(PqEncodeCodes(expr(q), expr(codebook), expr(cn2), m))
+
   /** Shared by interpreted and generated code. */
   def encode(q: ArrayData, cb: ArrayData, cn2: ArrayData,
              m: Int): ArrayData = {
@@ -315,22 +297,6 @@ object PqEncodeCodes {
     }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(PqEncodeCodes.getClass.getName, name),
-        (c: Seq[Expression]) => c(3) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) =>
-            PqEncodeCodes(c(0), c(1), c(2), v)
-          case other => throw litErr(name,
-            s"subspace count must be an int literal, got $other")
-        })
-    }
-  }
 }
 
 /** One flat ADC lookup table per QUERY vector in a single pass:
@@ -369,6 +335,9 @@ case class PqQueryTable(left: Expression, right: Expression, m: Int)
 object PqQueryTable {
   val name = "graft_pq_qtable"
 
+  def apply(q: Column, codebook: Column, m: Int): Column =
+    column(PqQueryTable(expr(q), expr(codebook), m))
+
   /** Shared by interpreted and generated code. */
   def table(q: ArrayData, cb: ArrayData, m: Int): ArrayData = {
     val dim = q.numElements()
@@ -399,21 +368,5 @@ object PqQueryTable {
       s += 1
     }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(PqQueryTable.getClass.getName, name),
-        (c: Seq[Expression]) => c(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) =>
-            PqQueryTable(c(0), c(1), v)
-          case other => throw litErr(name,
-            s"subspace count must be an int literal, got $other")
-        })
-    }
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Native.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType, LongType}
 
@@ -67,6 +67,8 @@ case class FloatArrayQuantize8(child: Expression) extends UnaryExpression {
 object FloatArrayQuantize8 {
   val name = "graft_q8"
 
+  def apply(e: Column): Column = column(FloatArrayQuantize8(expr(e)))
+
   /** Shared by interpreted and generated code (codegen calls it
     * statically — keep the signature stable).
     */
@@ -96,21 +98,6 @@ object FloatArrayQuantize8 {
       }
     }
     out
-  }
-
-  /** Idempotently register `graft_q8` in the session's function
-    * registry so `call_function("graft_q8", e)` resolves to this
-    * expression.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(classOf[FloatArrayQuantize8].getName, name),
-        (children: Seq[Expression]) => FloatArrayQuantize8(children.head))
-    }
   }
 }
 
@@ -170,6 +157,8 @@ case class ByteArrayDot(left: Expression, right: Expression)
 object ByteArrayDot {
   val name = "graft_dot8"
 
+  def apply(a: Column, b: Column): Column = column(ByteArrayDot(expr(a), expr(b)))
+
   /** Shared by interpreted and generated code (codegen calls it
     * statically — keep the signature stable).
     */
@@ -177,18 +166,4 @@ object ByteArrayDot {
     new IllegalArgumentException(
       s"$name: packed vector lengths differ ($a vs $b) — upstream " +
         "quantization ran over mismatched dimensions")
-
-  /** Idempotently register `graft_dot8` in the session's function
-    * registry.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(classOf[ByteArrayDot].getName, name),
-        (children: Seq[Expression]) => ByteArrayDot(children(0), children(1)))
-    }
-  }
 }

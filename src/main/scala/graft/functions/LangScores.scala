@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Native.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -82,6 +82,12 @@ case class LangPred(child: Expression, groups: Seq[(String, Seq[String])])
 object LangPred {
   val name = "graft_lang_pred"
 
+  /** `groups` is the (label, stopwords) language table — a constant of
+    * the caller, not data.
+    */
+  def apply(text: Column, groups: Seq[(String, Seq[String])]): Column =
+    column(LangPred(expr(text), groups))
+
   /** Scoring + argmax, shared by interpreted and generated code (codegen
     * calls it statically — keep the signature stable). Non-overlapping
     * counts: after a match the scan resumes past it, exactly the
@@ -109,20 +115,5 @@ object LangPred {
       g += 1
     }
     if (bestIdx < 0) null else labels(bestIdx)
-  }
-
-  /** Idempotently register a `graft_lang_pred` builder bound to the given
-    * (label, stopwords) groups — the language table is a constant of the
-    * caller, not data.
-    */
-  def register(spark: SparkSession, groups: Seq[(String, Seq[String])]): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(classOf[LangPred].getName, name),
-        (children: Seq[Expression]) => LangPred(children.head, groups))
-    }
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Native.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -89,6 +89,8 @@ case class LongArrayDot(left: Expression, right: Expression)
 object LongArrayDot {
   val name = "graft_dot"
 
+  def apply(a: Column, b: Column): Column = column(LongArrayDot(expr(a), expr(b)))
+
   /** Shared by interpreted and generated code (codegen calls it
     * statically — keep the signature stable).
     */
@@ -101,18 +103,4 @@ object LongArrayDot {
     new IllegalArgumentException(
       s"$name: vector dimensions differ ($a vs $b) — upstream " +
         "quantization or weight table built for the wrong dimension")
-
-  /** Idempotently register `graft_dot` in the session's function registry
-    * so `call_function("graft_dot", a, b)` resolves to this expression.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(classOf[LongArrayDot].getName, name),
-        (children: Seq[Expression]) => LongArrayDot(children(0), children(1)))
-    }
-  }
 }

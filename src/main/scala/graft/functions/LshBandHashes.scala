@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Native.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** All banded random-hyperplane signatures of one vector in a single
   * pass: `bands` hashes of `r` sign bits each over a flat ±1 weight
@@ -59,6 +59,9 @@ case class LshBandHashes(left: Expression, right: Expression,
 object LshBandHashes {
   val name = "graft_lsh_bands"
 
+  def apply(q: Column, weights: Column, bands: Int, r: Int): Column =
+    column(LshBandHashes(expr(q), expr(weights), bands, r))
+
   /** Shared by interpreted and generated code. */
   def hashes(q: ArrayData, w: ArrayData, bands: Int, r: Int): ArrayData = {
     val dim = q.numElements()
@@ -81,21 +84,5 @@ object LshBandHashes {
       pl += 1
     }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(LshBandHashes.getClass.getName, name),
-        (c: Seq[Expression]) => (c(2), c(3)) match {
-          case (Literal(b: Int, IntegerType), Literal(rr: Int, IntegerType)) =>
-            LshBandHashes(c(0), c(1), b, rr)
-          case other => throw new IllegalArgumentException(
-            s"$name: bands and r must be int literals, got $other")
-        })
-    }
   }
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.Native.{column, expr}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Buffer: the k DISTINCT values with the smallest (priority, value)
@@ -46,8 +46,6 @@ final class BottomK(val k: Int) {
   * `md5("<seed>:<value>")` — engine-portable (any SQL engine
   * reproduces it), which is what makes the `sample_reservoir` driver
   * query oracle-exact rather than spec-only.
-  *
-  * Registered as `graft_reservoir(col, k, seed)`.
   */
 case class ReservoirSample(child: Expression, k: Int, seed: Long,
                            mutableAggBufferOffset: Int = 0,
@@ -135,22 +133,7 @@ object ReservoirSample {
   private[functions] val md5Local: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!reg.functionExists(id)) {
-      reg.registerFunction(
-        id,
-        new ExpressionInfo(classOf[ReservoirSample].getName, name),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, s"$name(col, k, seed)")
-          require(children(1).foldable && children(2).foldable,
-            s"$name: k and seed must be literals")
-          val k = children(1).eval().asInstanceOf[Number].intValue()
-          require(k > 0, s"$name: k must be positive, got $k")
-          val seed = children(2).eval().asInstanceOf[Number].longValue()
-          ReservoirSample(children.head, k, seed).toAggregateExpression()
-        })
-    }
-  }
+  /** The aggregate column `graft_reservoir(x, k, seed)`, for `.agg`. */
+  def apply(x: Column, k: Int, seed: Long): Column =
+    column(ReservoirSample(expr(x), k, seed).toAggregateExpression())
 }

@@ -53,7 +53,6 @@ object Ivf {
     */
   def train(p: DataFrame, k: Int, iters: Int): DataFrame = {
     val spark = p.sparkSession
-    LongArrayDot.register(spark)
     import spark.implicits._
     // deterministic init: the k lowest-id vectors
     var centroids = p.orderBy("vec_id").limit(k).orderBy("vec_id")
@@ -62,7 +61,7 @@ object Ivf {
     val dim = centroids.headOption.map(_._2.length).getOrElse(0)
     for (_ <- 1 to iters) {
       val cdf = centroids.toDF("cid", "c")
-        .withColumn("cn2", Similarity.intDot(col("c"), col("c")))
+        .withColumn("cn2", LongArrayDot(col("c"), col("c")))
       val assigned = assign(p, cdf)
       // per-dimension integer mean of each cell's members (same div as
       // the reference formulation, computed engine-side so truncation
@@ -84,7 +83,7 @@ object Ivf {
       }
     }
     centroids.toDF("cid", "c")
-      .withColumn("cn2", Similarity.intDot(col("c"), col("c")))
+      .withColumn("cn2", LongArrayDot(col("c"), col("c")))
   }
 
   /** Nearest-centroid assignment: argmin integer L2 over cells as a pure
@@ -101,11 +100,8 @@ object Ivf {
     * (CodebookOpsSpec pins both against the min_by form).
     */
   def assign(p: DataFrame, centroids: DataFrame): DataFrame = {
-    val spark = p.sparkSession
-    CodebookArgmin.register(spark)
     val cb = localCodebook(centroids)
-    val pos = call_function(CodebookArgmin.name, col("q"),
-      typedlit(cb.flat), typedlit(cb.cn2))
+    val pos = CodebookArgmin(col("q"), typedlit(cb.flat), typedlit(cb.cn2))
     p.select(col("vec_id"), col("q"), col("n2"),
       element_at(typedlit(cb.cids), pos + 1).as("cid"))
   }
@@ -123,17 +119,16 @@ object Ivf {
     // the driver-local codebook (CodebookTopN ranks by the same
     // (d2, cid) contract the previous window row_number ordered by) —
     // no n x k expansion, no shuffle to rank it
-    CodebookTopN.register(queries.sparkSession)
     val cb = localCodebook(centroids)
     val probes = queries
       .select(col("vec_id").as("qid"), col("q").as("qq"),
-        explode(call_function(CodebookTopN.name, col("q"),
-          typedlit(cb.flat), typedlit(cb.cn2), lit(nprobe))).as("pos"))
+        explode(CodebookTopN(col("q"),
+          typedlit(cb.flat), typedlit(cb.cn2), nprobe)).as("pos"))
       .select(col("qid"), col("qq"),
         element_at(typedlit(cb.cids), col("pos") + 1).as("cid"))
     val scored = probes.join(lists, Seq("cid"))
       .filter(col("qid") =!= col("nid"))
-      .withColumn("dot", Similarity.intDot(col("qq"), col("nq")))
+      .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -207,7 +202,6 @@ object Ivf {
       case None => false
       case Some(updated) =>
         val spark = batch.sparkSession
-        LongArrayDot.register(spark)
         val centroids = spark.read.parquet(s"$dir/centroids")
         assign(Similarity.prepared(batch), centroids)
           .select(col("vec_id").as("nid"), col("q").as("nq"),
@@ -236,14 +230,13 @@ object Ivf {
   def rebuildFromStore(dir: String, batch: DataFrame, nCells: Int,
                        iters: Int): Unit = {
     val spark = batch.sparkSession
-    LongArrayDot.register(spark)
     val staged = s"$dir/retrain_input"
     spark.read.parquet(s"$dir/lists")
       .select(col("nid").as("vec_id"), col("nq").as("q"))
       .unionByName(Similarity.prepared(batch).select("vec_id", "q"))
       .write.mode("overwrite").parquet(staged)
     val all = spark.read.parquet(staged)
-      .withColumn("n2", Similarity.intDot(col("q"), col("q")))
+      .withColumn("n2", LongArrayDot(col("q"), col("q")))
     val centroids = train(all, nCells, iters)
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
     assign(all, centroids)
@@ -269,7 +262,6 @@ object Ivf {
   def probeIndex(dir: String, queries: DataFrame, k: Int,
                  nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
-    LongArrayDot.register(spark)
     val centroids = spark.read.parquet(s"$dir/centroids")
     val lists = spark.read.parquet(s"$dir/lists")
       .select(col("cell").as("cid"), col("nid"), col("nq"))

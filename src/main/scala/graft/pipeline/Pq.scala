@@ -89,8 +89,7 @@ object Pq {
     * deterministic argmin (the (d2, cid) tie-break — CodebookOpsSpec).
     */
   private def encodeExpr(cb: LocalPqCodebook, m: Int): Column =
-    call_function(PqEncodeCodes.name, col("q"),
-      typedlit(cb.flat), typedlit(cb.cn2), lit(m))
+    PqEncodeCodes(col("q"), typedlit(cb.flat), typedlit(cb.cn2), m)
 
   /** Train the m per-subspace codebooks on (vec_id, q) prepared
     * vectors: `(sub, cid, c, cn2)`. Lloyd's with deterministic
@@ -103,8 +102,6 @@ object Pq {
     */
   def train(p: DataFrame, m: Int, ks: Int, iters: Int): DataFrame = {
     val spark = p.sparkSession
-    LongArrayDot.register(spark)
-    PqEncodeCodes.register(spark)
     import spark.implicits._
     val init = p.orderBy("vec_id").limit(ks).orderBy("vec_id")
       .select(col("q")).collect().map(_.getSeq[Long](0).toArray)
@@ -141,7 +138,7 @@ object Pq {
       }
     }
     cents.toDF("sub", "cid", "c")
-      .withColumn("cn2", Similarity.intDot(col("c"), col("c")))
+      .withColumn("cn2", LongArrayDot(col("c"), col("c")))
   }
 
   /** One BYTE-PACKED code tuple per candidate — the stored index
@@ -151,13 +148,12 @@ object Pq {
     */
   private def packedCodes(p: DataFrame, codebook: DataFrame, m: Int,
                           keep: Seq[String] = Seq.empty): DataFrame = {
-    PqEncodeCodes.register(p.sparkSession)
     val keepCols = keep.map(col)
     localPqCodebook(codebook, m) match {
       case None => p.select(col("vec_id") +: keepCols :+
         lit(Array.empty[Byte]).as("codes"): _*).filter(lit(false))
       case Some(cb) => p.select(col("vec_id") +: keepCols :+
-        call_function(IntArrayPack8.name, encodeExpr(cb, m)).as("codes"): _*)
+        IntArrayPack8(encodeExpr(cb, m)).as("codes"): _*)
     }
   }
 
@@ -173,13 +169,11 @@ object Pq {
     */
   private def queryTables(qs: DataFrame, m: Int,
                           codebook: DataFrame): DataFrame = {
-    PqQueryTable.register(qs.sparkSession)
     localPqCodebook(codebook, m) match {
       case None => qs.select(col("vec_id").as("qid"),
         typedlit(Seq.empty[Long]).as("tbl")).filter(lit(false))
       case Some(cb) => qs.select(col("vec_id").as("qid"),
-        call_function(PqQueryTable.name, col("q"),
-          typedlit(cb.flat), lit(m)).as("tbl"))
+        PqQueryTable(col("q"), typedlit(cb.flat), m).as("tbl"))
     }
   }
 
@@ -191,7 +185,7 @@ object Pq {
     * codebook (fewer than ks trained centroids) can never desync.
     */
   private def adcScore: Column =
-    call_function(AdcScore.name, col("codes"), col("tbl"))
+    AdcScore(col("codes"), col("tbl"))
 
   /** Deterministic (score desc, nid asc) top-k over a scored pair
     * stream — the ranking contract every ANN path shares.
@@ -223,8 +217,6 @@ object Pq {
   def topK(emb: DataFrame, k: Int, m: Int, ks: Int, iters: Int,
            queryPred: Column): DataFrame = {
     val p = Similarity.prepared(emb).cache()
-    IntArrayPack8.register(p.sparkSession)
-    AdcScore.register(p.sparkSession)
     val codebook = train(p, m, ks, iters)
     val codes = packedCodes(p, codebook, m)
       .select(col("vec_id").as("nid"), col("codes"))
@@ -239,7 +231,6 @@ object Pq {
                  iters: Int): Unit = {
     val p = Similarity.prepared(emb).cache()
     try {
-      IntArrayPack8.register(p.sparkSession)
       val codebook = train(p, m, ks, iters)
       codebook.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
       packedCodes(p, codebook, m)
@@ -260,8 +251,6 @@ object Pq {
     */
   def probeIndex(dir: String, queries: DataFrame, k: Int, m: Int): DataFrame = {
     val spark = queries.sparkSession
-    IntArrayPack8.register(spark)
-    AdcScore.register(spark)
     val codebook = spark.read.parquet(s"$dir/codebook")
     val codes = spark.read.parquet(s"$dir/codes")
     scoreFlat(codes, queryTables(queries, m, codebook), k)
@@ -300,18 +289,17 @@ object Pq {
     // previous window row_number ordered by), the exact cell bias
     // <q, c_cell> recomputed via centroid lookup — no n x k expansion,
     // no shuffle, no broadcast re-join for the bias
-    CodebookTopN.register(queries.sparkSession)
     val cb = Ivf.localCodebook(coarse)
     val dim = if (cb.cids.isEmpty) 0 else cb.flat.length / cb.cids.length
     val centArrays: Seq[Seq[Long]] =
       cb.cids.indices.map(i => cb.flat.slice(i * dim, (i + 1) * dim))
     val probes = queries
       .select(col("vec_id").as("qid"), col("q").as("qq"),
-        explode(call_function(CodebookTopN.name, col("q"),
-          typedlit(cb.flat), typedlit(cb.cn2), lit(nprobe))).as("pos"))
+        explode(CodebookTopN(col("q"),
+          typedlit(cb.flat), typedlit(cb.cn2), nprobe)).as("pos"))
       .select(col("qid"),
         element_at(typedlit(cb.cids), col("pos") + 1).as("cell"),
-        Similarity.intDot(col("qq"),
+        LongArrayDot(col("qq"),
           element_at(typedlit(centArrays), col("pos") + 1)).as("bias"))
     val qt = queryTables(queries, m, codebook)
     rankTopK(probes.join(codes, "cell")
@@ -341,8 +329,6 @@ object Pq {
   def topKIvf(emb: DataFrame, k: Int, m: Int, ks: Int, iters: Int,
               nCells: Int, nprobe: Int, queryPred: Column): DataFrame = {
     val p = Similarity.prepared(emb).cache()
-    IntArrayPack8.register(p.sparkSession)
-    AdcScore.register(p.sparkSession)
     val coarse = Ivf.train(p, nCells, iters)
     val res = residuals(p, coarse).cache()
     val codebook = train(res, m, ks, iters)
@@ -361,7 +347,6 @@ object Pq {
                     iters: Int, nCells: Int): Unit = {
     val p = Similarity.prepared(emb).cache()
     try {
-      IntArrayPack8.register(p.sparkSession)
       val coarse = Ivf.train(p, nCells, iters)
       coarse.coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
       val res = residuals(p, coarse).cache()
@@ -415,7 +400,6 @@ object Pq {
     */
   def encodeIvf(batch: DataFrame, dir: String, m: Int): DataFrame = {
     val spark = batch.sparkSession
-    IntArrayPack8.register(spark)
     val coarse = spark.read.parquet(s"$dir/coarse")
     val codebook = spark.read.parquet(s"$dir/codebook")
     val res = residuals(Similarity.prepared(batch), coarse)
@@ -430,8 +414,6 @@ object Pq {
   def probeIndexIvf(dir: String, queries: DataFrame, k: Int, m: Int,
                     nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
-    IntArrayPack8.register(spark)
-    AdcScore.register(spark)
     val coarse = spark.read.parquet(s"$dir/coarse")
     val codebook = spark.read.parquet(s"$dir/codebook")
     val codes = spark.read.parquet(s"$dir/codes")
@@ -484,7 +466,7 @@ object Pq {
     val scored = cands
       .join(queries.select(col("vec_id").as("qid"), col("q").as("qq")), "qid")
       .join(p.select(col("vec_id").as("nid"), col("q").as("nq")), "nid")
-      .withColumn("score", Similarity.intDot(col("qq"), col("nq")))
+      .withColumn("score", LongArrayDot(col("qq"), col("nq")))
       .select("qid", "nid", "score")
     rankTopK(scored, k)
   }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{ByteArrayDot, FloatArrayQuantize8, LongArrayDot, LshBandHashes}
+import graft.functions.{ByteArrayDot, CodebookTopN, FloatArrayQuantize8, LongArrayDot, LshBandHashes}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -26,22 +26,11 @@ object Similarity {
   def quantize(e: Column): Column =
     transform(e, x => round(x.cast("double") * 1000).cast("long"))
 
-  /** Exact integer dot product of two quantized vectors — the native
-    * codegen'd [[LongArrayDot]] expression (a tight primitive loop inside
-    * whole-stage codegen; the higher-order `aggregate(zip_with(...))`
-    * formulation is interpreted per element and dominates pair-scoring).
-    * Callers must [[LongArrayDot.register]] on the session first; every
-    * DataFrame entry point below does.
-    */
-  def intDot(a: Column, b: Column): Column =
-    call_function(LongArrayDot.name, a, b)
-
   /** `(vec_id, q, n2)`: quantized vector + its squared norm. */
   def prepared(emb: DataFrame, idCol: String = "vec_id",
                embCol: String = "embedding"): DataFrame = {
-    LongArrayDot.register(emb.sparkSession)
     emb.select(col(idCol), quantize(col(embCol)).as("q"))
-      .withColumn("n2", intDot(col("q"), col("q")))
+      .withColumn("n2", LongArrayDot(col("q"), col("q")))
   }
 
   /** Release a corpus-sized internal cache before returning a result
@@ -50,8 +39,8 @@ object Similarity {
     * dropped, so repeated calls in a long-lived process (ServerMain /
     * TcpServer, the Bench loop) never accumulate corpus caches. Skipped
     * under the plan-only flag (PRESENCE of `graft.plan.only`, the same
-    * convention as PipelineQueries and the TextAnalysis/Pq training
-    * loops) so plan audits see the full unrun composition; `p` is still
+    * convention as PipelineQueries and TextAnalysis) so plan audits see
+    * the full unrun composition; `p` is still
     * unpersisted there — the lazy plan recomputes it.
     *
     * Contract shift callers must know: entry points routed through here
@@ -93,7 +82,7 @@ object Similarity {
     val qs = p.filter(queryPred).select(col("vec_id").as("qid"), col("q").as("qq"))
     val cands = p.select(col("vec_id").as("nid"), col("q").as("nq"))
     val scored = qs.join(cands, col("qid") =!= col("nid"))
-      .withColumn("dot", intDot(col("qq"), col("nq")))
+      .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -108,20 +97,11 @@ object Similarity {
     * double ops + half-away-from-zero rounding), so a DuckDB oracle
     * replays the bytes exactly via list arithmetic.
     */
-  def quantize8(e: Column): Column =
-    call_function(FloatArrayQuantize8.name, e)
-
-  /** Exact integer dot product of two packed-int8 vectors — the
-    * codegen'd [[ByteArrayDot]] loop.
-    */
-  def dot8(a: Column, b: Column): Column =
-    call_function(ByteArrayDot.name, a, b)
+  def quantize8(e: Column): Column = FloatArrayQuantize8(e)
 
   /** `(vec_id, q8)`: packed-int8 quantized vectors. */
   def prepared8(emb: DataFrame, idCol: String = "vec_id",
                 embCol: String = "embedding"): DataFrame = {
-    FloatArrayQuantize8.register(emb.sparkSession)
-    ByteArrayDot.register(emb.sparkSession)
     emb.select(col(idCol), quantize8(col(embCol)).as("q8"))
   }
 
@@ -144,7 +124,7 @@ object Similarity {
     val qs = p.filter(queryPred).select(col("vec_id").as("qid"), col("q8").as("qq"))
     val cands = p.select(col("vec_id").as("nid"), col("q8").as("nq"))
     val scored = qs.join(cands, col("qid") =!= col("nid"))
-      .withColumn("dot", dot8(col("qq"), col("nq")))
+      .withColumn("dot", ByteArrayDot(col("qq"), col("nq")))
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -174,7 +154,7 @@ object Similarity {
       col("attr"))
     val scored = qs
       .join(cands, col("qa") === col("attr") && col("qid") =!= col("nid"))
-      .withColumn("dot", intDot(col("qq"), col("nq")))
+      .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -190,7 +170,7 @@ object Similarity {
     val a = p.select(col("vec_id").as("da"), col("q").as("qa"), col("n2").as("na"))
     val b = p.select(col("vec_id").as("db"), col("q").as("qb"), col("n2").as("nb"))
     a.join(b, col("da") < col("db"))
-      .withColumn("dot", intDot(col("qa"), col("qb")))
+      .withColumn("dot", LongArrayDot(col("qa"), col("qb")))
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * (tden * tden) >= lit(tnum * tnum) * col("na") * col("nb"))
       .select("da", "db")
@@ -263,12 +243,10 @@ object Similarity {
         // same (d2, cid) key the previous slice(sort_array(
         // collect_list(...))) aggregate sorted on, with zero exchanges
         // (the aggregate still shuffled one full-vector row per vector)
-        graft.functions.CodebookTopN.register(p.sparkSession)
         val cb = Ivf.localCodebook(centroids)
         p.select(col("vec_id"), col("q"), col("n2"),
-            explode(call_function(graft.functions.CodebookTopN.name,
-              col("q"), typedlit(cb.flat), typedlit(cb.cn2),
-              lit(nAssign))).as("pos"))
+            explode(CodebookTopN(col("q"),
+              typedlit(cb.flat), typedlit(cb.cn2), nAssign)).as("pos"))
           .select(col("vec_id"), col("q"), col("n2"),
             element_at(typedlit(cb.cids), col("pos") + 1).as("cid"))
       }
@@ -277,7 +255,7 @@ object Similarity {
     val b = assigned.select(col("cid"), col("vec_id").as("db"),
       col("q").as("qb"), col("n2").as("nb"))
     val pairs = a.join(b, Seq("cid")).filter(col("da") < col("db"))
-      .withColumn("dot", intDot(col("qa"), col("qb")))
+      .withColumn("dot", LongArrayDot(col("qa"), col("qb")))
       .filter(col("dot") > 0 &&
         col("dot") * col("dot") * (tden * tden) >= lit(tnum * tnum) * col("na") * col("nb"))
       .select("da", "db")
@@ -318,12 +296,11 @@ object Similarity {
     */
   private def bandedSigs(p: DataFrame, bands: Int, r: Int,
                          seedBase: Long): DataFrame = {
-    LshBandHashes.register(p.sparkSession)
     val flat: Seq[Long] =
       planeWeights(p, bands * r, seedBase, vecCol = "q").flatten.toSeq
     p.select(col("vec_id"),
-        posexplode(call_function(LshBandHashes.name, col("q"),
-          typedlit(flat), lit(bands), lit(r))).as(Seq("band", "bh")))
+        posexplode(LshBandHashes(col("q"), typedlit(flat), bands, r))
+          .as(Seq("band", "bh")))
   }
 
   /** Corpus-adaptive band WIDTH: the bits-per-band `r` that keeps
@@ -394,7 +371,7 @@ object Similarity {
     val scored = cands
       .join(p.select(col("vec_id").as("qid"), col("q").as("qq")), "qid")
       .join(p.select(col("vec_id").as("nid"), col("q").as("nq")), "nid")
-      .withColumn("dot", intDot(col("qq"), col("nq")))
+      .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
     releasedAfter(
       scored.withColumn("rank", row_number().over(w))
@@ -440,7 +417,7 @@ object Similarity {
           col("n2").as("na")), "da")
         .join(p.select(col("vec_id").as("db"), col("q").as("qb"),
           col("n2").as("nb")), "db")
-        .withColumn("dot", intDot(col("qa"), col("qb")))
+        .withColumn("dot", LongArrayDot(col("qa"), col("qb")))
         .filter(col("dot") > 0 &&
           col("dot") * col("dot") * (tden * tden) >= lit(tnum * tnum) * col("na") * col("nb"))
         .select("da", "db"),

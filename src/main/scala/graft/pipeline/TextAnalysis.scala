@@ -341,18 +341,13 @@ object TextAnalysis {
     * exactly once per row. The composable `occurrences`-arithmetic form
     * remains below as [[langPredExprComposable]]: it IS the semantics
     * (it mirrors the SQL oracles' replace-length arithmetic), and
-    * TextAnalysisSpec pins the native path equal to it. The expression
-    * is registered on `spark`, which must be the session of the
-    * DataFrame the column is used in: sessions do not share registered
-    * functions (a replay's stream runs on its own session, not the
-    * active one). The trailing coalesce reproduces the
-    * composable chain's null-text behavior (null scores fall through
-    * every `when` to the `otherwise`).
+    * TextAnalysisSpec pins the native path equal to it. The trailing
+    * coalesce reproduces the composable chain's null-text behavior (null
+    * scores fall through every `when` to the `otherwise`).
     */
-  def langPredExpr(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    graft.functions.LangPred.register(spark,
+  def langPredExpr(text: Column): Column = {
+    val p = graft.functions.LangPred(paddedExpr(text),
       langOrder.map(l => l -> stopwords(l).toSeq))
-    val p = call_function(graft.functions.LangPred.name, paddedExpr(text))
     // p is null on all-zero scores ("unknown") AND on null text,
     // where the composable when-chain falls through to its
     // `otherwise("fr")` — disambiguate on the cheap raw-null check
@@ -391,7 +386,7 @@ object TextAnalysis {
     */
   def langId(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      langPredExpr(docs.sparkSession, col("text")).as("lang_pred"))
+      langPredExpr(col("text")).as("lang_pred"))
       .orderBy("doc_id")
 
   /** Corpus vocabulary: the `k` most frequent whitespace tokens with

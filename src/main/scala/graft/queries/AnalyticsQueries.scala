@@ -101,11 +101,9 @@ object AnalyticsQueries {
     * the same md5-derived priorities and ranks per source.
     */
   def sampleStratified(s: SparkSession, d: String): DataFrame = {
-    ReservoirSample.register(s)
     Tables.documents(s, d)
       .groupBy("source")
-      .agg(call_function(ReservoirSample.name,
-        col("doc_id"), lit(4), lit(7L)).as("sample"))
+      .agg(ReservoirSample(col("doc_id"), 4, 7L).as("sample"))
       .select(col("source"), posexplode(col("sample")))
       .select(col("source"), col("pos").cast("int").as("pos"),
         col("col").cast("long").as("doc_id"))

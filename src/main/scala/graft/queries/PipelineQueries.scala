@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.{LongArrayDot, ReservoirSample}
 import graft.pipeline.{AnnIndex, Cluster, Dedup, Ivf, Mixture, Multimodal, Packing, Pq, Similarity, TextAnalysis}
 
 /** Correctness queries for the large-scale data-pipeline operators
@@ -218,7 +219,7 @@ object PipelineQueries {
     docs.select(col("text"),
       TextAnalysis.tokenCount(col("text")).as("n_tokens"),
       TextAnalysis.keepExpr(col("text")).as("keep"),
-      TextAnalysis.langPredExpr(docs.sparkSession, col("text")).as("lang_pred"))
+      TextAnalysis.langPredExpr(col("text")).as("lang_pred"))
       .filter(col("keep") === 1 && col("lang_pred") === "en")
 
   private def corpusStats(df: DataFrame): DataFrame =
@@ -354,7 +355,7 @@ object PipelineQueries {
       .select(coalesce(col("ex"), lit(0)).as("ex"),
         coalesce(col("nk"), lit(0)).as("nk"),
         TextAnalysis.keepExpr(col("text")).as("kq"),
-        when(TextAnalysis.langPredExpr(s, col("text")) === "en", 1)
+        when(TextAnalysis.langPredExpr(col("text")) === "en", 1)
           .otherwise(0).as("ke"))
       .select(col("ex"), (col("ex") * (lit(1) - col("nk"))).as("nr"),
         col("kq"), col("ke"))
@@ -494,7 +495,7 @@ object PipelineQueries {
         val bad = probe
           .join(p.select(col("vec_id").as("qid"), col("q").as("eq")), "qid")
           .join(p.select(col("vec_id").as("nid"), col("q").as("en")), "nid")
-          .filter(col(scoreCol) =!= Similarity.intDot(col("eq"), col("en")))
+          .filter(col(scoreCol) =!= LongArrayDot(col("eq"), col("en")))
           .agg((count(lit(1)) === 0).as("scores_exact_ok"))
         base.crossJoin(bad)
       }
@@ -1044,12 +1045,9 @@ object PipelineQueries {
     * merges, partitioning-independent, and oracle-exact.
     */
   def sampleReservoir(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.ReservoirSample
-    ReservoirSample.register(s)
     Tables.lineitem(s, d)
       .select(col("l_orderkey").cast("long").as("x"))
-      .agg(call_function(ReservoirSample.name,
-        col("x"), lit(16), lit(42L)).as("sample"))
+      .agg(ReservoirSample(col("x"), 16, 42L).as("sample"))
       .select(posexplode(col("sample")))
       .select(col("pos").cast("int").as("pos"), col("col").cast("long").as("v"))
       .orderBy("pos")
@@ -1378,7 +1376,7 @@ object PipelineQueries {
     // engine-independent
     val base = Tables.documents(s, d).select(
       coalesce(col("source"), lit("(unknown)")).as("source"),
-      TextAnalysis.langPredExpr(s, col("text")).as("lang_pred"),
+      TextAnalysis.langPredExpr(col("text")).as("lang_pred"),
       TextAnalysis.tokenCount(col("text")).cast("long").as("nt"))
     val cells = base.groupBy("source", "lang_pred")
       .agg(count(lit(1)).cast("long").as("n_docs"),

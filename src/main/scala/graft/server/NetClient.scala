@@ -143,38 +143,13 @@ object NetClient {
     try {
       if (interactive) {
         // one connection for the whole REPL: the session env persists
-        // across prompts, like the reference's interactive client
-        val sock = new Socket(host, port)
-        try {
-          if (DefaultTimeoutMs > 0) sock.setSoTimeout(DefaultTimeoutMs)
-          val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
-          val w = new BufferedWriter(new OutputStreamWriter(sock.getOutputStream, UTF_8))
-          print("graft> "); Console.flush()
-          val stdin = scala.io.Source.stdin.getLines()
-          var quit = false
-          while (!quit && stdin.hasNext) {
-            val t = stdin.next().trim
-            if (t == "quit") {
-              // clean user exit — the server acknowledges with nothing
-              w.write("quit"); w.newLine(); w.flush()
-              quit = true
-            } else if (t.nonEmpty && !t.startsWith("#")) {
-              writeRequest(w, t, ship = true)
-              var done = false
-              while (!done) {
-                val resp = in.readLine()
-                if (resp == null) { System.err.println("server closed"); sys.exit(1) }
-                if (resp.startsWith("|")) println(resp.substring(1))
-                else if (resp == "+OK") done = true
-                else if (resp.startsWith("-ERR ")) {
-                  failed = true; System.err.println(resp.substring(5)); done = true
-                } else { System.err.println(s"malformed: $resp"); sys.exit(1) }
-              }
-            }
-            if (!quit) { print("graft> "); Console.flush() }
-          }
-          println()
-        } finally sock.close()
+        // across prompts, like the reference's interactive client; the
+        // prompt is printed as each line is read
+        val prompted = Iterator.continually {
+          print("graft> "); Console.flush(); scala.io.StdIn.readLine()
+        }.takeWhile(_ != null)
+        failed = run(host, port, prompted, println, System.err.println)
+        println()
       } else {
         val script =
           if (args.length > 2) new String(java.nio.file.Files.readAllBytes(

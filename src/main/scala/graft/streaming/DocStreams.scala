@@ -74,7 +74,7 @@ object DocStreams {
       .reduce(_ + _)
     val flagged = docs.select(col("*"),
       TextAnalysis.keepExpr(col("text")).as("keep"),
-      TextAnalysis.langPredExpr(docs.sparkSession, col("text")).as("lang_pred"),
+      TextAnalysis.langPredExpr(col("text")).as("lang_pred"),
       piiTotal.cast("long").as("n_pii"))
       .filter(col("keep") === 1)
     if (dropPii) flagged.filter(col("n_pii") === 0L) else flagged

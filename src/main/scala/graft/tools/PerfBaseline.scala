@@ -3,6 +3,7 @@ package graft.tools
 import java.io.PrintWriter
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.core.Engine
 
 /** Reproduces the reference's published join benchmark
@@ -78,11 +79,7 @@ object PerfBaseline {
     val sizes = args.headOption.getOrElse("100000,300000,600000")
       .split(",").map(_.trim.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warm the session (codegen, parquet committers, parse-loop JIT) on

@@ -66,13 +66,11 @@ class AnalyticsSpec extends SparkSpec {
     import graft.functions.ReservoirSample
     val spark0 = spark
     import spark0.implicits._
-    ReservoirSample.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     def sample(parts: Int): Seq[(String, Int, Long)] =
       docs.repartition(parts)
         .groupBy("source")
-        .agg(call_function(ReservoirSample.name,
-          col("doc_id"), lit(4), lit(7L)).as("sample"))
+        .agg(ReservoirSample(col("doc_id"), 4, 7L).as("sample"))
         .select(col("source"), posexplode(col("sample")))
         .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
         .toSeq.sorted

@@ -32,7 +32,6 @@ class CodebookOpsSpec extends SparkSpec {
   test("CodebookArgmin matches the min_by(d2, cid) contract, ties to smallest cid") {
     val spark0 = spark
     import spark0.implicits._
-    CodebookArgmin.register(spark)
     val dim = 8
     val k = 5
     // force ties: centroid 3 duplicates centroid 1 exactly
@@ -43,7 +42,7 @@ class CodebookOpsSpec extends SparkSpec {
     val cn2 = cents.map(_.map(x => x * x).sum)
     val got = vecs.toDF("vec_id", "q")
       .select(col("vec_id"),
-        call_function(CodebookArgmin.name, col("q"),
+        CodebookArgmin(col("q"),
           typedlit(flat), typedlit(cn2)).as("pos"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     vecs.foreach { case (id, q) =>
@@ -76,7 +75,6 @@ class CodebookOpsSpec extends SparkSpec {
   test("CodebookTopN returns the n nearest positions ascending by (d2, cid)") {
     val spark0 = spark
     import spark0.implicits._
-    CodebookTopN.register(spark)
     val dim = 6
     val k = 7
     val cents0 = Seq.fill(k)(randVec(dim)).toIndexedSeq
@@ -95,8 +93,8 @@ class CodebookOpsSpec extends SparkSpec {
     for (n <- Seq(1, 3, k, k + 2)) {
       val got = vecs.toDF("vec_id", "q")
         .select(col("vec_id"),
-          call_function(CodebookTopN.name, col("q"),
-            typedlit(flat), typedlit(cn2), lit(n)).as("cells"))
+          CodebookTopN(col("q"),
+            typedlit(flat), typedlit(cn2), n).as("cells"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
       vecs.foreach { case (id, q) =>
         assert(got(id) == refTopN(q, n), s"vec $id n=$n")
@@ -107,7 +105,6 @@ class CodebookOpsSpec extends SparkSpec {
   test("PqEncodeCodes matches per-subspace argmin with smallest-cid ties") {
     val spark0 = spark
     import spark0.implicits._
-    PqEncodeCodes.register(spark)
     val m = 4
     val d = 3
     val ks = 5
@@ -117,8 +114,8 @@ class CodebookOpsSpec extends SparkSpec {
     val vecs = (0 until 200).map(i => (i.toLong, randVec(m * d)))
     val got = vecs.toDF("vec_id", "q")
       .select(col("vec_id"),
-        call_function(PqEncodeCodes.name, col("q"),
-          typedlit(flat), typedlit(cn2), lit(m)).as("codes"))
+        PqEncodeCodes(col("q"),
+          typedlit(flat), typedlit(cn2), m).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     vecs.foreach { case (id, q) =>
       val want = (0 until m).map { s =>
@@ -131,7 +128,6 @@ class CodebookOpsSpec extends SparkSpec {
   test("PqQueryTable lays out <q_sub, c> in (sub major, cid minor) order") {
     val spark0 = spark
     import spark0.implicits._
-    PqQueryTable.register(spark)
     val m = 3
     val d = 4
     val ks = 4
@@ -139,8 +135,8 @@ class CodebookOpsSpec extends SparkSpec {
     val flat = cb.flatten.flatMap(_.toSeq)
     val q = randVec(m * d)
     val tbl = Seq((1L, q)).toDF("vec_id", "q")
-      .select(call_function(PqQueryTable.name, col("q"),
-        typedlit(flat), lit(m)))
+      .select(PqQueryTable(col("q"),
+        typedlit(flat), m))
       .collect().head.getSeq[Long](0)
     assert(tbl.length == m * ks)
     for (s <- 0 until m; i <- 0 until ks) {

@@ -41,13 +41,12 @@ object Int8Props extends Properties("Int8") {
   property("helper equals the DataFrame (codegen) path") = {
     val spark = SparkSpec.spark
     import spark.implicits._
-    FloatArrayQuantize8.register(spark)
     Prop.forAll(Gen.listOfN(8, vec)) { vss =>
       val viaSpark = vss.zipWithIndex
         .map { case (vs, i) => (i.toLong, vs.toArray) }
         .toDF("id", "embedding")
         .select(col("id"),
-          call_function(FloatArrayQuantize8.name, col("embedding")).as("q"))
+          FloatArrayQuantize8(col("embedding")).as("q"))
         .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq)
         .toMap
       vss.zipWithIndex.forall { case (vs, i) =>

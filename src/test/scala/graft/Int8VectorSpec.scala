@@ -17,9 +17,8 @@ class Int8VectorSpec extends SparkSpec {
   private def q8Of(vs: Seq[Float]): Array[Byte] = {
     val spark0 = spark
     import spark0.implicits._
-    FloatArrayQuantize8.register(spark)
     Seq(Tuple1(vs.toArray)).toDF("embedding")
-      .select(call_function(FloatArrayQuantize8.name, col("embedding")))
+      .select(FloatArrayQuantize8(col("embedding")))
       .collect()(0).getAs[Array[Byte]](0)
   }
 
@@ -39,13 +38,11 @@ class Int8VectorSpec extends SparkSpec {
   test("graft_dot8 equals a reference dot over quantized bytes; mismatch throws") {
     val spark0 = spark
     import spark0.implicits._
-    FloatArrayQuantize8.register(spark)
-    ByteArrayDot.register(spark)
     val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(40)
     val p = emb.select(col("vec_id"), Similarity.quantize8(col("embedding")).as("q8"))
     val pairs = p.as("a").join(p.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.q8").as("x"), col("b.q8").as("y"),
-        Similarity.dot8(col("a.q8"), col("b.q8")).as("dot"))
+        ByteArrayDot(col("a.q8"), col("b.q8")).as("dot"))
       .collect()
     assert(pairs.nonEmpty)
     for (r <- pairs) {
@@ -56,7 +53,7 @@ class Int8VectorSpec extends SparkSpec {
     }
     val bad = intercept[Exception] {
       Seq((Array[Byte](1, 2), Array[Byte](1, 2, 3))).toDF("a", "b")
-        .select(call_function(ByteArrayDot.name, col("a"), col("b")))
+        .select(ByteArrayDot(col("a"), col("b")))
         .collect()
     }
     assert(bad.getMessage.contains("graft_dot8") ||

@@ -27,55 +27,49 @@ class NullElementSpec extends SparkSpec {
   test("graft_pack8 throws on a null code element") {
     val spark0 = sparkImp
     import spark0.implicits._
-    IntArrayPack8.register(spark)
     val ok = Seq(Tuple1(Array[java.lang.Integer](1, 2, 255))).toDF("a")
-      .select(call_function(IntArrayPack8.name, col("a"))).collect()
+      .select(IntArrayPack8(col("a"))).collect()
     assert(ok(0).getAs[Array[Byte]](0).toSeq == Seq[Byte](1, 2, -1))
     interceptNull(
       Seq(Tuple1(Array[java.lang.Integer](1, null, 3))).toDF("a")
-        .select(call_function(IntArrayPack8.name, col("a"))).collect(),
+        .select(IntArrayPack8(col("a"))).collect(),
       "pack8")
   }
 
   test("graft_q8 throws on a null vector element") {
     val spark0 = sparkImp
     import spark0.implicits._
-    FloatArrayQuantize8.register(spark)
     interceptNull(
       Seq(Tuple1(Array[java.lang.Float](1.0f, null, 3.0f))).toDF("a")
-        .select(call_function(FloatArrayQuantize8.name, col("a"))).collect(),
+        .select(FloatArrayQuantize8(col("a"))).collect(),
       "q8")
   }
 
   test("graft_dot throws on a null element on either side") {
     val spark0 = sparkImp
     import spark0.implicits._
-    LongArrayDot.register(spark)
     val good = Seq((Array[java.lang.Long](1L, 2L), Array[java.lang.Long](3L, 4L)))
       .toDF("x", "y")
-      .select(call_function(LongArrayDot.name, col("x"), col("y"))).collect()
+      .select(LongArrayDot(col("x"), col("y"))).collect()
     assert(good(0).getLong(0) == 11L)
     interceptNull(
       Seq((Array[java.lang.Long](1L, null), Array[java.lang.Long](3L, 4L)))
         .toDF("x", "y")
-        .select(call_function(LongArrayDot.name, col("x"), col("y"))).collect(),
+        .select(LongArrayDot(col("x"), col("y"))).collect(),
       "dot left")
     interceptNull(
       Seq((Array[java.lang.Long](1L, 2L), Array[java.lang.Long](null, 4L)))
         .toDF("x", "y")
-        .select(call_function(LongArrayDot.name, col("x"), col("y"))).collect(),
+        .select(LongArrayDot(col("x"), col("y"))).collect(),
       "dot right")
   }
 
   test("graft_adc throws on a null ADC table entry") {
     val spark0 = sparkImp
     import spark0.implicits._
-    AdcScore.register(spark)
-    IntArrayPack8.register(spark)
     def score(tbl: Array[java.lang.Long]): Long =
       Seq((Array[java.lang.Integer](0, 1), tbl)).toDF("codes", "tbl")
-        .select(call_function(AdcScore.name,
-          call_function(IntArrayPack8.name, col("codes")), col("tbl")))
+        .select(AdcScore(IntArrayPack8(col("codes")), col("tbl")))
         .collect()(0).getLong(0)
     // stride 2: codes (0,1) read tbl[0] and tbl[3]
     assert(score(Array[java.lang.Long](10L, 20L, 30L, 40L)) == 50L)

@@ -8,11 +8,10 @@ class ReservoirSpec extends SparkSpec {
   test("reservoir sample: size, membership, and rough uniformity") {
     val spark0 = spark
     import spark0.implicits._
-    ReservoirSample.register(spark)
     val n = 100000L
     val df = spark.range(n).toDF("x")
     val sample = df
-      .agg(call_function("graft_reservoir", col("x"), lit(200), lit(42L)).as("s"))
+      .agg(ReservoirSample(col("x"), 200, 42L).as("s"))
       .select(explode(col("s")).as("v"))
       .collect().map(_.getLong(0))
     assert(sample.length == 200)
@@ -26,9 +25,8 @@ class ReservoirSpec extends SparkSpec {
   test("reservoir smaller than k returns everything") {
     val spark0 = spark
     import spark0.implicits._
-    ReservoirSample.register(spark)
     val sample = spark.range(7).toDF("x")
-      .agg(call_function("graft_reservoir", col("x"), lit(100), lit(1L)).as("s"))
+      .agg(ReservoirSample(col("x"), 100, 1L).as("s"))
       .select(explode(col("s")).as("v"))
       .collect().map(_.getLong(0)).sorted
     assert(sample.toSeq == (0L until 7L))
@@ -37,12 +35,11 @@ class ReservoirSpec extends SparkSpec {
   test("heavy-hitter duplicates cannot flood the sample") {
     val spark0 = spark
     import spark0.implicits._
-    ReservoirSample.register(spark)
     // value 7 repeated 100k times + 1000 distinct values
     val df = Seq.fill(100000)(7L).toDF("x")
       .union(spark.range(1000, 2000).toDF("x"))
     val sample = df
-      .agg(call_function("graft_reservoir", col("x"), lit(100), lit(5L)).as("s"))
+      .agg(ReservoirSample(col("x"), 100, 5L).as("s"))
       .select(explode(col("s")).as("v"))
       .collect().map(_.getLong(0))
     assert(sample.length == 100)
@@ -52,10 +49,9 @@ class ReservoirSpec extends SparkSpec {
   test("sample is deterministic across partitionings") {
     val spark0 = spark
     import spark0.implicits._
-    ReservoirSample.register(spark)
     def run(parts: Int): Seq[Long] =
       spark.range(50000).toDF("x").repartition(parts)
-        .agg(call_function("graft_reservoir", col("x"), lit(64), lit(9L)).as("s"))
+        .agg(ReservoirSample(col("x"), 64, 9L).as("s"))
         .select(explode(col("s")).as("v"))
         .collect().map(_.getLong(0)).toSeq
     assert(run(1) == run(13))

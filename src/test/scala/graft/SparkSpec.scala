@@ -3,17 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide SparkSession). */
+/** Shared session for all suites (one JVM-wide SparkSession), built by
+  * the engine's own [[GraftSession.builder]] so specs plan under the
+  * same conf as Verify, Bench, the CLI and the server.
+  */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", "4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events.parquet carries TIMESTAMP(NANOS); surface as long nanos
-    // (same conf as Verify/Bench — PipelineQueries.eventMs handles both)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     // deliberately tiny: proves emission streams partition-at-a-time
     // (EngineSpec "emission streams") — a whole-result collect of a few
     // MB dies, while every other test's per-job results stay far below
