@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.lang.{Op, Parser}
 import graft.lang.Op._
 import graft.operators.ColumnOps
-import graft.core.Intermediate.{Ids, Vals}
+import graft.core.Intermediate.{Fused, Ids, Vals}
 import graft.core.Align
 
 /** The engine: a database directory + script interpreter.
@@ -384,7 +384,8 @@ final class Session(val engine: Engine) {
     * .toLocalIterator]]: the reference streams results over the socket
     * (rpc.c:209-357) rather than buffering them, and the Spark twin of
     * that is fetching one partition at a time — driver memory is bounded
-    * by the largest partition, never the full result. Side effects
+    * by the largest partition, never the full result (one partition only
+    * for a result proven small, see [[smallResult]]). Side effects
     * (binds, mutations) happen eagerly in this call; only result
     * transfer is lazy. Consume (or discard) the iterator before issuing
     * an op that mutates the columns it reads.
@@ -416,36 +417,41 @@ final class Session(val engine: Engine) {
     case SelectRange(assign, c, lo, hi) => evalSelect(assign, c, Some((lo, hi)))
 
     case Fetch(assign, c, posVar) =>
-      val meta = catalog.require(c)
       // read from the SAME meta snapshot the checks below use — a second
       // catalog read could see a concurrent mutation and diverge from
       // the length/fusion decision
-      val base = Storage.readColumn(spark, meta)
+      val meta = catalog.require(c)
       val ids = getIds(posVar)
-      val df = if (ids.ordered) ColumnOps.fetchList(base, ids.df, ids.align.cols)
-               else {
-                 // bitmap length must match the column (storage.c:1311-1318)
-                 if (ids.srcLen.exists(_ != meta.nextId)) throw DbError.colDiffLen(c)
-                 // select-all -> fetch fusion: a full select holds every
-                 // live position of its source; a target with the same
-                 // live set (equal ids, and equal nextId just above) holds
-                 // exactly those, so the fetch IS the base column — no join
-                 if (ids.fullSelect && sameLive(ids, meta)) base.select("id", "v")
-                 else ColumnOps.fetchSet(base, ids.df)
-               }
-      // A fetch keeps its id set's alignment lineage only when no row of
-      // the set can be dropped: the set came from a join list (its ids
-      // were fetched, hence live, and fetchList preserves every list
-      // row), or the target is pristine (live set = the full position
-      // space), or it shares the select source's live set. Otherwise a
-      // set-fetch may drop tombstoned positions, so two fetches from one
-      // set could diverge row-wise; a fresh tag forces the rank-zip
-      // fallback (the reference's k-th-value-of-each semantics) instead
-      // of a silent id-join drop.
-      val keepsLineage = ids.ordered || meta.pristine || sameLive(ids, meta)
-      val align = if (keepsLineage) ids.align else Align.fresh(Seq("id"))
-      val vals = Vals(df, hasIds = true, align = align, fetchCol = Some(c),
-        fullBase = ids.fullSelect)
+      // bitmap length must match the column (storage.c:1311-1318)
+      if (!ids.ordered && ids.src.nextId != meta.nextId) throw DbError.colDiffLen(c)
+      // A fetch keeps its ids' alignment lineage only when no row of them
+      // can be dropped. Every id is live in `ids.src` (the select source,
+      // or the column a join input fetched), so that holds when the
+      // target is pristine and at least as long, or shares `ids.src`'s
+      // live set. Otherwise the fetch may drop tombstoned positions, and
+      // two fetches from one position source could diverge row-wise; a
+      // fresh tag forces the rank-zip fallback (the reference's
+      // k-th-value-of-each semantics) instead of a silent id-join drop.
+      // A fetch that keeps the lineage also carries its join tree over
+      // the ids' source, so same-lineage siblings can zip in one tree
+      // ([[fusable]]).
+      val keepsLineage = (meta.pristine && ids.src.nextId <= meta.nextId) ||
+        sameLive(ids.src, meta)
+      val tree = Fused.fetch(ids, meta)
+      val key = tree.fetches.head._1
+      // select-all -> fetch fusion: a full select holds every live
+      // position of its source; a target with the same live set holds
+      // exactly those, so the fetch IS the base column — no join.
+      // Otherwise the ids' align columns, their position as `id`, and v.
+      val df = if (ids.fullSelect && sameLive(ids.src, meta))
+                 Storage.readColumn(spark, meta).select("id", "v")
+               else Fused.plan(spark, Seq(tree),
+                 ids.align.cols.filterNot(_ == key).map(col) :+ col(key).as("id"),
+                 Seq("v"), oneTask = false)
+      val vals = Vals(df,
+        if (keepsLineage) ids.align else Align.fresh(ids.align.cols),
+        fetched = Some(meta), fullBase = ids.fullSelect, rowBound = ids.rowBound,
+        tree = Some(tree).filter(_ => keepsLineage))
       emitOrBind(assign, vals)
 
     case Join(jtype, varL, varR, inL, inR) =>
@@ -454,18 +460,20 @@ final class Session(val engine: Engine) {
       if (!l.hasIds) throw DbError.varType(s"join input $inL carries no positions")
       if (!r.hasIds) throw DbError.varType(s"join input $inR carries no positions")
       if (jtype == TreeJoin) {
-        val ok = r.fullBase && r.fetchCol.exists(c =>
-          catalog.require(c).stype == BTree)
+        val ok = r.fullBase && r.fetched.exists(_.stype == BTree)
         if (!ok) throw DbError.noTree(inR)
       }
       val (pairs, outCols) =
         ColumnOps.join(jtype, l.df, r.df, l.align.cols, r.align.cols)
-      // Both sides share one pair order: one fresh alignment lineage.
+      // Both sides share one pair order: one fresh alignment lineage, and
+      // one position source (the pair plan, keyed by lid or rid).
       val align = Align.fresh(outCols)
-      bind(varL, Ids(pairs.select(outCols.map(col) :+ col("lid").as("id"): _*),
-        ordered = true, align = align))
-      bind(varR, Ids(pairs.select(outCols.map(col) :+ col("rid").as("id"): _*),
-        ordered = true, align = align))
+      def side(key: String, in: Vals): Ids =
+        Ids(pairs.select(outCols.map(col) :+ col(key).as("id"): _*),
+          ordered = true, align = align, src = in.fetched.get,
+          pairs = Some(pairs -> key))
+      bind(varL, side("lid", l))
+      bind(varR, side("rid", r))
       Iterator.empty
 
     case Agg(atype, assign, input) =>
@@ -475,18 +483,27 @@ final class Session(val engine: Engine) {
       if (atype == AggAvg &&
           tagLen.get(in.align.tag).fold(in.df.isEmpty)(_ == 0L))
         throw DbError.divZero()
-      val out = Vals(ColumnOps.aggregate(atype, in.df), hasIds = false,
-        align = Align.singleton, aggSrc = Some((atype, in.df)))
+      val out = Vals(ColumnOps.aggregate(atype, in.df), Align.singleton,
+        aggSrc = Some((atype, in)))
       emitOrBind(assign, out)
 
     case Math(mtype, assign, in1, in2) =>
       val l = getVals(in1)
       val r = getVals(in2)
       mathPreCheck(l, r, checkZeros = mtype == MathDiv)
-      val (lAligned, rAligned) = aligned(l, r)
-      val out = ColumnOps.math(mtype, lAligned.df, rAligned.df,
-        lAligned.align.cols)
-      emitOrBind(assign, Vals(out, hasIds = false, align = lAligned.align))
+      // equal lengths are checked, so either operand's bound holds
+      val bound = l.rowBound.orElse(r.rowBound)
+      val out = fusable(Seq(l, r)) match {
+        case Some(trees) =>
+          val t = Fused.combine(trees)(cs => ColumnOps.mathExpr(mtype, cs(0), cs(1)))
+          Vals(Fused.plan(spark, Seq(t), l.align.cols.map(col), Seq("v"), oneTask = false),
+            l.align, rowBound = bound, tree = Some(t))
+        case None =>
+          val (lAligned, rAligned) = aligned(l, r)
+          Vals(ColumnOps.math(mtype, lAligned.df, rAligned.df, lAligned.align.cols),
+            lAligned.align, rowBound = bound)
+      }
+      emitOrBind(assign, out)
 
     case Insert(colVals) =>
       requireWritable()
@@ -494,7 +511,8 @@ final class Session(val engine: Engine) {
 
     case Delete(posVar, cols) =>
       requireWritable()
-      val ids = idsOf(getIds(posVar))
+      // a left-anti join ignores duplicate ids: a list needs no distinct
+      val ids = getIds(posVar).df.select("id")
       // delete punches holes in the position space -> fresh live-set ids;
       // the per-column rewrites overlap (independent write jobs)
       rewriteMany(cols, base =>
@@ -515,28 +533,34 @@ final class Session(val engine: Engine) {
       val vals = vars.map(getVals)
       val lengths = vals.map(lengthOf)
       if (lengths.distinct.size > 1) throw DbError.intermDiffLen()
-      // all-aggregate tuples fuse per shared input; same lineage -> zip
-      // on the shared align key; otherwise rank-zip
-      val zipped =
+      // all-aggregate tuples fuse per shared input; fetches from one
+      // position source zip in one join tree; other same-lineage operands
+      // zip on the shared align key; otherwise rank-zip
+      val out = vals.indices.map(i => s"v${i + 1}")
+      // equal lengths are checked, so any operand's bound holds
+      val bound = vals.flatMap(_.rowBound).minOption
+      val small = smallResult(bound, out.size)
+      val (zipped, cols) =
         if (vals.size > 1 && vals.forall(v =>
           v.align.tag == Align.SingletonTag && v.aggSrc.isDefined))
-          fusedAggregates(vals)
-        else vals.map(_.align.tag).distinct match {
-          case Seq(_) =>
+          (fusedAggregates(vals), Nil)
+        else fusable(vals) match {
+          case Some(trees) =>
             val cols = vals.head.align.cols
-            ColumnOps.tupleZip(vals.map(_.df), cols).orderBy(cols.map(col): _*)
-          case _ =>
-            val posed = vals.map(v =>
-              ColumnOps.withPos(v.df.select((v.align.cols :+ "v").map(col): _*),
-                v.align.cols.map(col)).select("pos", "v"))
-            ColumnOps.tupleZip(posed, Seq("pos")).orderBy("pos")
+            (Fused.plan(spark, trees, cols.map(col), out, small), cols)
+          case None => vals.map(_.align.tag).distinct match {
+            case Seq(_) =>
+              val cols = vals.head.align.cols
+              (ColumnOps.tupleZip(vals.map(_.df), cols), cols)
+            case _ =>
+              val posed = vals.map(v =>
+                ColumnOps.withPos(v.df.select((v.align.cols :+ "v").map(col): _*),
+                  v.align.cols.map(col)).select("pos", "v"))
+              (ColumnOps.tupleZip(posed, Seq("pos")), Seq("pos"))
+          }
         }
-      {
-        import scala.jdk.CollectionConverters._
-        zipped.toLocalIterator().asScala
-          .map(row => (1 to vars.size).map(i => row.getAs[Int](s"v$i"))
-            .mkString("(", ",", ")"))
-      }
+      stream(zipped, cols, small, out)
+        .map(row => out.indices.map(row.getInt).mkString("(", ",", ")"))
 
     case Print(v) => emit(get(v))
   }
@@ -546,7 +570,7 @@ final class Session(val engine: Engine) {
   private def evalSelect(assign: Option[String], c: String,
                          bounds: Option[(Long, Long)]): Iterator[String] = {
     val meta = catalog.require(c)
-    // one meta snapshot for both the srcLen recorded below and the data
+    // one meta snapshot for both the src recorded below and the data
     val base = Storage.readColumn(spark, meta)
     val df = bounds match {
       case None             => ColumnOps.selectAll(base)
@@ -554,19 +578,31 @@ final class Session(val engine: Engine) {
       case Some((lo, hi))   => ColumnOps.selectRange(base, lo, hi)
     }
     val ids = Ids(df, ordered = false, align = Align.fresh(Seq("id")),
-      srcCol = Some(c), srcLen = Some(meta.nextId), srcLive = Some(meta.liveSet),
-      fullSelect = bounds.isEmpty)
+      src = meta, fullSelect = bounds.isEmpty)
     assign match {
       case Some(v) => bind(v, ids); Iterator.empty
       case None    => emit(ids)
     }
   }
 
-  /** The fetch target's live set is the select source's (at its select).
-    * Only meaningful once the fetch's nextId == srcLen check has passed.
+  /** Two column snapshots hold the same live positions ([[ColumnMeta]]). */
+  private def sameLive(a: ColumnMeta, b: ColumnMeta): Boolean =
+    a.liveSet == b.liveSet && a.nextId == b.nextId
+
+  /** The operands' join trees, when all share one alignment lineage and
+    * one position source: then each holds every row of that source (a
+    * fetch keeps the lineage only if it drops none), and one join tree
+    * `source ⋈ c1 ⋈ c2 ...` zips them exactly. Joining each fetch to the
+    * source separately and zipping the results on the align columns
+    * instead reads the source once per operand, and Spark sizes a join
+    * of joins as the product of its inputs, so it plans shuffles there.
     */
-  private def sameLive(ids: Ids, target: ColumnMeta): Boolean =
-    ids.srcLive.contains(target.liveSet)
+  private def fusable(vs: Seq[Vals]): Option[Seq[Fused]] = {
+    val ts = vs.flatMap(_.tree)
+    if (ts.size == vs.size && vs.forall(_.align.tag == vs.head.align.tag) &&
+        ts.forall(_.source eq ts.head.source)) Some(ts)
+    else None
+  }
 
   private def emitOrBind(assign: Option[String], v: Vals): Iterator[String] =
     assign match {
@@ -575,28 +611,43 @@ final class Session(val engine: Engine) {
     }
 
   /** Fuse a tuple of singleton aggregate results: operands whose
-    * aggregates read the SAME input plan (`sameResult` on the analyzed
-    * plans — e.g. `max(v)`, `min(v)`, `count(v)` of one fetch) collapse
-    * into a single multi-expression `agg(...)` — one pass over the
-    * input instead of one plan subtree (and one broadcast job) per
+    * aggregates read one input — the SAME input plan (`sameResult` on the
+    * analyzed plans — e.g. `max(v)`, `min(v)`, `count(v)` of one fetch),
+    * or fetches from one position source ([[fusable]] — e.g. `max` of a
+    * join's left fetch and `min` of its right one, over one pair join) —
+    * collapse into a single multi-expression `agg(...)`: one pass over
+    * the input instead of one plan subtree (and one broadcast job) per
     * aggregate. Distinct inputs stay separate and cross-join 1x1.
     * Output columns are `v<k>` for operand position k (order-free — the
     * tuple formatter reads them by name).
     */
   private def fusedAggregates(vals: Seq[Vals]): DataFrame = {
-    val groups = mutable.ArrayBuffer.empty[(DataFrame, mutable.ArrayBuffer[Int])]
+    val groups = mutable.ArrayBuffer.empty[(Vals, mutable.ArrayBuffer[Int])]
     vals.zipWithIndex.foreach { case (v, i) =>
       val in = v.aggSrc.get._2
       groups.find { case (g, _) =>
-        g.queryExecution.analyzed.sameResult(in.queryExecution.analyzed)
+        if (g.tree.isDefined || in.tree.isDefined) fusable(Seq(g, in)).isDefined
+        else g.df.queryExecution.analyzed.sameResult(in.df.queryExecution.analyzed)
       } match {
         case Some((_, ix)) => ix += i
         case None          => groups += ((in, mutable.ArrayBuffer(i)))
       }
     }
-    groups.map { case (in, ix) =>
-      def ex(i: Int) = ColumnOps.aggExpr(vals(i).aggSrc.get._1).as(s"v${i + 1}")
-      in.agg(ex(ix.head), ix.tail.toSeq.map(ex): _*)
+    groups.map { case (g, ix) =>
+      val ins = ix.toSeq.map(i => vals(i).aggSrc.get)
+      // one group has one length, so any operand's bound holds
+      val one = oneTask(ins.flatMap(_._2.rowBound).minOption)
+      val (df, vs) =
+        if (g.tree.isEmpty) (g.df, ins.map(_ => col("v")))
+        else {
+          val names = ix.toSeq.map(i => s"_a$i")
+          (Fused.plan(spark, ins.map(_._2.tree.get), Nil, names, one), names.map(col))
+        }
+      val exs = ix.toSeq.zip(ins).zip(vs).map { case ((i, (atype, _)), v) =>
+        ColumnOps.aggExpr(atype, v).as(s"v${i + 1}")
+      }
+      // one partition satisfies the global aggregate: no exchange job
+      (if (one) df.coalesce(1) else df).agg(exs.head, exs.tail: _*)
     }.reduce(_.crossJoin(_))
   }
 
@@ -660,7 +711,7 @@ final class Session(val engine: Engine) {
         val posed = ColumnOps.withPos(
           v.df.select((v.align.cols :+ "v").map(col): _*),
           v.align.cols.map(col)).select("pos", "v")
-        Vals(posed, hasIds = false, align = Align.fresh(Seq("pos")))
+        Vals(posed, Align.fresh(Seq("pos")))
       }
       val lp = rank(l)
       // share the rank domain: same cols, same tag -> direct pos equi-join
@@ -668,32 +719,71 @@ final class Session(val engine: Engine) {
     }
 
   /** Stream an intermediate to the client, reference text formats:
-    * ordinal order = ascending align-column order (see [[Align]]).
-    *
-    * `toLocalIterator` on the globally-sorted plan fetches one partition
-    * per job, in partition order — a global sort range-partitions, so
-    * concatenation preserves the total order while the driver holds at
-    * most one partition of rows (vs `collect`'s whole-result buffer,
-    * which caps printable results at `spark.driver.maxResultSize`).
+    * ordinal order = ascending align-column order (see [[Align]]). A
+    * small result ([[smallResult]]) with a join tree is planned from the
+    * tree in one task.
     */
-  private def emit(i: Intermediate): Iterator[String] = {
-    import scala.jdk.CollectionConverters._
-    i match {
-      case ids: Ids =>
-        ids.df.orderBy(ids.align.cols.map(col): _*)
-          .select("id").toLocalIterator().asScala.map(_.getLong(0).toString)
-      case vals: Vals =>
-        val sorted =
-          if (vals.align.cols.isEmpty) vals.df
-          else vals.df.orderBy(vals.align.cols.map(col): _*)
-        sorted.select("v").toLocalIterator().asScala.map(_.getInt(0).toString)
-    }
+  private def emit(i: Intermediate): Iterator[String] = i match {
+    case ids: Ids =>
+      stream(ids.df, ids.align.cols, smallResult(ids.rowBound, 1), Seq("id"))
+        .map(_.getLong(0).toString)
+    case vals: Vals =>
+      val small = smallResult(vals.rowBound, 1)
+      val df = vals.tree.filter(_ => small).fold(vals.df)(t =>
+        Fused.plan(spark, Seq(t), vals.align.cols.map(col), Seq("v"), oneTask = true))
+      stream(df, vals.align.cols, small, Seq("v")).map(_.getInt(0).toString)
   }
 
-  /** Distinct ids of a position intermediate (delete is idempotent for
-    * duplicate ids, storage.c:1784-1788).
+  /** The bound is at or under [[Storage.SmallSortRows]] (1M rows): a
+    * result with such a bound runs in one task, one job, where a
+    * parallel plan pays a job per broadcast, exchange and sampling pass.
+    * Timed on select sources of 50k to 1M rows (SCALE.md "One-task rule
+    * for bounded results"): the one-task point, scan, range and
+    * half-table scan requests were faster than the parallel ones at
+    * every size, 1M included; larger sources were not timed.
     */
-  private def idsOf(ids: Ids): DataFrame = ids.df.select("id").distinct()
+  private def oneTask(bound: Option[Long]): Boolean =
+    bound.exists(_ <= Storage.SmallSortRows)
+
+  /** [[oneTask]], for a result of `nCols` int/long columns sent to the
+    * driver whole: its rows must also take at most half of
+    * `spark.driver.maxResultSize`.
+    */
+  private def smallResult(bound: Option[Long], nCols: Int): Boolean = {
+    val cap = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    // an unsafe row: 8 B of null bits plus 8 B per field
+    oneTask(bound) && (cap == 0L || bound.get * (8L + 8L * nCols) <= cap / 2)
+  }
+
+  /** The `out` columns of `df`'s rows in ascending `cols` order, as an
+    * iterator over `toLocalIterator`, which runs one job per partition.
+    *
+    * A `small` result sorts in ONE task: coalesce to one partition and
+    * sort within it, one result job. Any other result (join lists have
+    * no bound) sorts globally: a range-partitioned sort (a sampling job
+    * and a shuffle), so concatenating its partitions preserves the total
+    * order while the driver holds at most one partition of rows (vs
+    * `collect`'s whole-result buffer, which caps printable results at
+    * `spark.driver.maxResultSize`).
+    */
+  private def stream(df: DataFrame, cols: Seq[String], small: Boolean,
+                     out: Seq[String]): Iterator[org.apache.spark.sql.Row] = {
+    import scala.jdk.CollectionConverters._
+    val sorted =
+      if (cols.isEmpty) df
+      else if (small) df.coalesce(1).sortWithinPartitions(cols.map(col): _*)
+      else df.orderBy(cols.map(col): _*)
+    sorted.select(out.map(col): _*).toLocalIterator().asScala
+  }
+
+  /** Distinct ids of a position intermediate, for update's left join,
+    * where a repeated id would repeat its row. A select set is distinct
+    * by construction and is used as it is; only a join list, which may
+    * repeat ids, pays the distinct's shuffle.
+    */
+  private def idsOf(ids: Ids): DataFrame =
+    if (ids.ordered) ids.df.select("id").distinct() else ids.df.select("id")
 
   /** Mutations (load/insert/delete/update) serialize on the shared
     * catalog: each one is a require -> write -> update read-modify-write

@@ -45,9 +45,12 @@ object Storage {
     * the cluster. The single-task sort beats sampling+shuffle below ~1M
     * rows and loses past it (a 3M-row column loaded SLOWER than a
     * 6M-row one under the old 4M threshold, serial sort vs parallel
-    * range; SCALE.md "CSV load path vs scale").
+    * range; SCALE.md "CSV load path vs scale"). A result with a proven
+    * bound at or under it runs in one task by the same rule
+    * (`Session.oneTask`, timed separately: SCALE.md "One-task rule for
+    * bounded results").
     */
-  private val SmallSortRows = 1000000L
+  private[core] val SmallSortRows = 1000000L
 
   /** CSV files at or under this byte size load through the coalesce(1)
     * fast path (see [[parseCsv]]): a single-partition parse with zero

@@ -139,30 +139,31 @@ object ColumnOps {
 
   // ---- aggregates (aggregate.c:9-98) ----
 
-  /** Singleton aggregate of a values intermediate (any schema containing
-    * `v`), with the reference's empty-input identities: min->INT_MAX,
-    * max->INT_MIN, sum->0, count->0; avg on empty errors (DBEDIVZERO,
-    * aggregate.c:18-21). sum wraps at 32 bits; avg is truncating integer
-    * division. Output schema: `(v)`.
+  /** The aggregate expression alone, over int column `v` (the input's
+    * `v` unless given) — exposed so the engine can fuse several
+    * aggregates over one input into a single `agg(...)` pass (one job
+    * instead of one subtree per aggregate at tuple emission).
     */
-  /** The aggregate expression alone — exposed so the engine can fuse
-    * several aggregates over one input into a single `agg(...)` pass
-    * (one job instead of one subtree per aggregate at tuple emission).
-    */
-  def aggExpr(atype: AggType): Column = atype match {
-    case AggMin   => coalesce(min(col("v")), lit(Int.MaxValue))
-    case AggMax   => coalesce(max(col("v")), lit(Int.MinValue))
-    case AggSum   => wrapInt(coalesce(sum(col("v")), lit(0L)))
+  def aggExpr(atype: AggType, v: Column = col("v")): Column = atype match {
+    case AggMin   => coalesce(min(v), lit(Int.MaxValue))
+    case AggMax   => coalesce(max(v), lit(Int.MinValue))
+    case AggSum   => wrapInt(coalesce(sum(v), lit(0L)))
     case AggCount => count(lit(1)).cast(IntegerType)
     case AggAvg   =>
       // the reference's avg is agg_sum/agg_count with agg_sum a WRAPPING
       // 32-bit int (aggregate.c:64-84): wrap the sum first, then C
       // truncating division; empty input -> null here -> DBEDIVZERO at
       // the engine layer (null sum wraps to null, divTrunc passes it)
-      divTrunc(wrapInt(sum(col("v").cast(LongType))).cast(LongType),
+      divTrunc(wrapInt(sum(v.cast(LongType))).cast(LongType),
         count(lit(1))).cast(IntegerType)
   }
 
+  /** Singleton aggregate of a values intermediate (any schema containing
+    * `v`), with the reference's empty-input identities: min->INT_MAX,
+    * max->INT_MIN, sum->0, count->0; avg on empty errors (DBEDIVZERO,
+    * aggregate.c:18-21). sum wraps at 32 bits; avg is truncating integer
+    * division. Output schema: `(v)`.
+    */
   def aggregate(atype: AggType, vals: DataFrame): DataFrame = {
     val out = vals.agg(aggExpr(atype).as("v"))
     if (atype == AggAvg) out.na.drop(Seq("v")) // empty input -> caller errors
@@ -180,18 +181,26 @@ object ColumnOps {
     */
   def math(mtype: MathType, l: DataFrame, r: DataFrame,
            alignCols: Seq[String]): DataFrame = {
-    val lf = l.select(alignCols.map(col) :+ col("v").cast(LongType).as("v1"): _*)
-    val rf = r.select(alignCols.map(col) :+ col("v").cast(LongType).as("v2"): _*)
+    val lf = l.select(alignCols.map(col) :+ col("v").as("v1"): _*)
+    val rf = r.select(alignCols.map(col) :+ col("v").as("v2"): _*)
     // empty align = two singletons (aggregate results): 1x1 cross join
     val joined = if (alignCols.isEmpty) lf.crossJoin(rf)
                  else lf.join(rf, alignCols)
-    val vOut = mtype match {
-      case MathAdd => wrapInt(col("v1") + col("v2"))
-      case MathSub => wrapInt(col("v1") - col("v2"))
-      case MathMul => wrapInt(col("v1") * col("v2"))
-      case MathDiv => wrapInt(divTrunc(col("v1"), col("v2")))
+    joined.select(alignCols.map(col) :+
+      mathExpr(mtype, col("v1"), col("v2")).as("v"): _*)
+  }
+
+  /** The elementwise expression alone, over two int columns — exposed so
+    * the engine can compute it inside one fetch join tree.
+    */
+  def mathExpr(mtype: MathType, a: Column, b: Column): Column = {
+    val (x, y) = (a.cast(LongType), b.cast(LongType))
+    mtype match {
+      case MathAdd => wrapInt(x + y)
+      case MathSub => wrapInt(x - y)
+      case MathMul => wrapInt(x * y)
+      case MathDiv => wrapInt(divTrunc(x, y))
     }
-    joined.select(alignCols.map(col) :+ vOut.as("v"): _*)
   }
 
   // ---- tuple (server.c:656-701, rpc.c:209-235) ----

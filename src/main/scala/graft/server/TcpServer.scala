@@ -144,13 +144,15 @@ final class TcpServer(engine: Engine, port: Int = 0, threads: Int = 16,
 
       // the reference's RPC_FILE arm (server.c:818-839): spool the
       // client-streamed CSV body under the dbdir, evaluate the load
-      // that follows against the spool, answer one status, delete it
+      // that follows against the spool, delete it, answer one status
       def fileLoad(header: String): Unit = {
         val nLines = header.stripPrefix("FILE").trim.toLong
         require(nLines >= 0, s"negative FILE line count: $nLines")
         val spool = java.nio.file.Files.createTempFile(
           engine.spoolDir, "load-", ".csv.tmp")
-        try {
+        // the status goes out only after the spool is gone: a client that
+        // looks at the db dir once it has its answer finds no spool
+        val answer = try {
           val w = java.nio.file.Files.newBufferedWriter(spool, UTF_8)
           try {
             var i = 0L
@@ -167,12 +169,12 @@ final class TcpServer(engine: Engine, port: Int = 0, threads: Int = 16,
           if (opLine == null)
             throw new java.io.EOFException("connection closed after FILE frame")
           Parser.parseLine(opLine.trim) match {
-            case Some(Op.Load(_)) =>
-              reply(session.run(Op.Load(spool.toString), _ => ()))
-            case _ => status(
-              s"-ERR DBEPARSE: FILE frame must be followed by load(...), got: $opLine")
+            case Some(Op.Load(_)) => session.run(Op.Load(spool.toString), _ => ())
+            case _ => Some(
+              s"DBEPARSE: FILE frame must be followed by load(...), got: $opLine")
           }
         } finally java.nio.file.Files.deleteIfExists(spool)
+        reply(answer)
       }
 
       var line = in.readLine()

@@ -427,6 +427,185 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("a join-list fetch keeps its lineage only if the target holds every listed id") {
+    val db = tmpDir("graftdb")
+    val dir = tmpDir("csv")
+    Files.writeString(Paths.get(s"$dir/abc.csv"),
+      "a,b,c\n1,10,100\n2,20,200\n3,30,300\n4,40,400\n")
+    val e = new Engine(spark, db)
+    e.execute(
+      s"""create(a,"unsorted")
+         |create(b,"unsorted")
+         |create(c,"unsorted")
+         |load("$dir/abc.csv")
+         |d=select(c,200)
+         |delete(d,c)
+         |""".stripMargin)
+    val s = e.newSession()
+    run(s, "s=select(a)\nfa=fetch(a,s)\npl,pr=hashjoin(fa,fa)\nxc=fetch(c,pl)\nxb=fetch(b,pl)")
+    // c lost id 1, which the pair list holds: xc has 3 rows, xb 4
+    assert(run(s, "print(xc)") == Seq("100", "300", "400"))
+    assert(run(s, "print(xb)") == Seq("10", "20", "30", "40"))
+    assert(run(s, "nc=count(xc)\nnb=count(xb)\ntuple(nc,nb)") == Seq("(3,4)"))
+    for (op <- Seq("tuple(xc,xb)", "add(xc,xb)"))
+      assert(intercept[DbException](run(s, op)).code == "DBEINTERMDIFFLEN", op)
+    // b is pristine and as long as a, the list's fetched column: it keeps
+    // the lineage, and zips with a second fetch from the other side
+    run(s, "ya=fetch(a,pr)")
+    assert(run(s, "tuple(xb,ya)") == Seq("(10,1)", "(20,2)", "(30,3)", "(40,4)"))
+  }
+
+  test("fetches from one position source fuse exactly, before and after deletes") {
+    // t: ta in [0,6), tb, tc in [0,8); td = id, never deleted
+    val n = 30
+    val rnd = new java.util.Random(7)
+    val rows = (0 until n).map(i => (rnd.nextInt(6), rnd.nextInt(8), rnd.nextInt(8)))
+    val dir = tmpDir("csv")
+    Files.writeString(Paths.get(s"$dir/t.csv"), rows.zipWithIndex
+      .map { case ((a, b, c), i) => s"$a,$b,$c,$i" }.mkString("ta,tb,tc,td\n", "\n", "\n"))
+    // two ids inside the select range ta in [1,3], and one outside
+    val inRange = rows.indices.filter(i => rows(i)._1 >= 1 && rows(i)._1 <= 3)
+    val outside = rows.indices.filterNot(inRange.contains).head
+    val gone = Seq(inRange(1), inRange(4), outside)
+    // a range select, and a full select whose source length bounds the
+    // rows exactly: p1, p2 = fetches of tb and tc from set p, pm their sum
+    val sets = Seq("r" -> "select(ta,1,3)", "f" -> "select(td)")
+    val fetches = sets.map { case (p, sel) => s"$p=$sel\n${p}1=fetch(tb,$p)\n${p}2=fetch(tc,$p)" }
+    val join =
+      """ls=select(ta,1,3)
+        |l=fetch(tb,ls)
+        |rs=select(ta)
+        |rr=fetch(tc,rs)
+        |pl,pr=hashjoin(l,rr)
+        |jk=fetch(ta,pl)
+        |ju=fetch(tb,pr)
+        |ja=max(jk)
+        |jb=min(ju)
+        |jc=count(jk)
+        |jd=count(ju)
+        |""".stripMargin
+    for (deleted <- Seq(Nil, Seq("tb"), Seq("tb", "tc"), Seq("ta", "tb", "tc"))) {
+      // the model: a column's value at id i, if live
+      def at(c: Int)(i: Int): Option[Int] =
+        if (deleted.contains(Seq("ta", "tb", "tc")(c)) && gone.contains(i)) None
+        else Some(Seq(rows(i)._1, rows(i)._2, rows(i)._3)(c))
+      def zip(x: Seq[Int], y: Seq[Int]): Either[String, Seq[(Int, Int)]] =
+        if (x.size == y.size) Right(x.zip(y)) else Left("DBEINTERMDIFFLEN")
+      val r = inRange.filter(at(0)(_).isDefined)
+      val l = r.flatMap(i => at(1)(i).map(i -> _))
+      val rr = rows.indices.filter(at(0)(_).isDefined).flatMap(i => at(2)(i).map(i -> _))
+      val pairs = for ((li, lv) <- l; (ri, rv) <- rr if lv == rv) yield (li, ri)
+      val (jk, ju) = (pairs.flatMap(p => at(0)(p._1)), pairs.flatMap(p => at(1)(p._2)))
+      def tup(xs: Seq[Int]) = xs.mkString("(", ",", ")")
+      val sums = sets.map { case (p, _) =>
+        val ids = if (p == "r") r else rows.indices
+        val (p1, p2) = (ids.flatMap(at(1)), ids.flatMap(at(2)))
+        p -> (zip(p1, p2), zip(p1, p2).map(_.map { case (x, y) => x + y }))
+      }.toMap
+      val expected = Seq(
+        "tuple(ja,jb,jc,jd)" -> Right(Seq(tup(Seq(jk.max, ju.min, jk.size, ju.size)))),
+        "tuple(jk,ju)" -> zip(jk, ju).map(_.map(p => tup(Seq(p._1, p._2))))) ++
+        sets.flatMap { case (p, _) =>
+          val (zipped, pm) = sums(p)
+          Seq(s"${p}m=add(${p}1,${p}2)" -> pm.map(_ => Nil),
+            s"tuple(${p}1,${p}2)" -> zipped.map(_.map(q => tup(Seq(q._1, q._2))))) ++
+            pm.toSeq.flatMap(v => Seq(
+              s"print(${p}m)" -> Right(v.map(_.toString)),
+              s"a1=min(${p}m)\na2=max(${p}m)\na3=sum(${p}m)\na4=count(${p}m)\ntuple(a1,a2,a3,a4)" ->
+                Right(Seq(tup(Seq(v.min, v.max, v.sum, v.size))))))
+        }
+
+      val e = new Engine(spark, tmpDir("graftdb"))
+      e.execute(Seq("ta", "tb", "tc", "td").map(c => s"""create($c,"unsorted")""")
+        .mkString("", "\n", s"""\nload("$dir/t.csv")\n"""))
+      if (deleted.nonEmpty) gone.foreach(i =>
+        e.execute(s"d=select(td,$i)\ndelete(d,${deleted.mkString(",")})"))
+      val s = e.newSession()
+      run(s, (fetches :+ join).mkString("\n"))
+      expected.foreach { case (line, want) =>
+        val got = try Right(run(s, line)) catch { case x: DbException => Left(x.code) }
+        assert(got == want, s"$line after deleting from ${deleted.mkString(",")}")
+      }
+      // the one-tree path runs where the fetch targets share the source's
+      // live set: untouched, or deleted from together with it
+      val fused = deleted.isEmpty || deleted.contains("ta")
+      if (sums("r")._2.isRight) {
+        assert((alignOf(s, "rm") == Seq("id")) == fused, deleted)
+        assert(s.get("rm").asInstanceOf[Vals].tree.isDefined == fused, deleted)
+      }
+      assert(s.get("ju").asInstanceOf[Vals].tree.isDefined ==
+        (deleted.isEmpty || deleted.contains("tc")), deleted)
+    }
+  }
+
+  test("bounded emission keeps id order over a column spread across part files") {
+    val e = unsortedEngine()
+    // a load, then delta files from inserts, a copy-on-write delete, and
+    // more deltas on the rewritten version
+    (0 until 6).foreach(i => e.execute(s"insert(ra,${100 + i},rc,1,rd,${1000 + i})"))
+    e.execute("d=select(rd,30,50)\ndelete(d,ra,rc,rd)")
+    (6 until 10).foreach(i => e.execute(s"insert(ra,${100 + i},rc,1,rd,${1000 + i})"))
+    val meta = e.catalog.require("rd")
+    val parts = new java.io.File(meta.dataPath).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(parts > 1, s"one part file only ($parts)")
+    val rd = Seq(10, 20, 60, 70, 80) ++ (1000 until 1010)
+    val ids = Seq(0, 1, 5, 6, 7) ++ (8 until 18)
+    assert(e.execute("p=select(rc,1,9)\nv=fetch(rd,p)\nprint(v)") == rd.map(_.toString))
+    assert(e.execute("p=select(rc,1,9)\nprint(p)") == ids.map(_.toString))
+    assert(e.execute("p=select(rc,1,9)\nv=fetch(rd,p)\nw=fetch(ra,p)\ntuple(v,w)") ==
+      rd.zip(Seq(1, 2, 1, 2, 9) ++ (100 until 110)).map { case (x, y) => s"($x,$y)" })
+  }
+
+  test("Spark jobs per server_mixed request shape") {
+    // the benchmark's tables, scaled down: I (k sorted, ~4 rows a key;
+    // b b+tree, unique; u unsorted) and M (x, y unsorted)
+    val n = 2000
+    val rnd = new java.util.Random(11)
+    val perm = scala.util.Random.shuffle((0 until n).toVector)
+    val dir = tmpDir("csv")
+    Files.writeString(Paths.get(s"$dir/i.csv"), (0 until n)
+      .map(i => s"${rnd.nextInt(n / 4)},${perm(i)},${rnd.nextInt(n)}")
+      .mkString("k,b,u\n", "\n", "\n"))
+    Files.writeString(Paths.get(s"$dir/m.csv"), (0 until 500)
+      .map(_ => s"${rnd.nextInt(500)},${rnd.nextInt(1000)}").mkString("x,y\n", "\n", "\n"))
+    val e = new Engine(spark, tmpDir("graftdb"))
+    e.execute(
+      s"""create(k,"sorted")
+         |create(b,"b+tree")
+         |create(u,"unsorted")
+         |create(x,"unsorted")
+         |create(y,"unsorted")
+         |load("$dir/i.csv")
+         |load("$dir/m.csv")
+         |d=select(x,7)
+         |delete(d,x,y)
+         |""".stripMargin)
+    def join(kw: String) =
+      s"jls=select(b,100,110)\njl=fetch(u,jls)\njrs=select(b)\njr=fetch(b,jrs)\n" +
+        s"pl,pr=$kw(jl,jr)\njk=fetch(k,pl)\nju=fetch(u,pr)\n" +
+        "ja=max(jk)\njb=min(ju)\njc=count(jk)\njd=count(ju)\ntuple(ja,jb,jc,jd)"
+    def range(sel: String, f1: String, f2: String) =
+      s"r=$sel\nr1=fetch($f1,r)\nr2=fetch($f2,r)\nrm=add(r1,r2)\n" +
+        "a1=min(rm)\na2=max(rm)\na3=sum(rm)\na4=count(rm)\ntuple(a1,a2,a3,a4)"
+    val shapes = Seq(
+      ("point", 1, "p=select(x,12)\npf=fetch(y,p)\nprint(pf)"),
+      ("point", 1, "p=select(k,12)\npf=fetch(u,p)\nprint(pf)"),
+      ("scan", 1, "s=select(b,300,700)\nsf=fetch(u,s)\nprint(sf)"),
+      ("range", 1, range("select(x,40,45)", "y", "x")),
+      ("range", 1, range("select(b,40,60)", "u", "k"))) ++
+      Seq("hashjoin", "sortjoin", "loopjoin", "treejoin").map(kw => ("join", 7, join(kw))) ++
+      Seq(("update", 2, "q=select(x,20,22)\nupdate(q,y,5)"),
+        ("delete", 4, "d=select(x,30)\ndelete(d,x,y)"))
+    val s = e.newSession()
+    shapes.foreach { case (_, _, script) => run(s, script) } // warm
+    shapes.foreach { case (cls, most, script) =>
+      val jobs = jobsDuring(run(s, script))
+      info(s"$cls: $jobs Spark jobs")
+      assert(jobs <= most, s"$cls: $jobs Spark jobs (at most $most)\n$script")
+    }
+  }
+
   test("insert/delete/update with stable ids (p4challenge shape)") {
     // p4challenge loads all-unsorted (mutations are unsorted-only)
     val db = tmpDir("graftdb")

@@ -302,6 +302,36 @@ class TcpServerSpec extends SparkSpec {
     } finally engine.close()
   }
 
+  test("a FILE load's spool is deleted before its status is sent") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val engine = new Engine(spark, tmpDir("tcp_spool_db"))
+    try withServer(engine) { port =>
+      val sock = new java.net.Socket("127.0.0.1", port)
+      try {
+        val in = new java.io.BufferedReader(
+          new java.io.InputStreamReader(sock.getInputStream, UTF_8))
+        val w = new java.io.BufferedWriter(
+          new java.io.OutputStreamWriter(sock.getOutputStream, UTF_8))
+        def req(lines: String*): String = {
+          lines.foreach { l => w.write(l); w.newLine() }
+          w.flush()
+          in.readLine()
+        }
+        def spools(): Seq[String] = new java.io.File(engine.dbDir).listFiles()
+          .map(_.getName).filter(_.endsWith(".csv.tmp")).toSeq
+        for (i <- 0 until 20) {
+          assert(req(s"""create(s$i,"unsorted")""") == "+OK")
+          val body = (0 until 50).map(j => s"${i * 100 + j}")
+          val st = req(Seq(s"FILE ${body.size + 1}", s"s$i") ++ body ++
+            Seq("""load("/client-only/s.csv")"""): _*)
+          assert(st == "+OK", s"load $i: $st")
+          // checked the moment the status arrives: no grace for a late delete
+          assert(spools().isEmpty, s"load $i left ${spools().mkString(", ")}")
+        }
+      } finally sock.close()
+    } finally engine.close()
+  }
+
   test("close() EOFs an ACTIVE idle connection promptly") {
     import java.nio.charset.StandardCharsets.UTF_8
     val engine = new Engine(spark, tmpDir("tcp_activeclose_db"))
