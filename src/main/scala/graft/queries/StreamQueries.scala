@@ -148,11 +148,13 @@ object StreamQueries {
     * ([[EventStreams.intervalJoinOuter]]): clicks with no purchase
     * within the 6-hour horizon surface once with null right columns —
     * but only after the watermark PROVES the horizon empty, so the feed
-    * rides [[eventFeedBatches]]' sentinel tail (the sentinels pass both
-    * type filters via the `user_id < 0` arm — a filtered-out sentinel
-    * would never reach the watermark operator and the unmatched rows
-    * would sit in state forever). Nulls are coalesced to -1 for the
-    * hash compare (engines stringify missing values differently).
+    * carries [[eventFeedBatches]]' two sentinels. They pass both type
+    * filters via the `user_id < 0` arm (a filtered-out sentinel would
+    * never reach the watermark operator and the unmatched rows would
+    * sit in state forever); the final sentinel-only batch evicts every
+    * real left row under the watermark sentinel 1 set and emits the
+    * unmatched ones. Nulls are coalesced to -1 for the hash compare
+    * (engines stringify missing values differently).
     */
   def streamIntervalJoinOuter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -191,16 +193,23 @@ object StreamQueries {
         .toSeq
     }
 
-  /** The time-ordered replay feed chunked into micro-batches, followed
-    * by two future SENTINEL events (user_id −1, far past the corpus),
-    * each in its OWN batch. Closed-window/session operators only EMIT
-    * once the watermark passes them, and batch N runs under the
-    * watermark computed from data through batch N−1 — so the first
-    * sentinel's batch advances the watermark beyond every real event,
-    * and the second sentinel's batch is where all real windows/sessions
-    * (and flatMapGroupsWithState's event-time timeouts) actually flush.
-    * Sentinel rows are filtered from every output; the sentinels' own
-    * windows stay open and unemitted by construction.
+  /** The time-ordered replay feed chunked into micro-batches, with two
+    * future SENTINEL events (user_id −1, far past the corpus): sentinel 1
+    * rides the LAST real batch, sentinel 2 is a batch of its own, so the
+    * feed is `[chunk0, chunk1 + sentinel1, sentinel2]`. Closed-window/
+    * session operators only EMIT once the watermark passes them, and
+    * batch N evicts state under the watermark computed from data
+    * through batch N−1 (and drops late rows under an older one). So
+    * chunk1's real rows see the watermarks they saw in a batch of their
+    * own (sentinel 1 beside them changes nothing), the watermark after
+    * that batch is the one a sentinel-only batch would have left, and
+    * sentinel 2's batch is where all remaining real windows/sessions
+    * (and flatMapGroupsWithState's event-time timeouts, on state no real
+    * row touches after chunk1) flush. A separate sentinel-1 batch would
+    * only move part of that flush one batch earlier; the append output,
+    * the union over batches, is the same (StreamingSpec pins it per
+    * operator). Sentinel rows are filtered from every output; the
+    * sentinels' own windows stay open and unemitted by construction.
     */
   private def eventFeedBatches(s: SparkSession, d: String): Seq[Seq[Event]] = {
     val rows = eventRows(s, d)
@@ -212,9 +221,10 @@ object StreamQueries {
     // nothing late) for every operator fed from here, so more batches
     // buy only overhead; StreamingSpec drives the multi-batch straggler
     // and timeout paths with explicit per-batch feeds instead
-    Replay.chunks(rows, 2) ++ Seq(
-      Seq(Event(-1L, -1L, "sentinel",
-        new Timestamp(horizon + 100L * 86400000L), 0.0)),
+    val real = Replay.chunks(rows, 2)
+    real.init ++ Seq(
+      real.last :+ Event(-1L, -1L, "sentinel",
+        new Timestamp(horizon + 100L * 86400000L), 0.0),
       Seq(Event(-1L, -2L, "sentinel",
         new Timestamp(horizon + 200L * 86400000L), 0.0)))
   }
@@ -230,15 +240,22 @@ object StreamQueries {
     */
   def streamWindow(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = Replay.replay(s, eventFeedBatches(s, d)) { in =>
-      EventStreams.windowedStats(in, windowDur = "1 hour",
-        lateness = "30 minutes")
-    }
+    val out = Replay.replay(s, eventFeedBatches(s, d))(windowTransform)
     out.filter(col("user_id") >= 0)
       .select(col("user_id"), unix_millis(col("w_start")).as("w_start_ms"),
         col("n_events"), col("cents"))
       .orderBy("user_id", "w_start_ms")
   }
+
+  /** [[streamWindow]]'s streaming transform, projected INSIDE the
+    * stream: the optimizer then prunes the HLL type count from the
+    * aggregate (and `w_end` from its output), so the state store never
+    * copies, writes or evicts a buffer the entry throws away.
+    */
+  private[graft] def windowTransform(in: DataFrame): DataFrame =
+    EventStreams.windowedStats(in, windowDur = "1 hour",
+      lateness = "30 minutes")
+      .select("user_id", "w_start", "n_events", "cents")
 
   /** Declarative session windows replayed end-to-end
     * ([[EventStreams.sessionStats]], 30-minute gap): the sentinels close
@@ -265,7 +282,8 @@ object StreamQueries {
     * imperative state code: custom merge logic == declarative
     * session_window == batch SQL, on real data. Emission here needs the
     * event-time TIMEOUT path (sessions close when the watermark passes
-    * last + gap), which the second sentinel's batch triggers. End
+    * last + gap), which closes every session still open in the final
+    * sentinel-only batch, under the watermark sentinel 1 set. End
     * conventions differ — the custom operator reports the LAST EVENT
     * time where session_window reports last + gap — so the projection
     * adds the gap to align on one convention and the two entries share

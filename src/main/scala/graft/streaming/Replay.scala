@@ -41,15 +41,21 @@ object Replay {
     * time and watermarks advance exactly as the caller laid the chunks
     * out) — run `transform`'s streaming query to completion, and return
     * everything the append-mode sink saw, as a DataFrame on [[session]].
+    * The memory sink's temp view is dropped once the DataFrame has
+    * resolved it: the DataFrame keeps the sink's rows, and the reused
+    * replay session keeps no view (and no rows) per call.
     */
   def replay[A: Encoder](spark: SparkSession, batches: Seq[Seq[A]],
                          noDataBatches: Boolean = false)(
       transform: DataFrame => DataFrame): DataFrame = {
     val name = "replay_" +
       java.util.UUID.randomUUID.toString.replace("-", "")
-    replayTo(spark, batches, noDataBatches)(in => transform(in).writeStream
-      .format("memory").queryName(name).outputMode("append").start())
-    session(spark, noDataBatches).table(name)
+    val sess = session(spark, noDataBatches)
+    try {
+      replayTo(spark, batches, noDataBatches)(in => transform(in).writeStream
+        .format("memory").queryName(name).outputMode("append").start())
+      sess.table(name)
+    } finally sess.catalog.dropTempView(name)
   }
 
   /** [[replay]] for SINK-side transforms (foreachBatch maintenance like

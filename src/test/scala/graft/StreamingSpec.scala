@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import graft.streaming.EventStreams
@@ -1392,5 +1393,142 @@ class StreamingSpec extends SparkSpec {
       assert(replayed().sparkSession eq out.sparkSession)
       assert(!(out.sparkSession eq spark))
     } finally spark.conf.unset(gKey)
+  }
+
+  /** Runs `body`, which starts and finishes ONE stream on the replay
+    * session (reused per caller and override set), and returns its
+    * result with the number of micro-batches the stream ran. Progress
+    * reports of idle triggers carry no `addBatch` phase and are not
+    * batches. Waits for the stream's termination event: the listener bus
+    * delivers it after every progress event of the same stream.
+    */
+  private def batchesRun[T](body: => T): (T, Int) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val replaySession = graft.streaming.Replay.replay(spark, Seq(Seq(0L)))(identity)(
+      org.apache.spark.sql.Encoders.scalaLong).sparkSession
+    val batches = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.durationMs.containsKey("addBatch")) batches.incrementAndGet()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = done.countDown()
+    }
+    replaySession.streams.addListener(l)
+    try {
+      val out = body
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "stream termination never delivered")
+      (out, batches.get)
+    } finally replaySession.streams.removeListener(l)
+  }
+
+  test("Replay: folding sentinel 1 into the last real batch keeps every event operator's output") {
+    // The event entries replay [chunk0, chunk1 + sentinel1, sentinel2]
+    // where they used to replay [chunk0, chunk1, sentinel1, sentinel2].
+    // Batch N evicts state under the watermark computed through batch
+    // N-1 (and drops late rows under an older one), so the two tails must
+    // emit the same row SET. The feed makes that non-trivial: chunk0's
+    // minute-40 click and minute-38 purchase move the watermarks to 35
+    // (one stream) and 33 (the join's two sides), so windows, sessions
+    // and unmatched clicks from the first minutes close in the middle
+    // batch, the rest only at the flush. chunk1's minute-26 row falls in
+    // a window that watermark has already closed, but Spark drops late
+    // rows under the watermark of the batch BEFORE, so it is admitted and
+    // emitted in the batch it arrives in; under sentinel 1's watermark
+    // every chunk1 row would be late.
+    val spark0 = spark
+    import spark0.implicits._
+    val chunk0 = Seq(ev(1, 1, 1), ev(1, 2, 3, "purchase", 2.5), ev(2, 3, 4),
+      ev(3, 4, 20), ev(3, 12, 38, "purchase"), ev(1, 5, 40))
+    val chunk1 = Seq(ev(5, 10, 26), ev(1, 6, 42), ev(4, 7, 44),
+      ev(4, 8, 50, "purchase"), ev(2, 9, 60, "purchase"), ev(3, 11, 61))
+    val s1 = ev(-1, -1, 10000, "sentinel")
+    val s2 = ev(-1, -2, 20000, "sentinel")
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "windowedStats" -> (in => EventStreams.windowedStats(in, "10 minutes", "5 minutes")),
+      "sessionStats" -> (in => EventStreams.sessionStats(in, "10 minutes", "5 minutes")),
+      "sessionizeCustom" -> (in => EventStreams.sessionizeCustom(in.as[Event],
+        gapMs = 10 * 60000L, lateness = "5 minutes").toDF()),
+      "intervalJoinOuter" -> (in => EventStreams.intervalJoinOuter(
+        in.filter(col("event_type") === "click" || col("user_id") < 0),
+        in.filter(col("event_type") === "purchase" || col("user_id") < 0),
+        horizon = "10 minutes", lateness = "5 minutes")))
+    ops.foreach { case (name, t) =>
+      def real(batches: Seq[Seq[Event]]): Set[Row] =
+        graft.streaming.Replay.replay(spark, batches)(t)
+          .filter(col("user_id") >= 0).collect().toSet
+      val old = real(Seq(chunk0, chunk1, Seq(s1), Seq(s2)))
+      val folded = real(Seq(chunk0, chunk1 :+ s1, Seq(s2)))
+      assert(folded == old, s"$name: folded tail changed the output: " +
+        s"old=$old folded=$folded")
+      assert(folded.exists(_.getAs[Long]("user_id") == 5L),
+        s"$name: the straggler must be admitted: $folded")
+      // a replay's output is what its batches emitted, so the rows a
+      // one-batch-shorter replay lacks are the ones its last batch emits
+      val throughMiddle = real(Seq(chunk0, chunk1 :+ s1))
+      assert((throughMiddle -- real(Seq(chunk0))).nonEmpty,
+        s"$name: nothing closed in the middle batch")
+      assert((folded -- throughMiddle).nonEmpty, s"$name: nothing closed at the flush")
+    }
+  }
+
+  test("stream_window replays 3 micro-batches, with no HLL buffer in its state") {
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = tmpDir("events")
+    val base = 1704067200000L // 2024-01-01, so nothing ties the initial watermark
+    (0 until 40).map { i =>
+      Event(i % 4, i, if (i % 3 == 0) "view" else "click",
+        new Timestamp(base + i * 7L * 60000L), i * 0.25)
+    }.toDF().write.parquet(s"$dir/events.parquet")
+    val (out, batches) = batchesRun {
+      graft.queries.StreamQueries.streamWindow(spark, dir).collect()
+    }
+    assert(batches == 3, s"micro-batches: $batches")
+    assert(out.map(_.getLong(2)).sum == 40L, s"every event in a closed window: ${out.toSeq}")
+
+    // the transform's optimized plan, as the stream ran it: pruning must
+    // drop approx_count_distinct from the stateful aggregate, which the
+    // unprojected operator keeps
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def hll(t: DataFrame => DataFrame): Boolean = {
+      val in = MemoryStream[Event]
+      val q = t(in.toDF()).writeStream.format("memory")
+        .queryName(s"hll_${System.nanoTime}").outputMode("append").start()
+      try {
+        in.addData(ev(1, 1, 1))
+        q.processAllAvailable()
+        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.optimizedPlan
+          .exists(_.expressions.exists(_.exists(_.isInstanceOf[HyperLogLogPlusPlus])))
+      } finally q.stop()
+    }
+    assert(hll(EventStreams.windowedStats(_, "1 hour", "30 minutes")),
+      "the unprojected operator should carry the HLL aggregate")
+    assert(!hll(graft.queries.StreamQueries.windowTransform),
+      "stream_window's state carries the HLL buffer it throws away")
+  }
+
+  test("Replay: a replay leaves no sink view on the replay session, and its rows stay readable") {
+    val spark0 = spark
+    import spark0.implicits._
+    def replayed(k: Long): DataFrame =
+      graft.streaming.Replay.replay(spark, Seq(Seq(k, k + 1), Seq(k + 2)))(identity)
+    def rows(df: DataFrame): Seq[Long] =
+      df.as[Long].collect().sorted.toSeq
+    val outs = Seq(10L, 20L, 30L).map(k => k -> replayed(k))
+    val views = outs.head._2.sparkSession.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("replay_"))
+    assert(views.isEmpty, s"replay sink views left behind: ${views.toSeq}")
+    def check(): Unit = outs.foreach { case (k, df) =>
+      assert(rows(df) == Seq(k, k + 1, k + 2))
+      assert(rows(df) == Seq(k, k + 1, k + 2), "second materialization")
+    }
+    check()
+    assert(rows(replayed(40L)) == Seq(40L, 41L, 42L))
+    check()
   }
 }
