@@ -33,6 +33,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * loops minimize, walking cids in ascending order with a strict `<` so
   * equal-distance ties keep the SMALLEST cid, exactly `min_by(cid,
   * struct(d2, cid))`.
+  *
+  * The argmin itself is [[PqEncodeCodes]]: IVF assignment is its m = 1
+  * code. The loops return POSITIONS in the flat codebook; every builder
+  * writes contiguous cids 0..k-1, so a position is its cid
+  * ([[graft.pipeline.Pq.localCodebook]] rejects a codebook with a gap).
   */
 
 private[functions] object CodebookOpsShared {
@@ -56,80 +61,10 @@ private[functions] object CodebookOpsShared {
 }
 import CodebookOpsShared.{litErr, requireLongArrays}
 
-/** Argmin cid over a flattened coarse codebook.
-  *
-  * `cents` is the k x dim codebook flattened row-major (centroid cid
-  * ASCENDING — position i holds the centroid with the i-th smallest
-  * cid), `cn2` its per-centroid squared norms in the same order.
-  * Returns the POSITION of the argmin centroid (callers map positions
-  * back to cids; every builder writes contiguous cids 0..k-1, which
-  * makes position == cid — [[graft.pipeline.Ivf.localCodebook]]
-  * enforces that on read).
-  */
-case class CodebookArgmin(first: Expression, second: Expression,
-                          third: Expression) extends TernaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = CodebookArgmin.name
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    requireLongArrays(prettyName, ("q", first.dataType),
-      ("cents", second.dataType), ("cn2", third.dataType))
-
-  override protected def nullSafeEval(q: Any, cents: Any, cn2: Any): Any =
-    CodebookArgmin.argmin(q.asInstanceOf[ArrayData],
-      cents.asInstanceOf[ArrayData], cn2.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, c, n) => {
-      val cls = CodebookArgmin.getClass.getName.stripSuffix("$")
-      s"${ev.value} = $cls.argmin($q, $c, $n);"
-    })
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): CodebookArgmin =
-    copy(first = f, second = s, third = t)
-}
-
-object CodebookArgmin {
-  val name = "graft_cb_argmin"
-
-  def apply(q: Column, cents: Column, cn2: Column): Column =
-    column(CodebookArgmin(expr(q), expr(cents), expr(cn2)))
-
-  /** Shared by interpreted and generated code. */
-  def argmin(q: ArrayData, cents: ArrayData, cn2: ArrayData): Int = {
-    val dim = q.numElements()
-    val k = cn2.numElements()
-    if (k == 0) throw litErr(name, "empty codebook")
-    if (cents.numElements() != k * dim)
-      throw litErr(name, s"flat codebook length ${cents.numElements()} " +
-        s"!= k*dim = $k*$dim")
-    var best = 0
-    var bestScore = Long.MaxValue
-    var i = 0
-    while (i < k) {
-      var dot = 0L
-      var j = 0
-      val base = i * dim
-      while (j < dim) {
-        dot += q.getLong(j) * cents.getLong(base + j)
-        j += 1
-      }
-      val score = cn2.getLong(i) - 2L * dot
-      // strict <: equal-distance ties keep the smallest position,
-      // matching min_by(cid, struct(d2, cid)) for ascending cids
-      if (score < bestScore) { bestScore = score; best = i }
-      i += 1
-    }
-    best
-  }
-}
-
 /** The n nearest centroid POSITIONS of one vector, ascending by
-  * (distance, cid) — the nprobe/nAssign generalization of
-  * [[CodebookArgmin]] (n = 1 degenerates to a singleton of the same
-  * argmin). Returns min(n, k) positions. Replaces the window
+  * (distance, cid) — the nprobe/nAssign generalization of the
+  * [[PqEncodeCodes]] argmin at m = 1 (n = 1 degenerates to a singleton
+  * of the same argmin). Returns min(n, k) positions. Replaces the window
   * `row_number` over the n x k crossJoin expansion (which shuffled
   * every expanded row to rank k local candidates) and the
   * `slice(sort_array(collect_list(...)))` aggregate with a pure

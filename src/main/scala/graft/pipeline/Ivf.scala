@@ -1,9 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{CodebookArgmin, CodebookTopN, LongArrayDot}
+import graft.functions.{CodebookTopN, LongArrayDot}
 
 /** IVF (inverted-file) approximate nearest-neighbor search: a coarse
   * k-means quantizer partitions vectors into cells; a query scores only
@@ -13,143 +12,58 @@ import graft.functions.{CodebookArgmin, CodebookTopN, LongArrayDot}
   *
   * Everything is distributed except the centroid table itself — k x dim
   * integers, legitimately driver-sized (the coarse codebook of a 100 TB
-  * index is kilobytes; it broadcasts to every assignment join). Distances
-  * use the codegen'd [[LongArrayDot]]: d2(a,c) = |a|^2 + |c|^2 - 2<a,c>,
-  * all exact integer arithmetic on quantized vectors. Training is Lloyd's
-  * algorithm with deterministic init (first k vectors by id), `iters`
-  * rounds of assign (broadcast join) + recompute (posexplode + per-dim
-  * integer mean) — each round is two narrow shuffles.
+  * index is kilobytes; it rides as a literal in every assignment
+  * projection). Distances are exact integer arithmetic on quantized
+  * vectors. The coarse quantizer IS product quantization with one
+  * subspace: training is [[Pq.train]] at m = 1 (Lloyd's with
+  * deterministic first-k-by-id init, each round one job with a single
+  * reduced shuffle) and assignment is the m = 1 code of [[Pq]]'s encoder.
   */
 object Ivf {
 
-  /** Driver-local codebook: cids ascending, centroids flattened row-major
-    * plus per-centroid squared norms — the literal operands of the
-    * shuffle-free [[CodebookArgmin]] projection. Collecting
-    * here is the module's standing contract, not a new driver crossing:
-    * the codebook is k x dim integers (kilobytes at any corpus scale)
-    * and already lives on the driver every training round.
-    */
-  private[pipeline] final case class LocalCodebook(
-      cids: Seq[Int], flat: Seq[Long], cn2: Seq[Long])
-
-  private[pipeline] def localCodebook(centroids: DataFrame): LocalCodebook = {
-    val rows = centroids
-      .select(col("cid").cast("int"), col("c"), col("cn2").cast("long"))
-      .collect().sortBy(_.getInt(0))
-    LocalCodebook(
-      rows.map(_.getInt(0)).toSeq,
-      rows.flatMap(_.getSeq[Long](1)).toSeq,
-      rows.map(_.getLong(2)).toSeq)
-  }
-
   /** Train k centroids on (vec_id, q) prepared vectors; returns the
-    * centroid DataFrame `(cid, c, cn2)` (quantized ints, squared norm).
-    *
-    * Each Lloyd's round is ONE job with a single reduced shuffle: the
-    * assignment is the shuffle-free [[assign]] projection, and the
-    * per-cell means are per-dimension `sum(element_at(q, j))` aggregates
-    * (map-side partials reduce each partition to ≤k rows of dim sums —
-    * the posexplode form shuffled n x dim exploded rows instead).
+    * centroid DataFrame `(cid, c, cn2)` (quantized ints, squared norm):
+    * the single-subspace PQ codebook.
     */
-  def train(p: DataFrame, k: Int, iters: Int): DataFrame = {
-    val spark = p.sparkSession
-    import spark.implicits._
-    // deterministic init: the k lowest-id vectors
-    var centroids = p.orderBy("vec_id").limit(k).orderBy("vec_id")
-      .select(col("q")).collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Long](0).toArray) }.toSeq
-    val dim = centroids.headOption.map(_._2.length).getOrElse(0)
-    for (_ <- 1 to iters) {
-      val cdf = centroids.toDF("cid", "c")
-        .withColumn("cn2", LongArrayDot(col("c"), col("c")))
-      val assigned = assign(p, cdf)
-      // per-dimension integer mean of each cell's members (same div as
-      // the reference formulation, computed engine-side so truncation
-      // semantics can never drift); a cell with no members keeps its
-      // previous centroid (the groupBy would silently drop its cid and
-      // shrink the codebook below k)
-      val meanExprs = (0 until dim).map(j =>
-        call_function("div", sum(element_at(col("q"), j + 1)),
-          count(lit(1))).as(s"m$j"))
-      val recomputed =
-        if (dim == 0) Map.empty[Int, Array[Long]]
-        else assigned.groupBy("cid")
-          .agg(meanExprs.head, meanExprs.tail: _*)
-          .collect()
-          .map(r => r.getInt(0) ->
-            Array.tabulate(dim)(j => r.getLong(j + 1))).toMap
-      centroids = centroids.map { case (cid, prev) =>
-        (cid, recomputed.getOrElse(cid, prev))
-      }
-    }
-    centroids.toDF("cid", "c")
-      .withColumn("cn2", LongArrayDot(col("c"), col("c")))
-  }
+  def train(p: DataFrame, k: Int, iters: Int): DataFrame =
+    Pq.train(p, m = 1, ks = k, iters).select("cid", "c", "cn2")
 
   /** Nearest-centroid assignment: argmin integer L2 over cells as a pure
-    * PROJECTION against the driver-local codebook ([[CodebookOps
-    * .CodebookArgmin]] over codebook literals). Returns
-    * `(vec_id, q, n2, cid)`.
+    * PROJECTION against the driver-local codebook (the m = 1 code of
+    * [[graft.functions.PqEncodeCodes]]; contiguous cids make the code
+    * the cid). Returns `(vec_id, q, n2, cid)`.
     *
-    * Zero exchanges: the corpus rows never move. The previous `min_by`
-    * aggregate over the broadcast k-way expansion still shuffled one
-    * full-vector row per vector to reduce the argmin; the projection
-    * keeps identical semantics — d2 differs from the reduced score
-    * `cn2 - 2<q,c>` only by the per-row constant `n2`, and the ascending
-    * strict-< walk reproduces the (d2, cid) tie-break exactly
-    * (CodebookOpsSpec pins both against the min_by form).
+    * Zero exchanges: the corpus rows never move. The argmin keeps the
+    * `min_by(cid, struct(d2, cid))` semantics — d2 differs from the
+    * reduced score `cn2 - 2<q,c>` only by the per-row constant `n2`,
+    * and the ascending strict-< walk keeps the smallest cid on ties
+    * (CodebookOpsSpec pins both).
     */
-  def assign(p: DataFrame, centroids: DataFrame): DataFrame = {
-    val cb = localCodebook(centroids)
-    val pos = CodebookArgmin(col("q"), typedlit(cb.flat), typedlit(cb.cn2))
+  def assign(p: DataFrame, centroids: DataFrame): DataFrame =
     p.select(col("vec_id"), col("q"), col("n2"),
-      element_at(typedlit(cb.cids), pos + 1).as("cid"))
-  }
+      Pq.localCodebook(centroids).encode(1).getItem(0).as("cid"))
 
-  /** The probe body shared by the inline and persisted paths: nprobe
-    * nearest cells per query (centroid table broadcast — KB at any
-    * corpus scale), then exact dot ranking against only those cells'
-    * inverted lists (a cell equi-join, hash-partitioned on the cell id).
-    * `queries` is prepared query rows `(vec_id, q, n2)`; `lists` is
-    * `(cid, nid, nq)`.
+  /** The `n` nearest cells of the `q` column, ascending by (d2, cid),
+    * exploded to one row per cell ([[CodebookTopN]] against the
+    * driver-local codebook; contiguous cids make a position its cid).
+    * The nprobe/nAssign form of [[assign]]: no n x k expansion, no
+    * shuffle to rank it.
+    */
+  private[pipeline] def nearestCells(cb: Pq.LocalCodebook, n: Int): Column =
+    explode(CodebookTopN(col("q"), typedlit(cb.flat), typedlit(cb.cn2), n))
+
+  /** The probe body: nprobe nearest cells per query, then exact dot
+    * ranking against only those cells' inverted lists (a cell
+    * equi-join, hash-partitioned on the cell id). `queries` is prepared
+    * query rows `(vec_id, q, n2)`; `lists` is `(cid, nid, nq)`.
     */
   private def probeCells(queries: DataFrame, centroids: DataFrame,
                          lists: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    // nprobe nearest cells per query as a projection + explode against
-    // the driver-local codebook (CodebookTopN ranks by the same
-    // (d2, cid) contract the previous window row_number ordered by) —
-    // no n x k expansion, no shuffle to rank it
-    val cb = localCodebook(centroids)
-    val probes = queries
-      .select(col("vec_id").as("qid"), col("q").as("qq"),
-        explode(CodebookTopN(col("q"),
-          typedlit(cb.flat), typedlit(cb.cn2), nprobe)).as("pos"))
-      .select(col("qid"), col("qq"),
-        element_at(typedlit(cb.cids), col("pos") + 1).as("cid"))
-    val scored = probes.join(lists, Seq("cid"))
+    val probes = queries.select(col("vec_id").as("qid"), col("q").as("qq"),
+      nearestCells(Pq.localCodebook(centroids), nprobe).as("cid"))
+    Similarity.rankTopK(probes.join(lists, Seq("cid"))
       .filter(col("qid") =!= col("nid"))
-      .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
-    val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("int").as("rank"), col("nid"), col("dot"))
-  }
-
-  /** IVF top-k with INLINE training: train + assign + probe in one call.
-    * The one-shot form (ad-hoc search over a corpus you'll never query
-    * again); repeated searches should build once via [[buildIndex]] and
-    * probe via [[probeIndex]] — training cost charged per QUERY is the
-    * audited scale-killer the persisted lifecycle exists to remove.
-    * Approximate (cell boundaries lose neighbors); exact dot ranking
-    * within the probed cells.
-    */
-  def topK(emb: DataFrame, k: Int, nCells: Int, iters: Int, nprobe: Int,
-           queryPred: Column): DataFrame = {
-    val p = Similarity.prepared(emb).cache()
-    val centroids = train(p, nCells, iters)
-    val indexed = assign(p, centroids)
-      .select(col("cid"), col("vec_id").as("nid"), col("q").as("nq"))
-    probeCells(p.filter(queryPred), centroids, indexed, k, nprobe)
+      .withColumn("dot", LongArrayDot(col("qq"), col("nq"))), k, "dot")
   }
 
   /** Build the persisted IVF index at `dir`: the KB centroid codebook
@@ -254,10 +168,8 @@ object Ivf {
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Probe the persisted index: identical results to [[topK]] (training
-    * is deterministic, so build-then-probe replays the inline
-    * composition exactly) at probe-only cost. `queries` is prepared
-    * query rows `(vec_id, q, n2)` (see [[Similarity.prepared]]).
+  /** Probe the persisted index at probe-only cost. `queries` is
+    * prepared query rows `(vec_id, q, n2)` (see [[Similarity.prepared]]).
     */
   def probeIndex(dir: String, queries: DataFrame, k: Int,
                  nprobe: Int): DataFrame = {

@@ -1,10 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{AdcScore, CodebookTopN, IntArrayPack8, LongArrayDot, PqEncodeCodes, PqQueryTable}
-// (coarse quantizer for the IVF-PQ composition comes from Ivf)
+import graft.functions.{AdcScore, IntArrayPack8, LongArrayDot, PqEncodeCodes, PqQueryTable}
 
 /** Product quantization (PQ) approximate nearest-neighbor search
   * (Jegou, Douze, Schmid, "Product Quantization for Nearest Neighbor
@@ -24,11 +22,12 @@ import graft.functions.{AdcScore, CodebookTopN, IntArrayPack8, LongArrayDot, PqE
   * driver-crossing contract as [[Ivf]]'s coarse codebook). Training is
   * per-subspace Lloyd's run as ONE distributed job per round over the
   * (sub, cid) key — `m` independent k-means interleaved in the same
-  * shuffles, not `m` sequential loops. Deterministic throughout
-  * (first-ks init by vec_id, integer arithmetic, (d2, cid) tie-break),
-  * so results are stable across runs and partitionings — but the
-  * k-means replay is impractical in SQL, so like [[Ivf.topK]] the
-  * driver query is rows-only with an oracle-exact recall gate.
+  * shuffles, not `m` sequential loops; [[Ivf]]'s coarse quantizer is
+  * the same trainer at m = 1. Deterministic throughout (first-ks init
+  * by vec_id, integer arithmetic, (d2, cid) tie-break), so results are
+  * stable across runs and partitionings — but the k-means replay is
+  * impractical in SQL, so the ANN entries emit rows-only results with
+  * oracle-exact recall gates.
   *
   * The relational ADC shape: per-query lookup tables (m x ks dots of
   * the query's exact subvectors against the broadcast codebook) pack
@@ -43,32 +42,38 @@ import graft.functions.{AdcScore, CodebookTopN, IntArrayPack8, LongArrayDot, PqE
   * training charged to every search is the one plan that dies at 1e9
   * vectors. [[buildIndex]]/[[buildIndexIvf]] persist the codebooks and
   * packed codes as parquet (the reference's load-time index-build
-  * pattern, storage.c:1389-1490), [[probeIndex]]/[[probeIndexIvf]]
-  * read them at pure probe cost; the inline [[topK]]/[[topKIvf]] keep
-  * the one-shot form for ad-hoc searches and replay the same
-  * deterministic math, so both paths return identical rankings.
+  * pattern, storage.c:1389-1490), and [[probeIndex]]/[[probeIndexIvf]]
+  * read them at pure probe cost. There is no train-per-query form.
   */
 object Pq {
 
-  /** Driver-local PQ codebook: (sub, cid) ascending (sub major),
-    * centroids flattened row-major plus squared norms — the literal
-    * operands of the shuffle-free [[CodebookOps]] projections. The
-    * collect is the module's standing contract (m x ks x dim/m integers
-    * — kilobytes; the codebook already crosses the driver every
-    * training round). Cids are required contiguous 0..ks'-1 per
-    * subspace — every builder writes them that way, and a gap would
-    * silently desync the flat layout.
+  /** Driver-local codebook: (sub, cid) ascending (sub major), centroids
+    * flattened row-major plus squared norms — the literal operands of
+    * the shuffle-free [[CodebookOps]] projections. One loader for both
+    * table shapes: an IVF centroid table (no `sub` column) is the m = 1
+    * codebook. The collect is the module's standing contract (m x ks x
+    * dim/m integers — kilobytes; the codebook already crosses the driver
+    * every training round). Cids are required contiguous 0..ks'-1 per
+    * subspace — every builder writes them that way, a gap would
+    * silently desync the flat layout, and it makes a centroid's
+    * position in the flat layout its cid. An empty table (trained on an
+    * empty corpus) loads with no centroids.
     */
-  private final case class LocalPqCodebook(flat: Seq[Long], cn2: Seq[Long],
-                                           ks: Int)
+  private[pipeline] final case class LocalCodebook(flat: Seq[Long],
+                                                   cn2: Seq[Long], ks: Int) {
+    def isEmpty: Boolean = cn2.isEmpty
+    /** `m`-subspace codes of the `q` column ([[PqEncodeCodes]]). */
+    def encode(m: Int): Column =
+      PqEncodeCodes(col("q"), typedlit(flat), typedlit(cn2), m)
+  }
 
-  private def localPqCodebook(codebook: DataFrame,
-                              m: Int): Option[LocalPqCodebook] = {
+  private[pipeline] def localCodebook(codebook: DataFrame,
+                                      m: Int = 1): LocalCodebook = {
+    val sub =
+      if (codebook.columns.contains("sub")) col("sub").cast("int") else lit(0)
     val rows = codebook
-      .select(col("sub").cast("int"), col("cid").cast("int"), col("c"),
-        col("cn2").cast("long"))
+      .select(sub, col("cid").cast("int"), col("c"), col("cn2").cast("long"))
       .collect().sortBy(r => (r.getInt(0), r.getInt(1)))
-    if (rows.isEmpty) return None
     require(rows.length % m == 0,
       s"codebook holds ${rows.length} centroids, not divisible into $m subspaces")
     val ks = rows.length / m
@@ -77,56 +82,49 @@ object Pq {
         s"codebook (sub, cid) not contiguous at row $ix: " +
           s"(${r.getInt(0)}, ${r.getInt(1)})")
     }
-    Some(LocalPqCodebook(rows.flatMap(_.getSeq[Long](2)).toSeq,
-      rows.map(_.getLong(3)).toSeq, ks))
+    LocalCodebook(rows.flatMap(_.getSeq[Long](2)).toSeq,
+      rows.map(_.getLong(3)).toSeq, ks)
   }
 
-  /** All m sub-codes per vector as ONE projection column
-    * ([[PqEncodeCodes]] against the codebook literal) —
-    * `array<int>` ordered by subspace. Replaces the explode + broadcast
-    * join + min_by shuffle of the previous per-(vector, subspace)
-    * assignment: zero exchanges, no m-way row expansion, identical
-    * deterministic argmin (the (d2, cid) tie-break — CodebookOpsSpec).
-    */
-  private def encodeExpr(cb: LocalPqCodebook, m: Int): Column =
-    PqEncodeCodes(col("q"), typedlit(cb.flat), typedlit(cb.cn2), m)
-
   /** Train the m per-subspace codebooks on (vec_id, q) prepared
-    * vectors: `(sub, cid, c, cn2)`. Lloyd's with deterministic
-    * first-ks init; every round is ONE job with a single reduced
-    * shuffle — assignment is the [[encodeExpr]] projection, and the
-    * per-(sub, cell) means are per-dimension sums over the exploded
-    * code column (map-side partials reduce each partition to ≤ m x ks
-    * rows). Empty cells keep their previous centroid (same guard as
-    * [[Ivf.train]]).
+    * vectors: `(sub, cid, c, cn2)` — the one Lloyd's loop of the ANN
+    * family ([[Ivf.train]] is this at m = 1). Deterministic first-ks
+    * init by vec_id; every round is ONE job with a single reduced
+    * shuffle — assignment is the [[LocalCodebook.encode]] projection
+    * (strict `<` over ascending cids, so ties go to the smallest cid),
+    * and the per-(sub, cell) means are per-dimension sums over the
+    * exploded code column (map-side partials reduce each partition to
+    * ≤ m x ks rows). An empty cell keeps its previous centroid (the
+    * groupBy would silently drop its cid and shrink the codebook). An
+    * empty corpus trains an empty table; zero-dimensional vectors keep
+    * their init centroids.
     */
   def train(p: DataFrame, m: Int, ks: Int, iters: Int): DataFrame = {
     val spark = p.sparkSession
     import spark.implicits._
     val init = p.orderBy("vec_id").limit(ks).orderBy("vec_id")
       .select(col("q")).collect().map(_.getSeq[Long](0).toArray)
-    if (init.isEmpty)
-      return Seq.empty[(Int, Int, Array[Long])].toDF("sub", "cid", "c")
-        .withColumn("cn2", lit(0L))
-    val dim = init.head.length
+    val dim = init.headOption.fold(0)(_.length)
     require(dim % m == 0, s"dimension $dim not divisible into $m subspaces")
     val d = dim / m
     var cents: Seq[(Int, Int, Array[Long])] =
       for (s <- 0 until m; i <- init.indices)
         yield (s, i, init(i).slice(s * d, s * d + d))
-    for (_ <- 1 to iters) {
-      val cb = LocalPqCodebook(
+    for (_ <- 1 to iters if d > 0) {
+      val cb = LocalCodebook(
         cents.flatMap(_._3),
         cents.map(c => c._3.map(x => x * x).sum), init.length)
-      // subvector element j of subspace `sub` is q[sub*d + j]; the div
-      // runs engine-side so truncation semantics can never drift from
-      // the reference formulation
+      // the div runs engine-side so truncation semantics can never
+      // drift from the reference formulation; the subvector is sliced
+      // once per row so each mean reads a literal index (a computed
+      // index per element cost ~15% of an IVF round at dim 64)
       val meanExprs = (0 until d).map(j =>
-        call_function("div",
-          sum(element_at(col("q"), col("sub") * d + (j + 1))),
+        call_function("div", sum(element_at(col("v"), j + 1)),
           count(lit(1))).as(s"m$j"))
       val recomputed = p
-        .select(posexplode(encodeExpr(cb, m)).as(Seq("sub", "cid")), col("q"))
+        .select(posexplode(cb.encode(m)).as(Seq("sub", "cid")), col("q"))
+        .select(col("sub"), col("cid"),
+          slice(col("q"), col("sub") * d + 1, lit(d)).as("v"))
         .groupBy("sub", "cid")
         .agg(meanExprs.head, meanExprs.tail: _*)
         .collect()
@@ -149,12 +147,11 @@ object Pq {
   private def packedCodes(p: DataFrame, codebook: DataFrame, m: Int,
                           keep: Seq[String] = Seq.empty): DataFrame = {
     val keepCols = keep.map(col)
-    localPqCodebook(codebook, m) match {
-      case None => p.select(col("vec_id") +: keepCols :+
-        lit(Array.empty[Byte]).as("codes"): _*).filter(lit(false))
-      case Some(cb) => p.select(col("vec_id") +: keepCols :+
-        IntArrayPack8(encodeExpr(cb, m)).as("codes"): _*)
-    }
+    val cb = localCodebook(codebook, m)
+    if (cb.isEmpty) p.select(col("vec_id") +: keepCols :+
+      lit(Array.empty[Byte]).as("codes"): _*).filter(lit(false))
+    else p.select(col("vec_id") +: keepCols :+
+      IntArrayPack8(cb.encode(m)).as("codes"): _*)
   }
 
   /** One flat lookup TABLE per query: `tbl[sub * stride + cid]` =
@@ -169,12 +166,11 @@ object Pq {
     */
   private def queryTables(qs: DataFrame, m: Int,
                           codebook: DataFrame): DataFrame = {
-    localPqCodebook(codebook, m) match {
-      case None => qs.select(col("vec_id").as("qid"),
-        typedlit(Seq.empty[Long]).as("tbl")).filter(lit(false))
-      case Some(cb) => qs.select(col("vec_id").as("qid"),
-        PqQueryTable(col("q"), typedlit(cb.flat), m).as("tbl"))
-    }
+    val cb = localCodebook(codebook, m)
+    if (cb.isEmpty) qs.select(col("vec_id").as("qid"),
+      typedlit(Seq.empty[Long]).as("tbl")).filter(lit(false))
+    else qs.select(col("vec_id").as("qid"),
+      PqQueryTable(col("q"), typedlit(cb.flat), m).as("tbl"))
   }
 
   /** The per-pair ADC lookup-sum — the native codegen'd
@@ -187,41 +183,15 @@ object Pq {
   private def adcScore: Column =
     AdcScore(col("codes"), col("tbl"))
 
-  /** Deterministic (score desc, nid asc) top-k over a scored pair
-    * stream — the ranking contract every ANN path shares.
-    */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("int").as("rank"), col("nid"),
-        col("score"))
-  }
-
   /** Flat-PQ scoring: per (query, candidate) pair, sum the m table
     * entries the candidate's codes select — the brute-force broadcast
     * shape with a lookup-sum instead of a dot; rows through the plan =
     * |q| x |n|, never |q| x |n| x m.
     */
   private def scoreFlat(codes: DataFrame, qt: DataFrame, k: Int): DataFrame =
-    rankTopK(codes.crossJoin(broadcast(qt))
+    Similarity.rankTopK(codes.crossJoin(broadcast(qt))
       .filter(col("qid") =!= col("nid"))
-      .withColumn("score", adcScore), k)
-
-  /** PQ top-k with INLINE training — the one-shot form; repeated
-    * searches should [[buildIndex]] once and [[probeIndex]]. Ranks by
-    * ADC score, ties by nid. Approximate by design (quantization error
-    * reorders neighbors): rows-only for the driver, recall-gated
-    * against the exact top-k.
-    */
-  def topK(emb: DataFrame, k: Int, m: Int, ks: Int, iters: Int,
-           queryPred: Column): DataFrame = {
-    val p = Similarity.prepared(emb).cache()
-    val codebook = train(p, m, ks, iters)
-    val codes = packedCodes(p, codebook, m)
-      .select(col("vec_id").as("nid"), col("codes"))
-    scoreFlat(codes, queryTables(p.filter(queryPred), m, codebook), k)
-  }
+      .withColumn("score", adcScore), k, "score")
 
   /** Build the persisted flat-PQ index at `dir`: the KB codebook plus
     * one ~m-byte packed code row per candidate — training runs ONCE
@@ -245,9 +215,9 @@ object Pq {
     if (!AnnIndex.isCurrent(emb, dir, Seq(m, ks, iters)))
       buildIndex(emb, dir, m, ks, iters)
 
-  /** Probe the persisted flat-PQ index — identical results to [[topK]]
-    * at probe-only cost. `queries` is prepared query rows
-    * `(vec_id, q)` ([[Similarity.prepared]] + predicate).
+  /** Probe the persisted flat-PQ index at probe-only cost. `queries`
+    * is prepared query rows `(vec_id, q)` ([[Similarity.prepared]] +
+    * predicate).
     */
   def probeIndex(dir: String, queries: DataFrame, k: Int, m: Int): DataFrame = {
     val spark = queries.sparkSession
@@ -273,75 +243,51 @@ object Pq {
       .select(col("vec_id"), col("cid").as("cell"),
         zip_with(col("q"), col("c"), (a, b) => a - b).as("q"))
 
-  /** IVF-PQ scoring shared by the inline and persisted paths. The
-    * probe stage is [[Ivf]]'s: nprobe nearest coarse cells per query,
-    * each carrying the EXACT bias `<q, c_cell>`; candidates stream
-    * from the probed cells only (cell equi-join), and the final score
-    * is `bias + ADC(codes, tbl)` where the ADC term approximates
-    * `<q, residual>` — together an estimate of the full `<q, cand>`
-    * under the decomposition cand = c_cell + residual.
+  /** IVF-PQ scoring. The probe stage is [[Ivf]]'s: nprobe nearest
+    * coarse cells per query ([[Ivf.nearestCells]]), each carrying the
+    * EXACT bias `<q, c_cell>` (centroid lookup by cell — no broadcast
+    * re-join); candidates stream from the probed cells only (cell
+    * equi-join), and the final score is `bias + ADC(codes, tbl)` where
+    * the ADC term approximates `<q, residual>` — together an estimate
+    * of the full `<q, cand>` under the decomposition cand = c_cell +
+    * residual.
     */
   private def scoreIvf(queries: DataFrame, coarse: DataFrame,
                        codebook: DataFrame, codes: DataFrame,
                        k: Int, m: Int, nprobe: Int): DataFrame = {
-    // nprobe nearest coarse cells per query as a projection + explode
-    // against the driver-local codebook (same (d2, cid) ranking the
-    // previous window row_number ordered by), the exact cell bias
-    // <q, c_cell> recomputed via centroid lookup — no n x k expansion,
-    // no shuffle, no broadcast re-join for the bias
-    val cb = Ivf.localCodebook(coarse)
-    val dim = if (cb.cids.isEmpty) 0 else cb.flat.length / cb.cids.length
+    val cb = localCodebook(coarse)
+    val dim = if (cb.isEmpty) 0 else cb.flat.length / cb.ks
     val centArrays: Seq[Seq[Long]] =
-      cb.cids.indices.map(i => cb.flat.slice(i * dim, (i + 1) * dim))
+      (0 until cb.ks).map(i => cb.flat.slice(i * dim, (i + 1) * dim))
     val probes = queries
       .select(col("vec_id").as("qid"), col("q").as("qq"),
-        explode(CodebookTopN(col("q"),
-          typedlit(cb.flat), typedlit(cb.cn2), nprobe)).as("pos"))
-      .select(col("qid"),
-        element_at(typedlit(cb.cids), col("pos") + 1).as("cell"),
+        Ivf.nearestCells(cb, nprobe).as("cell"))
+      .select(col("qid"), col("cell"),
         LongArrayDot(col("qq"),
-          element_at(typedlit(centArrays), col("pos") + 1)).as("bias"))
+          element_at(typedlit(centArrays), col("cell") + 1)).as("bias"))
     val qt = queryTables(queries, m, codebook)
-    rankTopK(probes.join(codes, "cell")
+    Similarity.rankTopK(probes.join(codes, "cell")
       .filter(col("qid") =!= col("nid"))
       .join(broadcast(qt), "qid")
-      .withColumn("score", col("bias") + adcScore), k)
+      .withColumn("score", col("bias") + adcScore), k, "score")
   }
 
-  /** The IVF-PQ index with INLINE training — the standard production
-    * ANN composition (Jegou et al. 2011 §V, IVFADC): [[Ivf]]'s coarse
-    * quantizer restricts each query to its `nprobe` nearest cells, and
-    * packed-code ADC scores only those cells' members — candidate cost
-    * per query drops from n to ~ n * nprobe / nCells WHILE each
-    * candidate costs an m-entry lookup-sum instead of a dim-step dot.
-    * Codes encode RESIDUALS v − c_cell (see [[residuals]]). The two
-    * approximations (cell boundary loss x quantization reorder) still
-    * compound, so this path carries its own measured recall floor in
-    * the `ann_pq_recall` gate.
+  /** Build the persisted IVF-PQ index at `dir` — the standard
+    * production ANN composition (Jegou et al. 2011 §V, IVFADC):
+    * [[Ivf]]'s coarse quantizer restricts each query to its `nprobe`
+    * nearest cells, and packed-code ADC scores only those cells'
+    * members, so candidate cost per query drops from n to ~ n * nprobe
+    * / nCells WHILE each candidate costs an m-entry lookup-sum instead
+    * of a dim-step dot. Codes encode RESIDUALS v − c_cell (see
+    * [[residuals]]); the two approximations (cell boundary loss x
+    * quantization reorder) compound, so the composition carries its own
+    * measured recall floor in the `ann_pq_recall` gate.
     *
-    * Scale shape: candidate generation is the cell equi-join
-    * (hash-partitioned on the cell id); the broadcast per-query tables
-    * and the KB codebooks are unchanged. At 1e9 vectors this is the
-    * index layout that fits executor memory: 4-byte cell id + ~20-byte
-    * codes per candidate, floats nowhere. Repeated searches should
-    * [[buildIndexIvf]] once and [[probeIndexIvf]].
-    */
-  def topKIvf(emb: DataFrame, k: Int, m: Int, ks: Int, iters: Int,
-              nCells: Int, nprobe: Int, queryPred: Column): DataFrame = {
-    val p = Similarity.prepared(emb).cache()
-    val coarse = Ivf.train(p, nCells, iters)
-    val res = residuals(p, coarse).cache()
-    val codebook = train(res, m, ks, iters)
-    val codes = packedCodes(res, codebook, m, keep = Seq("cell"))
-      .select(col("vec_id").as("nid"), col("cell"), col("codes"))
-    scoreIvf(p.filter(queryPred), coarse, codebook, codes, k, m, nprobe)
-  }
-
-  /** Build the persisted IVF-PQ index at `dir`: coarse codebook +
-    * residual PQ codebook (both KB) + one `(nid, codes)` row per
-    * candidate PARTITIONED BY CELL, so a probe's cell equi-join prunes
-    * to the probed partitions. Trains the coarse quantizer AND the
-    * residual codebooks ONCE; `meta` written last.
+    * Layout: coarse codebook + residual PQ codebook (both KB) + one
+    * `(nid, codes)` row per candidate PARTITIONED BY CELL, so a probe's
+    * cell equi-join prunes to the probed partitions — 4-byte cell id +
+    * ~20-byte codes per candidate, floats nowhere. Trains the coarse
+    * quantizer AND the residual codebooks ONCE; `meta` written last.
     */
   def buildIndexIvf(emb: DataFrame, dir: String, m: Int, ks: Int,
                     iters: Int, nCells: Int): Unit = {
@@ -407,9 +353,8 @@ object Pq {
       .select(col("vec_id").as("nid"), col("codes"), col("cell"))
   }
 
-  /** Probe the persisted IVF-PQ index — identical results to
-    * [[topKIvf]] at probe-only cost. `queries` is prepared query rows
-    * `(vec_id, q, n2)`.
+  /** Probe the persisted IVF-PQ index at probe-only cost. `queries` is
+    * prepared query rows `(vec_id, q, n2)`.
     */
   def probeIndexIvf(dir: String, queries: DataFrame, k: Int, m: Int,
                     nprobe: Int): DataFrame = {
@@ -468,6 +413,6 @@ object Pq {
       .join(p.select(col("vec_id").as("nid"), col("q").as("nq")), "nid")
       .withColumn("score", LongArrayDot(col("qq"), col("nq")))
       .select("qid", "nid", "score")
-    rankTopK(scored, k)
+    Similarity.rankTopK(scored, k, "score")
   }
 }

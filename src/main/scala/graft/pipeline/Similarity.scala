@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{ByteArrayDot, CodebookTopN, FloatArrayQuantize8, LongArrayDot, LshBandHashes}
+import graft.functions.{ByteArrayDot, FloatArrayQuantize8, LongArrayDot, LshBandHashes}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -72,6 +72,20 @@ object Similarity {
       else out.localCheckpoint()
     } finally p.unpersist()
 
+  /** Deterministic (score desc, nid asc) top-k per `qid` over a scored
+    * `(qid, nid, <scoreCol>)` pair stream — the ranking contract every
+    * ANN path shares. Returns `(qid, rank, nid, <scoreCol>)` plus
+    * `extra`.
+    */
+  private[pipeline] def rankTopK(scored: DataFrame, k: Int, scoreCol: String,
+                                 extra: Column*): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col(scoreCol).desc, col("nid").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col("qid"), col("rank").cast("int").as("rank"), col("nid"),
+        col(scoreCol)) ++ extra: _*)
+  }
+
   /** Exact top-k by integer dot product, brute force: each query joined
     * against all candidates, ranked (dot desc, id asc — deterministic
     * tie-break). `queryPred` restricts the query side (keep it small; the
@@ -81,12 +95,8 @@ object Similarity {
     val p = prepared(emb)
     val qs = p.filter(queryPred).select(col("vec_id").as("qid"), col("q").as("qq"))
     val cands = p.select(col("vec_id").as("nid"), col("q").as("nq"))
-    val scored = qs.join(cands, col("qid") =!= col("nid"))
-      .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
-    val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("int").as("rank"), col("nid"), col("dot"))
+    rankTopK(qs.join(cands, col("qid") =!= col("nid"))
+      .withColumn("dot", LongArrayDot(col("qq"), col("nq"))), k, "dot")
   }
 
   /** Per-vector symmetric int8 quantization, PACKED: one byte per
@@ -123,12 +133,8 @@ object Similarity {
     val p = prepared8(emb)
     val qs = p.filter(queryPred).select(col("vec_id").as("qid"), col("q8").as("qq"))
     val cands = p.select(col("vec_id").as("nid"), col("q8").as("nq"))
-    val scored = qs.join(cands, col("qid") =!= col("nid"))
-      .withColumn("dot", ByteArrayDot(col("qq"), col("nq")))
-    val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("int").as("rank"), col("nid"), col("dot"))
+    rankTopK(qs.join(cands, col("qid") =!= col("nid"))
+      .withColumn("dot", ByteArrayDot(col("qq"), col("nq"))), k, "dot")
   }
 
   /** Attribute-filtered exact top-k — the hybrid-search pattern
@@ -152,14 +158,10 @@ object Similarity {
       col("q").as("qq"), col("attr").as("qa"))
     val cands = p.select(col("vec_id").as("nid"), col("q").as("nq"),
       col("attr"))
-    val scored = qs
+    rankTopK(qs
       .join(cands, col("qa") === col("attr") && col("qid") =!= col("nid"))
-      .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
-    val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("int").as("rank"), col("nid"),
-        col("dot"), col("qa").cast("int").as("label"))
+      .withColumn("dot", LongArrayDot(col("qq"), col("nq"))), k, "dot",
+      col("qa").cast("int").as("label"))
   }
 
   /** Near-duplicate pairs by quantized cosine >= tnum/tden (exact integer
@@ -237,19 +239,8 @@ object Similarity {
                                 nAssign: Int): DataFrame = {
     val assigned =
       if (nAssign <= 1) Ivf.assign(p, centroids)
-      else {
-        // nAssign nearest cells per vector as a PROJECTION + explode
-        // against the driver-local codebook — CodebookTopN ranks by the
-        // same (d2, cid) key the previous slice(sort_array(
-        // collect_list(...))) aggregate sorted on, with zero exchanges
-        // (the aggregate still shuffled one full-vector row per vector)
-        val cb = Ivf.localCodebook(centroids)
-        p.select(col("vec_id"), col("q"), col("n2"),
-            explode(CodebookTopN(col("q"),
-              typedlit(cb.flat), typedlit(cb.cn2), nAssign)).as("pos"))
-          .select(col("vec_id"), col("q"), col("n2"),
-            element_at(typedlit(cb.cids), col("pos") + 1).as("cid"))
-      }
+      else p.select(col("vec_id"), col("q"), col("n2"),
+        Ivf.nearestCells(Pq.localCodebook(centroids), nAssign).as("cid"))
     val a = assigned.select(col("cid"), col("vec_id").as("da"),
       col("q").as("qa"), col("n2").as("na"))
     val b = assigned.select(col("cid"), col("vec_id").as("db"),
@@ -372,13 +363,7 @@ object Similarity {
       .join(p.select(col("vec_id").as("qid"), col("q").as("qq")), "qid")
       .join(p.select(col("vec_id").as("nid"), col("q").as("nq")), "nid")
       .withColumn("dot", LongArrayDot(col("qq"), col("nq")))
-    val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid").asc)
-    releasedAfter(
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("rank").cast("int").as("rank"),
-          col("nid"), col("dot")),
-      p)
+    releasedAfter(rankTopK(scored, k, "dot"), p)
   }
 
   /** Scale path for embedding near-dup: **banded** random-hyperplane LSH

@@ -700,8 +700,7 @@ object PipelineQueries {
   }
 
   /** IVF-bucketed ANN probe against the persisted index — coarse cells
-    * + nprobe search at probe-only cost; results identical to the
-    * inline [[Ivf.topK]] (deterministic training). The full probe runs
+    * + nprobe search at probe-only cost. The full probe runs
     * ([[annIvfRows]]) and the entry emits the oracle-exact
     * [[probeInvariants]] singleton; IVF ranks its cell candidates by
     * EXACT dots, so `scores_exact_ok` holds every emitted score to the

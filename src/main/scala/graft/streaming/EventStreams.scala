@@ -164,12 +164,20 @@ object EventStreams {
             // final; a straggler in a LATER batch that lands within gap
             // of one starts its own session — only the open session can
             // still be extended); the latest stays open until its gap
-            // times out
-            merged.headOption.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last + gapMs)
+            // times out, unless its gap already ended at or under the
+            // watermark (an admitted straggler: Spark drops late rows
+            // under the previous batch's watermark), which closes it
+            // now — no later row can reach it, and a timeout under the
+            // watermark is an error
+            val open = merged.headOption
+              .filter(_.last + gapMs > state.getCurrentWatermarkMs())
+            open match {
+              case Some(s) =>
+                state.update(s)
+                state.setTimeoutTimestamp(s.last + gapMs)
+              case None => state.remove()
             }
-            merged.drop(1).reverseIterator.map(s =>
+            merged.drop(open.size).reverseIterator.map(s =>
               Session(uid, new Timestamp(s.start), new Timestamp(s.last), s.n))
           }
       }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{CodebookArgmin, CodebookTopN, PqEncodeCodes, PqQueryTable}
+import graft.functions.{CodebookTopN, PqEncodeCodes, PqQueryTable}
 import graft.pipeline.{Ivf, Similarity}
 
 /** Equivalence pins for the shuffle-free codebook projections
@@ -29,6 +29,8 @@ class CodebookOpsSpec extends SparkSpec {
     }.min._2
   }
 
+  // The case keeps the name it had when the argmin was its own native;
+  // that kernel is now PqEncodeCodes at m = 1, which Ivf.assign calls.
   test("CodebookArgmin matches the min_by(d2, cid) contract, ties to smallest cid") {
     val spark0 = spark
     import spark0.implicits._
@@ -42,8 +44,8 @@ class CodebookOpsSpec extends SparkSpec {
     val cn2 = cents.map(_.map(x => x * x).sum)
     val got = vecs.toDF("vec_id", "q")
       .select(col("vec_id"),
-        CodebookArgmin(col("q"),
-          typedlit(flat), typedlit(cn2)).as("pos"))
+        PqEncodeCodes(col("q"),
+          typedlit(flat), typedlit(cn2), 1).getItem(0).as("pos"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     vecs.foreach { case (id, q) =>
       assert(got(id) == refArgmin(q, cents), s"vec $id")

@@ -29,7 +29,7 @@ class FunctionsSpec extends SparkSpec {
       messages(ex).mkString(" | "))
   }
 
-  test("all 12 natives evaluate on any session with no setup and register no function") {
+  test("all 11 natives evaluate on any session with no setup and register no function") {
     val cents = typedlit(Seq(1L, 0L, 0L, 0L, 1L, 0L)) // k=2, dim=3
     val cn2 = typedlit(Seq(1L, 1L))
     val langs = Seq("en" -> Seq(" the ", " and "), "es" -> Seq(" de ", " la "))
@@ -45,7 +45,6 @@ class FunctionsSpec extends SparkSpec {
         ByteArrayDot(q8, q8),
         hex(codes),
         AdcScore(codes, typedlit(Seq(10L, 20L, 30L, 40L, 50L, 60L))),
-        CodebookArgmin(a, cents, cn2),
         CodebookTopN(a, cents, cn2, 2),
         PqEncodeCodes(a, cents, cn2, 1),
         PqQueryTable(a, cents, 1),
@@ -57,7 +56,7 @@ class FunctionsSpec extends SparkSpec {
     }
     val want = natives(spark)
     assert(want.head.getLong(0) == 4L - 10L + 18L)
-    assert(want.head.getString(10) == "es")
+    assert(want.head.getString(9) == "es")
     assert(want.last.getSeq[Long](0).length == 5)
     assert(natives(spark.newSession()) == want)
     assert(natives(GraftSession.scoped(spark, Map.empty)) == want)

@@ -1,7 +1,31 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{AnnIndex, Ivf, Similarity}
+
+object IvfSpec {
+  /** Six hand-built 2-d vectors whose first two Lloyd rounds at k = 3
+    * (init: vectors 0..2) exercise every rule of the trainer:
+    *  - round 1: cells {0, 4, 5}, {1, 3}, {2} -> (0, 22) div 3, (3, -4)
+    *    div 2 = (1, -2) (truncation toward zero), (-6, -4);
+    *  - round 2: vector 3 = (5, 3) is equidistant (d2 = 41) from cells 0
+    *    and 1 and goes to cell 0, so cell 1 loses all its members and
+    *    keeps its round-1 centroid; cell 2's sum (-16, -7) div 3
+    *    truncates to (-5, -2), where a floor would give (-6, -3).
+    */
+  val lloydCorpus: Seq[Seq[Long]] = Seq(Seq(-8L, 4L), Seq(-2L, -7L),
+    Seq(-6L, -4L), Seq(5L, 3L), Seq(-1L, 9L), Seq(9L, 9L))
+  val lloydRound1: Seq[Seq[Long]] = Seq(Seq(0L, 7L), Seq(1L, -2L), Seq(-6L, -4L))
+  val lloydRound2: Seq[Seq[Long]] = Seq(Seq(4L, 7L), Seq(1L, -2L), Seq(-5L, -2L))
+
+  /** Prepared rows `(vec_id, q, n2)` over literal quantized vectors. */
+  def preparedRows(spark: SparkSession, vecs: Seq[Seq[Long]]): DataFrame = {
+    import spark.implicits._
+    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, v.map(x => x * x).sum) }
+      .toDF("vec_id", "q", "n2")
+  }
+}
 
 /** IVF ANN vs exact brute force on synthetic clustered vectors: recall@k
   * must be high when the data actually clusters (the IVF assumption).
@@ -21,31 +45,46 @@ class IvfSpec extends SparkSpec {
     rows.toDF("vec_id", "embedding")
   }
 
+  /** Build an index over `emb` in a fresh directory and probe it with
+    * the corpus rows `pred` selects.
+    */
+  private def buildAndProbe(emb: DataFrame, nCells: Int, iters: Int,
+                            pred: Column, k: Int, nprobe: Int): DataFrame = {
+    val dir = tmpDir("ivf-idx")
+    Ivf.buildIndex(emb, dir, nCells, iters)
+    Ivf.probeIndex(dir, Similarity.prepared(emb).filter(pred), k, nprobe)
+  }
+
+  test("one Lloyd round pins literal centroids: truncating means, smallest-cid ties, empty cells keep theirs") {
+    val p = IvfSpec.preparedRows(spark, IvfSpec.lloydCorpus)
+    def trained(iters: Int) = Ivf.train(p, k = 3, iters).collect()
+      .map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2))).sortBy(_._1).toSeq
+    def expected(cents: Seq[Seq[Long]]) = cents.zipWithIndex
+      .map { case (c, cid) => (cid, c, c.map(x => x * x).sum) }
+    assert(trained(1) == expected(IvfSpec.lloydRound1))
+    assert(trained(2) == expected(IvfSpec.lloydRound2))
+    // round 2's assignment, under the round-1 centroids: vector 3's tie
+    // goes to cell 0
+    val cells = Ivf.assign(p, Ivf.train(p, k = 3, iters = 1)).select("vec_id", "cid")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).sortBy(_._1).map(_._2).toSeq
+    assert(cells == Seq(2, 2, 2, 0, 0, 0))
+  }
+
   test("IVF top-k recall vs brute force on clustered data") {
     val emb = clustered().cache()
     val pred = col("vec_id") < 40
     val exact = Similarity.bruteForceTopK(emb, k = 5, queryPred = pred)
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Ivf.topK(emb, k = 5, nCells = 8, iters = 2, nprobe = 2,
-        queryPred = pred)
+    val ivf = buildAndProbe(emb, nCells = 8, iters = 2, pred, k = 5, nprobe = 2)
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (ivf & exact).size.toDouble / exact.size
     assert(recall >= 0.9, s"IVF recall $recall (${ivf.size} vs ${exact.size})")
   }
 
-  test("persisted index probe equals inline topK; freshness check catches drift") {
+  test("persisted index: freshness check catches drift; ensure keeps a current index") {
     val emb = clustered().cache()
     val dir = java.nio.file.Files.createTempDirectory("ivf-idx").toString
-    val pred = col("vec_id") < 40
     Ivf.buildIndex(emb, dir, nCells = 8, iters = 2)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "rank", "nid").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
-    // training is deterministic -> build-then-probe replays inline exactly
-    assert(rows(Ivf.probeIndex(dir, Similarity.prepared(emb).filter(pred),
-        k = 5, nprobe = 2)) ==
-      rows(Ivf.topK(emb, k = 5, nCells = 8, iters = 2, nprobe = 2,
-        queryPred = pred)))
     // current corpus + params -> current; changed params or corpus -> stale
     assert(graft.pipeline.AnnIndex.isCurrent(emb, dir, Seq(8L, 2L)))
     assert(!graft.pipeline.AnnIndex.isCurrent(emb, dir, Seq(8L, 3L)))
@@ -63,8 +102,8 @@ class IvfSpec extends SparkSpec {
 
   test("IVF ranking within probed cells matches exact dot order") {
     val emb = clustered()
-    val res = Ivf.topK(emb, k = 3, nCells = 8, iters = 1, nprobe = 8,
-      queryPred = col("vec_id") === 0)
+    val res = buildAndProbe(emb, nCells = 8, iters = 1,
+      col("vec_id") === 0, k = 3, nprobe = 8)
     // nprobe = nCells -> probes everything -> must equal brute force
     val exact = Similarity.bruteForceTopK(emb, k = 3,
       queryPred = col("vec_id") === 0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Pq, Similarity}
 import graft.queries.PipelineQueries
@@ -12,13 +13,43 @@ import graft.queries.PipelineQueries
 class PqSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
+  /** Build a flat-PQ index over `emb` in a fresh directory and probe it
+    * with the corpus rows `pred` selects.
+    */
+  private def buildAndProbe(emb: DataFrame, m: Int, ks: Int, iters: Int,
+                            pred: Column, k: Int): DataFrame = {
+    val dir = tmpDir("pq-idx")
+    Pq.buildIndex(emb, dir, m, ks, iters)
+    Pq.probeIndex(dir, Similarity.prepared(emb).filter(pred), k, m)
+  }
+
+  test("one Lloyd round pins literal codebooks per subspace (m = 2)") {
+    // IvfSpec's corpus in subspace 0 and its negation in subspace 1: the
+    // subspaces train independently, and truncation toward zero keeps
+    // the negated means exact negations ((-3) div 2 = -1 where a floor
+    // gives -2)
+    val p = IvfSpec.preparedRows(spark,
+      IvfSpec.lloydCorpus.map(v => v ++ v.map(-_)))
+    def trained(iters: Int) = Pq.train(p, m = 2, ks = 3, iters).collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Long](2), r.getLong(3)))
+      .sortBy(_._1).toSeq
+    def expected(cents: Seq[Seq[Long]]) =
+      Seq(cents, cents.map(_.map(-_))).zipWithIndex.flatMap { case (cs, sub) =>
+        cs.zipWithIndex.map { case (c, cid) =>
+          ((sub, cid), c, c.map(x => x * x).sum)
+        }
+      }
+    assert(trained(1) == expected(IvfSpec.lloydRound1))
+    assert(trained(2) == expected(IvfSpec.lloydRound2))
+  }
+
   test("PQ with ks >= corpus size degenerates to exact ranking") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") < 24)
     // ks = 32 >= 24 vectors: first-ks init makes every subvector its own
     // centroid, assignment is identity, ADC tables ARE the exact dots
-    val pq = Pq.topK(emb, k = 3, m = 32, ks = 32, iters = 2,
-      queryPred = col("vec_id") < 8)
+    val pq = buildAndProbe(emb, m = 32, ks = 32, iters = 2,
+        col("vec_id") < 8, k = 3)
       .select("qid", "rank", "nid").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val exact = Similarity.bruteForceTopK(emb, k = 3,
@@ -30,8 +61,8 @@ class PqSpec extends SparkSpec {
 
   test("PQ training and ranking are partitioning-independent") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    def run(parts: Int) = Pq.topK(emb.repartition(parts), k = 3,
-        m = 32, ks = 32, iters = 2, queryPred = col("vec_id") < 40)
+    def run(parts: Int) = buildAndProbe(emb.repartition(parts), m = 32,
+        ks = 32, iters = 2, col("vec_id") < 40, k = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getLong(3))).toSeq.sorted
     assert(run(2) == run(11))
@@ -57,8 +88,11 @@ class PqSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "rank", "nid").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(rows(Pq.topKIvf(emb, k = 3, m = 32, ks = 32, iters = 2,
-        nCells = 4, nprobe = 4, queryPred = col("vec_id") < 8)) ==
+    val dir = tmpDir("ivfpq-idx")
+    Pq.buildIndexIvf(emb, dir, m = 32, ks = 32, iters = 2, nCells = 4)
+    assert(rows(Pq.probeIndexIvf(dir,
+        Similarity.prepared(emb).filter(col("vec_id") < 8), k = 3, m = 32,
+        nprobe = 4)) ==
       rows(Similarity.bruteForceTopK(emb, k = 3,
         queryPred = col("vec_id") < 8)))
   }
@@ -93,26 +127,6 @@ class PqSpec extends SparkSpec {
       .map(t => (t._1, t._3))
     assert((ref & exact).size >= (adc & exact).size,
       s"refine ${(ref & exact).size} < adc ${(adc & exact).size}")
-  }
-
-  test("persisted flat-PQ and IVF-PQ probes equal their inline forms") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val pred = col("vec_id") < 40
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getLong(3))).toSeq.sorted
-    val flatDir = java.nio.file.Files.createTempDirectory("pq-idx").toString
-    Pq.buildIndex(emb, flatDir, m = 32, ks = 32, iters = 2)
-    assert(rows(Pq.probeIndex(flatDir,
-        Similarity.prepared(emb).filter(pred), k = 3, m = 32)) ==
-      rows(Pq.topK(emb, k = 3, m = 32, ks = 32, iters = 2,
-        queryPred = pred)))
-    val ivfDir = java.nio.file.Files.createTempDirectory("ivfpq-idx").toString
-    Pq.buildIndexIvf(emb, ivfDir, m = 32, ks = 32, iters = 2, nCells = 16)
-    assert(rows(Pq.probeIndexIvf(ivfDir,
-        Similarity.prepared(emb).filter(pred), k = 3, m = 32, nprobe = 4)) ==
-      rows(Pq.topKIvf(emb, k = 3, m = 32, ks = 32, iters = 2,
-        nCells = 16, nprobe = 4, queryPred = pred)))
   }
 
   test("appendIndexIvf encodes the batch under the stored quantizers") {

@@ -364,6 +364,37 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("sessionizeCustom: a straggler whose gap ended under the watermark closes at once") {
+    // Batch 0 reaches minute 40, so batch 1 evicts under watermark 35,
+    // but Spark drops late rows under batch 0's watermark, so batch 1's
+    // minute-12 events are admitted. Their sessions end (last + gap =
+    // 22) under the watermark: they close in batch 1 instead of setting
+    // an event-time timeout below the watermark, which Spark rejects,
+    // and they match session_window on the same feed (custom ends are
+    // the last event, session_window's last + gap). The tail is the
+    // entries' [.. + sentinel 1, sentinel 2]: sentinel 1 moves the
+    // watermark that closes the minute-40 session in the last batch.
+    val spark0 = spark
+    import spark0.implicits._
+    val gapMs = 10 * 60000L
+    val feed = Seq(Seq(ev(1, 1, 1), ev(1, 2, 5), ev(2, 3, 40)),
+      Seq(ev(1, 4, 12), ev(3, 5, 12), ev(-1, -1, 10000, "sentinel")),
+      Seq(ev(-1, -2, 20000, "sentinel")))
+    def sessions(t: DataFrame => DataFrame, endShift: Long): Set[(Long, Long, Long, Long)] =
+      graft.streaming.Replay.replay(spark, feed)(t)
+        .filter(col("user_id") >= 0).collect()
+        .map(r => (r.getAs[Long]("user_id"),
+          r.getAs[Timestamp]("s_start").getTime / 60000,
+          (r.getAs[Timestamp]("s_end").getTime + endShift) / 60000,
+          r.getAs[Long]("n_events"))).toSet
+    val custom = sessions(in => EventStreams.sessionizeCustom(in.as[Event],
+      gapMs, lateness = "5 minutes").toDF(), endShift = gapMs)
+    assert(custom == Set((1L, 1L, 22L, 3L), (2L, 40L, 50L, 1L), (3L, 12L, 22L, 1L)),
+      s"custom sessions: $custom")
+    assert(custom == sessions(in => EventStreams.sessionStats(in,
+      "10 minutes", "5 minutes"), endShift = 0L))
+  }
+
   // quality-passing text: >=5 tokens, sane avg token length, mostly letters
   private val goodA = "the quick brown fox jumps over the lazy dog today"
   private val goodB = "a fine morning for reading long books about spark"
